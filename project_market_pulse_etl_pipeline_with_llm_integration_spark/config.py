@@ -20,6 +20,11 @@ CATEGORIES_TO_KEEP: list[str] = ["WORLD NEWS", "POLITICS", "BUSINESS", "TECH", "
 # Arrow batch size fed to the enrichment mapInPandas UDF, not a loop bound.
 BATCH_SIZE: int = 100
 
+# Most LLM calls one enrichment task keeps in flight at once.  The calls
+# block on the network, so each task overlaps them on a thread pool of
+# this size instead of waiting for one reply at a time.
+LLM_MAX_IN_FLIGHT: int = 16
+
 # Raw news JSONL schema (News_Category_Dataset_v3.json rows; FIXTURES.md F1).
 RAW_NEWS_SCHEMA = T.StructType(
     [

@@ -21,19 +21,26 @@ Faithful semantics preserved:
   * one driver-side run timestamp stamped on every row — a literal, not
     per-executor ``current_timestamp()`` (``Main.py:259``)
 
-Scale notes: concurrent task rates ADD, so each of N tasks sleeps
-``N * rate_delay`` per row — the sum stays at the reference's
-single-thread ``1/rate_delay`` rows/s budget.  Transport is injectable
-(``set_transport``) so tests never touch the network.
+Scale notes: the calls block on the network, so each task overlaps
+the calls of one Arrow batch on a thread pool of ``LLM_MAX_IN_FLIGHT``
+threads (output keeps row order); call concurrency comes from in-flight
+requests, not from how many files the input happens to have.  The rate
+budget is unchanged: concurrent task rates ADD, so each of N tasks
+sleeps ``N * rate_delay`` per row after each batch, and the sum stays at
+the reference's single-thread ``1/rate_delay`` rows/s budget.  Transport
+is injectable (``set_transport``) so tests never touch the network.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +51,7 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.config import 
     BATCH_SIZE,
     CATEGORIES_TO_KEEP,
     ERROR_SENTINEL,
+    LLM_MAX_IN_FLIGHT,
     OFFLINE_TRIPLE,
 )
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.sample import exact_sample
@@ -54,9 +62,11 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.writer
 # Injectable transport: (prompt) -> raw JSON string from the model.
 # Tests install a deterministic fake; production lazily builds an OpenAI
 # client per worker process.  Kept module-level so each Python worker
-# initializes it at most once (reference's lazy global, Main.py:29-32).
+# initializes it at most once (reference's lazy global, Main.py:29-32);
+# the lock makes that hold when a task's calls overlap on threads.
 Transport = Callable[[str], str]
 _transport: Transport | None = None
+_client_lock = threading.Lock()
 
 
 def set_transport(fn: Transport | None) -> None:
@@ -77,9 +87,8 @@ def build_prompt(title: str, content: str) -> str:
     )
 
 
-def _default_transport(prompt: str) -> str:
-    """Production transport: one chat-completion (``Main.py:106-111``)."""
-    global _transport
+def _openai_transport() -> Transport:
+    """One chat-completion per call (``Main.py:106-111``) on a new client."""
     from openai import OpenAI  # lazy import mirrors Main.py:95
 
     client = OpenAI(api_key=os.environ.get("OPENAI_API_KEY", ""))
@@ -93,7 +102,17 @@ def _default_transport(prompt: str) -> str:
         )
         return resp.choices[0].message.content
 
-    _transport = call  # cache the bound client for subsequent rows
+    return call
+
+
+def _default_transport(prompt: str) -> str:
+    """Production transport: builds the worker's client on first use and
+    caches it as ``_transport`` for subsequent rows."""
+    global _transport
+    with _client_lock:
+        if _transport is None:
+            _transport = _openai_transport()
+        call = _transport
     return call(prompt)
 
 
@@ -171,24 +190,29 @@ def enrich(
     if disabled is None:
         disabled = _llm_disabled()
 
+    one = partial(enrich_one, transport=transport_fn, disabled=disabled)
+
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            triples = [
-                enrich_one(t, c, transport=transport_fn, disabled=disabled)
-                for t, c in zip(pdf["title"].tolist(), pdf["content"].tolist())
-            ]
-            if per_task_delay:
-                time.sleep(per_task_delay * len(pdf))
-            res = pdf.copy()
-            res["sentiment_llm"] = [x[0] for x in triples]
-            res["category_llm"] = [x[1] for x in triples]
-            res["market_impact_summary"] = [x[2] for x in triples]
-            yield res
+        # The calls block on the network: overlap up to LLM_MAX_IN_FLIGHT
+        # of them per task.  pool.map keeps row order.
+        with ThreadPoolExecutor(max_workers=LLM_MAX_IN_FLIGHT) as pool:
+            for pdf in batches:
+                triples = list(pool.map(one, pdf["title"].tolist(), pdf["content"].tolist()))
+                if per_task_delay:
+                    time.sleep(per_task_delay * len(pdf))
+                res = pdf.copy()
+                res["sentiment_llm"] = [x[0] for x in triples]
+                res["category_llm"] = [x[1] for x in triples]
+                res["market_impact_summary"] = [x[2] for x in triples]
+                yield res
 
     run_ts = run_timestamp or datetime.now()
     return df.mapInPandas(run_batches, schema=out_schema).withColumn(
         "etl_processing_time", F.lit(run_ts)
     )
+
+
+_ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def enrich_to_parquet(
@@ -203,12 +227,20 @@ def enrich_to_parquet(
     try:
         df = spark.read.parquet(input_path)
         df = exact_sample(df, sample_size, seed=42)
-        # Mirror the reference's micro-batch granularity at the Arrow layer.
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(BATCH_SIZE))
-        enriched = enrich(df, rate_delay=rate_delay)
-        return write_parquet_timestamped(
-            enriched, output_folder, "final_enriched_data", single_file=single_file
-        )
+        # Mirror the reference's micro-batch granularity at the Arrow layer
+        # for this stage's write only; later queries keep the session's value.
+        prev = spark.conf.get(_ARROW_BATCH_CONF, None)
+        spark.conf.set(_ARROW_BATCH_CONF, str(BATCH_SIZE))
+        try:
+            enriched = enrich(df, rate_delay=rate_delay)
+            return write_parquet_timestamped(
+                enriched, output_folder, "final_enriched_data", single_file=single_file
+            )
+        finally:
+            if prev is None:
+                spark.conf.unset(_ARROW_BATCH_CONF)
+            else:
+                spark.conf.set(_ARROW_BATCH_CONF, prev)
     except Exception as exc:
         print(f"Error in enrich stage: {exc}")
         return None

@@ -22,6 +22,7 @@ random-hyperplane LSH was chosen because it needs no training pass.
 
 from __future__ import annotations
 
+import logging
 from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -38,6 +39,8 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.guar
     guard_int64,
 )
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import cached_scan
+
+_log = logging.getLogger(__name__)
 
 
 def brute_force_topk(
@@ -1306,6 +1309,11 @@ def semantic_decontaminate(
         # kernel cannot reproduce pair-wise length agreement — fall
         # through to the relational plan, which scores those pairs
         # exactly (and is what the row-identity pin compares against).
+        # Logged, so relational timings are not read as the kernel's.
+        _log.warning(
+            "semantic_decontaminate: benchmark vectors have mixed lengths; "
+            "strategy 'blas' falls back to the relational plan"
+        )
 
     def _norm(c: Column) -> Column:
         return F.sqrt(

@@ -275,7 +275,13 @@ def _winnow_id_guard(where: str, id_col: str):
     lands in ONE partition and a partition-local seen-set detects
     every duplicate — the Arrow equivalent of the relational plan's
     windowed count assert, raising the same message.  Returns a
-    per-task closure: call it on each batch's id Series."""
+    per-task closure: call it on each batch's id Series.
+
+    The guard is only sound on input hash-partitioned by ``id_col``
+    (``repartition(F.col(id_col))`` right before the mapInPandas).
+    Without that colocation two copies of an id can sit in different
+    partitions, each seen-set sees one copy, and the duplicate passes
+    silently — keep the repartition fused with every caller."""
     msg = (
         f"{where}: id_col '{id_col}' must be non-null and unique "
         "— fingerprints are per-document; dedup or re-key the input"
@@ -413,8 +419,11 @@ def with_winnow_fingerprint(
       size gate needed): one mapInPandas pass computes each document's
       fingerprint set in Python (md5 via hashlib is the identical
       digest; see ``_py_winnow_fp_set`` for the step-by-step identity
-      argument); the uniqueness contract rides a broadcast 1-row
-      assert branch instead of the windowed count.
+      argument); the uniqueness contract is enforced in the kernel
+      itself: the input is hash-repartitioned by ``id_col`` so every
+      copy of an id lands in one partition, and a per-partition
+      seen-set (``_winnow_id_guard``) raises on the first repeat,
+      instead of the relational plan's windowed count.
     - ``"relational"``: explode -> window-frame min -> collect_set,
       NOT nested array lambdas: higher-order functions evaluate
       interpreted (outside whole-stage codegen) with no

@@ -13,7 +13,9 @@ coalescing makes over-provisioning cheap.
 
 from __future__ import annotations
 
+import atexit
 import os
+import tempfile
 import weakref
 import zipfile
 
@@ -32,17 +34,28 @@ _PKG_ZIP: str | None = None
 _PINNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers even when
     the driver process was launched from a different cwd (mapInPandas
     closures reference package functions by module path).  Zips the
-    package once per process and registers it via addPyFile."""
+    package once per process, into a file of its own so that concurrent
+    processes never rewrite each other's zip, and registers it via
+    addPyFile."""
     global _PKG_ZIP
     try:
         if _PKG_ZIP is None:
             pkg_dir = os.path.dirname(os.path.abspath(__file__))
             pkg_name = os.path.basename(pkg_dir)
-            zip_path = os.path.join("/tmp", f"{pkg_name}_shipped.zip")
+            fd, zip_path = tempfile.mkstemp(prefix=f"{pkg_name}_", suffix=".zip")
+            os.close(fd)
+            atexit.register(_remove_quietly, zip_path)
             with zipfile.ZipFile(zip_path, "w") as zf:
                 for root, _dirs, files in os.walk(pkg_dir):
                     for fn in files:

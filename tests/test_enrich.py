@@ -248,3 +248,115 @@ def test_enrich_with_cache_pays_only_for_new_content(spark):
     assert got[2]["market_impact_summary"] == "new"
     assert got[1]["sentiment_llm"] is not None
     assert cache2.count() == 2
+
+
+def _make_in_flight_transport(delay_s: float):
+    # Counts the calls in flight in the worker; each reply's summary is the
+    # most it has seen so far.  The lock is made on the worker's first call
+    # (locks do not pickle); dict.setdefault keeps exactly one.
+    state: dict = {}
+
+    def transport(prompt: str) -> str:
+        import json as _json
+        import threading as _threading
+        import time as _time
+
+        lock = state.setdefault("lock", _threading.Lock())
+        with lock:
+            state["now"] = state.get("now", 0) + 1
+            state["max"] = max(state.get("max", 0), state["now"])
+        _time.sleep(delay_s)
+        with lock:
+            state["now"] -= 1
+            seen = state["max"]
+        return _json.dumps(
+            {"sentiment": ["Positive", "Negative", "Neutral"][len(prompt) % 3],
+             "category": f"len {len(prompt)}", "summary": str(seen)}
+        )
+
+    return transport
+
+
+def test_enrich_overlaps_calls_within_one_task(spark):
+    """One task (coalesce(1)) keeps several LLM calls in flight at once,
+    and the output still carries each row's own answer in input order."""
+    rows = [(i, f"t-{i}", "c" * (i % 7)) for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, title string, content string").coalesce(1)
+    out = E.enrich(
+        df, rate_delay=0.0, transport=_make_in_flight_transport(0.02), disabled=False
+    ).collect()
+    assert [r.id for r in out] == list(range(40))
+    for r in out:
+        n = len(E.build_prompt(r.title, r.content))
+        assert (r.sentiment_llm, r.category_llm) == (
+            ["Positive", "Negative", "Neutral"][n % 3], f"len {n}"
+        )
+    assert max(int(r.market_impact_summary) for r in out) > 1
+
+
+def test_default_client_built_once_across_threads(monkeypatch):
+    """Concurrent first calls in one worker build ONE OpenAI client."""
+    import sys
+    import threading
+    import time
+    import types
+
+    built = []
+
+    class _Client:
+        def __init__(self, api_key: str):
+            time.sleep(0.02)  # a racing caller would build its own meanwhile
+            built.append(self)
+            self.chat = types.SimpleNamespace(
+                completions=types.SimpleNamespace(create=self._create)
+            )
+
+        def _create(self, **kwargs):
+            msg = types.SimpleNamespace(content=json.dumps(
+                {"sentiment": "Neutral", "category": "TECH", "summary": "s"}
+            ))
+            return types.SimpleNamespace(choices=[types.SimpleNamespace(message=msg)])
+
+    stub = types.ModuleType("openai")
+    stub.OpenAI = _Client
+    monkeypatch.setitem(sys.modules, "openai", stub)
+    E.set_transport(None)
+    barrier = threading.Barrier(16)
+    results = []
+
+    def call():
+        barrier.wait()
+        results.append(E.enrich_one("t", "c", disabled=False))
+
+    threads = [threading.Thread(target=call) for _ in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(built) == 1
+    assert results == [("Neutral", "TECH", "s")] * 16
+
+
+def test_enrich_to_parquet_restores_arrow_batch_conf(spark, news_jsonl, tmp_path, monkeypatch):
+    """The stage's Arrow batch size applies to its own write only."""
+    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.clean import (
+        extract_and_clean,
+    )
+
+    monkeypatch.setenv("DISABLE_LLM", "1")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "777")
+    try:
+        clean_path = extract_and_clean(spark, news_jsonl, str(tmp_path / "clean"))
+        out = E.enrich_to_parquet(spark, clean_path, str(tmp_path / "enr"), rate_delay=0.0)
+        assert out is not None
+        assert spark.conf.get(key) == "777"
+    finally:
+        spark.conf.set(key, before)

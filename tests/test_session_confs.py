@@ -4,6 +4,8 @@ required runtime confs, later calls are free no-ops, and a child session
 
 from __future__ import annotations
 
+import os
+
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.session import (
     _PINNED,
     ensure_engine_confs,
@@ -31,3 +33,28 @@ def test_child_session_pinned_independently(spark):
     ensure_engine_confs(child)
     assert child in _PINNED
     assert child.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_package_zip_private_to_each_process(monkeypatch):
+    """Each process zips the package into its own file: a second process
+    (simulated by clearing the per-process memo) gets a new path and
+    leaves the first zip, still registered elsewhere, untouched."""
+    import types
+    import zipfile
+
+    from project_market_pulse_etl_pipeline_with_llm_integration_spark import session
+
+    shipped: list[str] = []
+    fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
+    monkeypatch.setattr(session, "_PKG_ZIP", None)
+    session._ship_package(fake)
+    first = shipped[0]
+    stamp = os.stat(first).st_mtime_ns
+    monkeypatch.setattr(session, "_PKG_ZIP", None)
+    session._ship_package(fake)
+    assert len(shipped) == 2 and shipped[1] != first
+    assert os.stat(first).st_mtime_ns == stamp
+    for path in shipped:
+        with zipfile.ZipFile(path) as zf:
+            assert zf.testzip() is None
+            assert f"{session.__package__}/session.py" in zf.namelist()

@@ -1095,7 +1095,7 @@ def test_bitext_margin_mining_randomized_replay(spark, tmp_path):
         assert got == want, seed
 
 
-def test_semantic_decontaminate_strategy_identity(spark):
+def test_semantic_decontaminate_strategy_identity(spark, caplog):
     """The BLAS strategy (optimization r13) is pinned ROW-IDENTICAL to
     the relational reference plan — raw doubles included — on a corpus
     with planted near-duplicates, zero-norm vectors, NULL vectors, and
@@ -1153,12 +1153,14 @@ def test_semantic_decontaminate_strategy_identity(spark):
             corpus, bmixed, threshold=0.35, strategy="relational"
         ).collect()
     )
-    blas = sorted(
-        tuple(r) for r in semantic_decontaminate(
-            corpus, bmixed, threshold=0.35, strategy="blas"
-        ).collect()
-    )
+    with caplog.at_level("WARNING"):
+        blas = sorted(
+            tuple(r) for r in semantic_decontaminate(
+                corpus, bmixed, threshold=0.35, strategy="blas"
+            ).collect()
+        )
     assert rel == blas
+    assert "falls back to the relational plan" in caplog.text
     # auto resolves to one of the pinned strategies and stays identical
     auto = sorted(
         tuple(r)

@@ -7,7 +7,11 @@ inside every timed rep.  This tool times ``fn(spark, sf_dir)`` alone
 (no action) for every bench query, min-of-N, so construction cost can
 be compared against the full bench seconds.
 
-Usage: python tools/construct_profile.py [--reps 3] [name ...]
+Usage: python tools/construct_profile.py [--reps N | --reps=N] [name ...]
+
+``--reps`` is the only option; any other ``--`` flag exits with an
+error instead of being ignored, so wrapper scripts that pass extra
+flags must drop them.
 """
 
 from __future__ import annotations
@@ -26,6 +30,9 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.session import
 )
 
 
+USAGE = "usage: python tools/construct_profile.py [--reps N | --reps=N] [name ...]"
+
+
 def main() -> int:
     # Both '--reps=3' and '--reps 3' (ADVICE r13: the two-token form
     # crashed on split and leaked the value into the query-name list).
@@ -37,14 +44,14 @@ def main() -> int:
         a = argv[i]
         if a == "--reps":
             if i + 1 >= len(argv):
-                raise SystemExit("--reps needs a value")
+                raise SystemExit(f"--reps needs a value\n{USAGE}")
             reps = int(argv[i + 1])
             i += 2
             continue
         if a.startswith("--reps="):
             reps = int(a.split("=", 1)[1])
         elif a.startswith("--"):
-            raise SystemExit(f"unknown option {a!r}")
+            raise SystemExit(f"unknown option {a!r}\n{USAGE}")
         else:
             args.append(a)
         i += 1
