@@ -15,8 +15,13 @@ pandas pipeline:
 
 Catalyst pushes the null/IN filters into the JSON scan and prunes
 ``authors`` at the source — the reference materializes everything first
-(SURVEY §4).  The only shuffle in the plan is the range partitioning for
-the dense id.  Semantics deltas vs pandas (documented, SURVEY §7):
+(SURVEY §4).  The dense id's plan is picked by input size
+(``with_dense_id(method="auto")``): an input whose size estimate fits one
+scan split (``spark.sql.files.maxPartitionBytes``) is sorted in one global
+window behind a single exchange, as the reference sorts in memory; a
+larger one takes the scalable two-phase range/offset plan (the bound is
+an unmeasured assumption; see ``ids.py``).  Semantics deltas vs pandas
+(documented, SURVEY §7):
 tie-order among equal publish_dates is pinned with ``link``; timestamps
 are µs not ns.
 """
@@ -37,7 +42,7 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.writer
 )
 
 
-def clean_news(df_raw: DataFrame, id_method: str = "offsets") -> DataFrame:
+def clean_news(df_raw: DataFrame, id_method: str = "auto") -> DataFrame:
     """Pure transformation: raw news rows -> clean contract (FIXTURES.md F2)."""
     renamed = df_raw.withColumnsRenamed(
         {"headline": "title", "short_description": "content", "date": "publish_date"}

@@ -6,7 +6,7 @@ chronological order.  pandas' quicksort leaves ties underdetermined, so
 per SURVEY §7 risk #1 we pin an explicit tiebreaker to make the id
 deterministic.
 
-Two implementations, identical results given a total order:
+Three plans, identical results given a total order, and a size pick:
 
 * ``method="window"`` — ``row_number()`` over an un-partitioned window.
   Simple and exact, but Spark must funnel every row through ONE task for
@@ -32,6 +32,19 @@ Two implementations, identical results given a total order:
   Replaces the full-table checkpoint write with one extra aggregation
   scan; bucket balance is as good as the quantile sketch (skew in the
   leading key degrades parallelism, never correctness).
+
+* ``method="auto"`` — picks ``window`` when the optimized plan's
+  estimated ``sizeInBytes`` is at most ``spark.sql.files.maxPartitionBytes``
+  and ``offsets`` otherwise.  Below the bound the two-phase plan's fixed
+  cost (range sample, eager checkpoint, count collect; the clean stage
+  runs 7 jobs on it and 2 on the window) outweighs any parallelism it
+  buys.  The bound itself is an unmeasured assumption: it reuses Spark's
+  scan-split size, an estimate of file bytes (for compressed input, the
+  compressed size), not a limit on what the one sorting task holds in
+  memory.  Where the window stops winning is not known; on 4 cores it
+  still beat ``offsets`` at a ~150 MB estimate, above the default
+  128 MiB bound.  A plan of unknown size reports ``Long.MaxValue`` and
+  takes ``offsets``.
 """
 
 from __future__ import annotations
@@ -59,7 +72,14 @@ def with_dense_id(
     (pinned by test); they differ only in physical plan — see module
     docstring.  ``"boundaries"`` requires the leading order key to be
     castable to double (numeric/date/timestamp) and ascending order.
+    ``"auto"`` takes ``"window"`` when the plan's size estimate fits one
+    scan split (``spark.sql.files.maxPartitionBytes``), else ``"offsets"``.
     """
+    if method == "auto":
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        split = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        method = "window" if size <= split else "offsets"
+
     if method == "window":
         w = Window.orderBy(*order_by)
         return df.withColumn(id_col, F.row_number().over(w).cast("long"))

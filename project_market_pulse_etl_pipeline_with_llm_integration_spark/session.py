@@ -71,6 +71,18 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # already added, or a deployment where addPyFile is restricted
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` default: 48g, capped at half of physical
+    RAM so that the local-mode JVM (driver and executors in one heap)
+    leaves room for the Python workers and the OS on a smaller machine.
+
+    ``SC_PHYS_PAGES`` is the host's RAM: a container's cgroup memory limit
+    is not seen, so set ``SPARK_GRAFT_DRIVER_MEM`` in a memory-limited
+    container."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     """Set the runtime-settable SQL confs the engine's plans rely on.
 
@@ -177,7 +189,10 @@ def get_spark(
         # driver-side py4j/call-site-capture overhead off (see
         # ensure_engine_confs); identical plans and results
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -9,6 +9,7 @@ from pyspark.sql import types as T
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.config import CLEAN_COLUMNS
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.clean import (
     clean_news,
+    clean_news_observed,
     extract_and_clean,
 )
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.ids import with_dense_id
@@ -35,7 +36,50 @@ def test_clean_id_methods_agree(spark, news_jsonl):
     raw = read_news_jsonl(spark, news_jsonl)
     a = clean_news(raw, id_method="offsets").orderBy("id_news").collect()
     b = clean_news(raw, id_method="window").orderBy("id_news").collect()
-    assert a == b
+    c = clean_news(raw, id_method="auto").orderBy("id_news").collect()
+    assert a == b == c
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dense_id_auto_picks_by_scan_split(spark, news_jsonl):
+    """``auto`` sorts an input that fits one scan split in one global
+    window (no range partitioning, no offsets pass) and takes the
+    two-phase offsets plan once the split size is below the plan's size;
+    the ids agree either way."""
+    raw = read_news_jsonl(spark, news_jsonl)
+    keys = ["date", "link"]
+    small = with_dense_id(raw, keys, id_col="rid", method="auto")
+    plan = _plan(small)
+    assert "SinglePartition" in plan
+    assert "RangePartitioning" not in plan and "__mp_pid" not in plan
+
+    key = "spark.sql.files.maxPartitionBytes"
+    size = raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(size - 1))
+        large = with_dense_id(raw, keys, id_col="rid", method="auto")
+        assert "__mp_pid" in _plan(large)
+        ids_large = {r.link: r.rid for r in large.collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert {r.link: r.rid for r in small.collect()} == ids_large
+
+
+def test_extract_and_clean_job_count(spark, news_jsonl, tmp_path):
+    """A fixture-sized clean stage runs at most 2 Spark jobs: the window's
+    shuffle and the write (the offsets plan needs 7)."""
+    sc = spark.sparkContext
+    group = f"clean-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "extract_and_clean job count")
+    try:
+        assert extract_and_clean(spark, news_jsonl, str(tmp_path)) is not None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_dense_id_offsets_scalable(spark):
@@ -56,6 +100,16 @@ def test_extract_and_clean_writes_parquet(spark, news_jsonl, tmp_path):
 
 def test_clean_returns_none_on_bad_input(spark, tmp_path):
     assert extract_and_clean(spark, "/nonexistent/nope.jsonl", str(tmp_path)) is None
+
+
+def test_clean_observed_metrics_on_fixture(spark, news_jsonl):
+    """Observed funnel on the in-repo F1 fixture: 10 rows in, 5 kept
+    across the 5 kept categories, one action."""
+    out, obs = clean_news_observed(read_news_jsonl(spark, news_jsonl))
+    assert out.count() == 5
+    assert obs["in"].get["rows_in"] == 10
+    assert obs["kept"].get["rows_kept"] == 5
+    assert abs(obs["kept"].get["n_categories"] - 5) <= 1
 
 
 def test_clean_observed_metrics_match_reference_counts(spark):

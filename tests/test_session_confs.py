@@ -8,6 +8,7 @@ import os
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.session import (
     _PINNED,
+    _default_driver_memory,
     ensure_engine_confs,
 )
 
@@ -58,3 +59,13 @@ def test_package_zip_private_to_each_process(monkeypatch):
         with zipfile.ZipFile(path) as zf:
             assert zf.testzip() is None
             assert f"{session.__package__}/session.py" in zf.namelist()
+
+
+def test_default_driver_memory_half_of_ram_capped_at_48g(monkeypatch):
+    def fake_sysconf(pages: int):
+        return lambda name: {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": pages}[name]
+
+    monkeypatch.setattr(os, "sysconf", fake_sysconf(16 * 2**30 // 4096))
+    assert _default_driver_memory() == "8192m"
+    monkeypatch.setattr(os, "sysconf", fake_sysconf(512 * 2**30 // 4096))
+    assert _default_driver_memory() == "49152m"
