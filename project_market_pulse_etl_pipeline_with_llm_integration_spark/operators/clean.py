@@ -19,8 +19,9 @@ Catalyst pushes the null/IN filters into the JSON scan and prunes
 (``with_dense_id(method="auto")``): an input whose size estimate fits one
 scan split (``spark.sql.files.maxPartitionBytes``) is sorted in one global
 window behind a single exchange, as the reference sorts in memory; a
-larger one takes the scalable two-phase range/offset plan (the bound is
-an unmeasured assumption; see ``ids.py``).  Semantics deltas vs pandas
+larger one takes the scalable two-phase quantile-boundaries plan (the
+bound is a size-estimate limit, not a measured crossover; see
+``ids.py``).  Semantics deltas vs pandas
 (documented, SURVEY §7):
 tie-order among equal publish_dates is pinned with ``link``; timestamps
 are µs not ns.
@@ -42,8 +43,9 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.writer
 )
 
 
-def clean_news(df_raw: DataFrame, id_method: str = "auto") -> DataFrame:
-    """Pure transformation: raw news rows -> clean contract (FIXTURES.md F2)."""
+def _dated(df_raw: DataFrame) -> DataFrame:
+    """The five steps before the id: rename, drop null essentials, keep
+    the market categories, cast the date, drop null dates."""
     renamed = df_raw.withColumnsRenamed(
         {"headline": "title", "short_description": "content", "date": "publish_date"}
     )
@@ -51,12 +53,17 @@ def clean_news(df_raw: DataFrame, id_method: str = "auto") -> DataFrame:
     kept = essential.filter(F.col("category").isin(CATEGORIES_TO_KEEP))
     # try_to_timestamp == pd.to_datetime(errors="coerce"): invalid -> null.
     cast = kept.withColumn("publish_date", F.try_to_timestamp(F.col("publish_date")))
-    dated = cast.na.drop(subset=["publish_date"])
-    with_id = with_dense_id(dated, ["publish_date", "link"], id_col="id_news", method=id_method)
+    return cast.na.drop(subset=["publish_date"])
+
+
+def clean_news(df_raw: DataFrame) -> DataFrame:
+    """Pure transformation: raw news rows -> clean contract (FIXTURES.md F2)."""
+    dated = _dated(df_raw)
+    with_id = with_dense_id(dated, ["publish_date", "link"], id_col="id_news", method="auto")
     return with_id.select(*CLEAN_COLUMNS)
 
 
-def clean_news_observed(df_raw: DataFrame, id_method: str = "window"):
+def clean_news_observed(df_raw: DataFrame):
     """``clean_news`` instrumented with Spark's Observation API — the
     production telemetry pattern: pipeline metrics (rows in, rows
     kept, null-date drops) ride the SAME job as the data instead of
@@ -65,22 +72,17 @@ def clean_news_observed(df_raw: DataFrame, id_method: str = "window"):
     an extra count() pass re-scans the input; observe() metrics are
     aggregated by the existing tasks for free.
 
-    Defaults to the single-pass ``window`` id method: the two-pass
-    ``offsets`` method executes the observed subtree twice and the
-    metrics double-count (observed live: rows_in 2112 on a 1,056-row
-    input) — a general Observation rule: the observed plan must run
-    exactly once per action."""
+    Always takes the single-pass ``window`` id method: the multi-pass
+    ``boundaries`` method runs the observed subtree three times
+    (quantile, count, output) and the metrics would multiply — a general
+    Observation rule: the observed plan must run exactly once per
+    action."""
     from pyspark.sql import Observation
 
     obs_in = Observation("clean_in")
     obs_kept = Observation("clean_kept")
-    renamed = df_raw.withColumnsRenamed(
-        {"headline": "title", "short_description": "content", "date": "publish_date"}
-    ).observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-    essential = renamed.na.drop(subset=["title", "content", "category"])
-    kept = essential.filter(F.col("category").isin(CATEGORIES_TO_KEEP))
-    cast = kept.withColumn("publish_date", F.try_to_timestamp(F.col("publish_date")))
-    dated = cast.na.drop(subset=["publish_date"]).observe(
+    observed_in = df_raw.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
+    dated = _dated(observed_in).observe(
         obs_kept,
         F.count(F.lit(1)).alias("rows_kept"),
         # DISTINCT aggregates are disallowed in observed metrics
@@ -88,9 +90,7 @@ def clean_news_observed(df_raw: DataFrame, id_method: str = "window"):
         # cardinality and observe-legal
         F.approx_count_distinct("category").alias("n_categories"),
     )
-    with_id = with_dense_id(
-        dated, ["publish_date", "link"], id_col="id_news", method=id_method
-    )
+    with_id = with_dense_id(dated, ["publish_date", "link"], id_col="id_news", method="window")
     return with_id.select(*CLEAN_COLUMNS), {"in": obs_in, "kept": obs_kept}
 
 

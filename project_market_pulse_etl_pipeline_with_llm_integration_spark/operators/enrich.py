@@ -43,7 +43,7 @@ from datetime import datetime
 from functools import partial
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -246,6 +246,20 @@ def enrich_to_parquet(
         return None
 
 
+def _payload_digest() -> Column:
+    """SHA-256 hex of ``title \\x01 content`` with NULL read as '' — the
+    key of the dedup gateway and of persisted enrichment caches, so its
+    value must never change."""
+    return F.sha2(
+        F.concat_ws(
+            "\x01",
+            F.coalesce(F.col("title"), F.lit("")),
+            F.coalesce(F.col("content"), F.lit("")),
+        ),
+        256,
+    )
+
+
 def dedup_payloads(df: DataFrame) -> DataFrame:
     """Distinct (title, content) payloads keyed by a SHA-256 digest —
     the unit of LLM work for the dedup gateway.
@@ -268,9 +282,7 @@ def dedup_payloads(df: DataFrame) -> DataFrame:
         )
         .distinct()
         .select(
-            F.sha2(
-                F.concat_ws("\x01", F.col("title"), F.col("content")), 256
-            ).alias("_payload_digest"),
+            _payload_digest().alias("_payload_digest"),
             "title", "content",
         )
     )
@@ -313,16 +325,7 @@ def enrich_deduped(
     gateway worth it).  At 100 TB the alternative full-row enrichment
     is not a join problem at all but a budget one: calls scale with
     DISTINCT payloads, not rows."""
-    keyed = df.withColumn(
-        "_payload_digest",
-        F.sha2(
-            F.concat_ws(
-                "\x01",
-                F.coalesce(F.col("title"), F.lit("")),
-                F.coalesce(F.col("content"), F.lit("")),
-            ), 256,
-        ),
-    )
+    keyed = df.withColumn("_payload_digest", _payload_digest())
     uniq = dedup_payloads(df)
     enriched = enrich(
         uniq,
@@ -381,16 +384,7 @@ def enrich_with_cache(
             "category_llm string, market_impact_summary string"
         )
     cache = cache.select("_payload_digest", *triple_cols)
-    keyed = df.withColumn(
-        "_payload_digest",
-        F.sha2(
-            F.concat_ws(
-                "\x01",
-                F.coalesce(F.col("title"), F.lit("")),
-                F.coalesce(F.col("content"), F.lit("")),
-            ), 256,
-        ),
-    )
+    keyed = df.withColumn("_payload_digest", _payload_digest())
     uniq = dedup_payloads(df).localCheckpoint(eager=False)  # hits + misses
     hits = uniq.select("_payload_digest").join(cache, "_payload_digest")
     misses = uniq.join(

@@ -4,10 +4,12 @@ from __future__ import annotations
 
 import glob
 
+import pytest
 from pyspark.sql import types as T
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.config import CLEAN_COLUMNS
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.clean import (
+    _dated,
     clean_news,
     clean_news_observed,
     extract_and_clean,
@@ -34,10 +36,16 @@ def test_clean_semantics(spark, news_jsonl):
 
 def test_clean_id_methods_agree(spark, news_jsonl):
     raw = read_news_jsonl(spark, news_jsonl)
-    a = clean_news(raw, id_method="offsets").orderBy("id_news").collect()
-    b = clean_news(raw, id_method="window").orderBy("id_news").collect()
-    c = clean_news(raw, id_method="auto").orderBy("id_news").collect()
-    assert a == b == c
+    got = clean_news(raw).orderBy("id_news").collect()
+    dated = _dated(raw)
+    for m in ("window", "boundaries"):
+        want = (
+            with_dense_id(dated, ["publish_date", "link"], id_col="id_news", method=m)
+            .select(*CLEAN_COLUMNS)
+            .orderBy("id_news")
+            .collect()
+        )
+        assert got == want, m
 
 
 def _plan(df) -> str:
@@ -46,23 +54,25 @@ def _plan(df) -> str:
 
 def test_dense_id_auto_picks_by_scan_split(spark, news_jsonl):
     """``auto`` sorts an input that fits one scan split in one global
-    window (no range partitioning, no offsets pass) and takes the
-    two-phase offsets plan once the split size is below the plan's size;
-    the ids agree either way."""
-    raw = read_news_jsonl(spark, news_jsonl)
-    keys = ["date", "link"]
-    small = with_dense_id(raw, keys, id_col="rid", method="auto")
+    window (no range partitioning, no bucket pass) and takes the
+    two-phase boundaries plan once the split size is below the plan's
+    size; the ids agree either way."""
+    dated = _dated(read_news_jsonl(spark, news_jsonl))
+    keys = ["publish_date", "link"]
+    small = with_dense_id(dated, keys, id_col="rid", method="auto")
     plan = _plan(small)
     assert "SinglePartition" in plan
-    assert "RangePartitioning" not in plan and "__mp_pid" not in plan
+    assert "RangePartitioning" not in plan and "__mp_bkt" not in plan
 
     key = "spark.sql.files.maxPartitionBytes"
-    size = raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    size = dated._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, str(size - 1))
-        large = with_dense_id(raw, keys, id_col="rid", method="auto")
-        assert "__mp_pid" in _plan(large)
+        large = with_dense_id(dated, keys, id_col="rid", method="auto")
+        plan = _plan(large)
+        assert "__mp_bkt" in plan
+        assert "RangePartitioning" not in plan and "ExistingRDD" not in plan
         ids_large = {r.link: r.rid for r in large.collect()}
     finally:
         spark.conf.set(key, old)
@@ -71,7 +81,8 @@ def test_dense_id_auto_picks_by_scan_split(spark, news_jsonl):
 
 def test_extract_and_clean_job_count(spark, news_jsonl, tmp_path):
     """A fixture-sized clean stage runs at most 2 Spark jobs: the window's
-    shuffle and the write (the offsets plan needs 7)."""
+    shuffle and the write (the two-phase plans need more: a quantile and
+    a count pass before the output)."""
     sc = spark.sparkContext
     group = f"clean-jobs-{tmp_path.name}"
     sc.setJobGroup(group, "extract_and_clean job count")
@@ -82,11 +93,25 @@ def test_extract_and_clean_job_count(spark, news_jsonl, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
-def test_dense_id_offsets_scalable(spark):
+def test_dense_id_boundaries_scalable(spark):
     df = spark.range(0, 10_000).withColumnRenamed("id", "k")
-    out = with_dense_id(df, ["k"], id_col="rid", method="offsets", num_partitions=16)
+    out = with_dense_id(df, ["k"], id_col="rid", method="boundaries", num_partitions=16)
     got = out.orderBy("k").select("rid").collect()
     assert [r.rid for r in got] == list(range(1, 10_001))
+
+
+def test_dense_id_boundaries_rejects_string_key(spark):
+    """A string leading key has no order-preserving double cast: it would
+    leave no quantile bounds and put every row in one bucket, so
+    ``boundaries`` refuses it by type."""
+    df = spark.range(0, 100).selectExpr("cast(id as string) as s", "id")
+    with pytest.raises(ValueError, match="string"):
+        with_dense_id(df, ["s", "id"], id_col="rid", method="boundaries")
+
+
+def test_dense_id_offsets_method_is_gone(spark):
+    with pytest.raises(ValueError, match="unknown dense-id method"):
+        with_dense_id(spark.range(0, 10), ["id"], id_col="rid", method="offsets")
 
 
 def test_extract_and_clean_writes_parquet(spark, news_jsonl, tmp_path):

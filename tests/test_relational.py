@@ -226,10 +226,9 @@ def test_tpch_q21_matches_pandas_recompute(spark):
 
 
 def test_dense_id_methods_identical(spark):
-    """All three physical plans for dense ids (global window, pinned
-    range-repartition offsets, driver-sampled boundary buckets) and the
-    size pick between the first two must produce the SAME id for every
-    row."""
+    """Both physical plans for dense ids (global window, driver-sampled
+    boundary buckets) and the size pick between them must produce the
+    SAME id for every row."""
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.ids import with_dense_id
 
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
@@ -239,9 +238,9 @@ def test_dense_id_methods_identical(spark):
             r.o_orderkey: r.seq
             for r in with_dense_id(orders, keys, id_col="seq", method=m).collect()
         }
-        for m in ("window", "offsets", "boundaries", "auto")
+        for m in ("window", "boundaries", "auto")
     }
-    assert by_m["window"] == by_m["offsets"] == by_m["boundaries"] == by_m["auto"]
+    assert by_m["window"] == by_m["boundaries"] == by_m["auto"]
 
 
 def test_round3_tpch_plans(spark):
