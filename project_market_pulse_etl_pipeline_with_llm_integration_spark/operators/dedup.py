@@ -45,37 +45,20 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.reader
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import cached_scan
 
 # ---------------------------------------------------------------------------
-# Degenerate-blocking guards (shared by the near-dup families)
+# Degenerate-blocking guard (shared by the near-dup families)
 # ---------------------------------------------------------------------------
-
-def _guard_precheck(base: DataFrame, keys: list[str], cap: int, op: str,
-                    what: str, advice: str) -> None:
-    """Self-measuring guard: one max-group-count job BEFORE the blocked
-    self-join runs, so a degenerate corpus fails fast instead of going
-    quadratic.  Costs one extra pass over ``base`` (which the callers
-    pin with a lazy localCheckpoint, so the pass doubles as checkpoint
-    materialization, not a wasted scan)."""
-    worst = (
-        base.groupBy(*keys).count().agg(F.max("count").alias("mx")).collect()[0]["mx"]
-    )
-    if worst and worst > cap:
-        raise RuntimeError(
-            f"{op}: largest {what} holds {worst} docs (> cap {cap}) — {advice}"
-        )
-
 
 def _guard_inplan(side: DataFrame, keys: list[str], cap: int, op: str,
                   what: str, advice: str) -> DataFrame:
-    """Zero-extra-job guard: a per-block count window + ``assert_true``
-    folded into one join side of the main query.  The window's hash
-    partitioning on the block keys is the same exchange the equi-join
-    needs, so the added physical cost is one sort — no second pass, no
-    separate job.  Trade-off vs ``_guard_precheck``: the violation
-    surfaces DURING the job (each task asserts before emitting its
-    block's rows, so the quadratic join output is never materialized),
-    wrapped in Spark's task-failure error rather than a clean driver
-    raise.  This is the default-query-path mode (VERDICT r5 item 3);
-    precheck remains for callers that want the pre-join raise."""
+    """The near-dup family's degenerate-blocking cap: a per-block count
+    window + ``assert_true`` folded into one join side of the main
+    query.  The window's hash partitioning on the block keys is the
+    same exchange the equi-join needs, so the added physical cost is
+    one sort — no second pass, no separate job, and building the query
+    runs nothing.  A violation fails the job (each task asserts before
+    emitting its block's rows, so the quadratic join output is never
+    materialized) with ``pyspark.errors.SparkRuntimeException``
+    carrying ``<op>: largest <what> holds N docs (> cap C) — <advice>``."""
     cnt = F.count("*").over(Window.partitionBy(*keys))
     msg = F.format_string(
         f"{op}: largest {what} holds %s docs (> cap {cap}) — {advice}", cnt
@@ -84,17 +67,6 @@ def _guard_inplan(side: DataFrame, keys: list[str], cap: int, op: str,
     # window exprs are illegal in WHERE: project the assert first, then
     # filter on the projected column (Filter stays above the Window)
     return side.withColumn("_cap_ok", ok).filter("_cap_ok").drop("_cap_ok")
-
-
-def _guard_hint(hint: int, cap: int, op: str, what: str, advice: str) -> None:
-    """Stats-hint guard: the caller already knows the largest block size
-    (catalog statistics, a prior profiling pass, or corpus construction
-    invariants) — validate arithmetically, run nothing."""
-    if hint > cap:
-        raise RuntimeError(
-            f"{op}: largest {what} holds {hint} docs (> cap {cap}, via "
-            f"stats hint) — {advice}"
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -251,8 +223,6 @@ def jaccard_pairs(
     num_partitions: int | None = None,
     max_block_size: int | None = None,
     strategy: str = "blocked",
-    largest_block_hint: int | None = None,
-    guard_mode: str = "precheck",
 ) -> DataFrame:
     """All pairs (a<b) with token-shingle Jaccard >= threshold, joined
     within blocks.
@@ -272,8 +242,9 @@ def jaccard_pairs(
 
     ``max_block_size`` guards against degenerate blocking (e.g. a
     length-uniform corpus collapsing into one bucket, which silently
-    turns the "blocked" join into all-pairs): when set, raises if any
-    block exceeds the cap.
+    turns the "blocked" join into all-pairs): when set, the a-side of
+    either strategy's join carries ``_guard_inplan``, so a block over
+    the cap fails the job before the join output materializes.
 
     ``num_partitions`` spreads the CPU-bound shingle/intersect work when
     the input's scan partitioning is coarser than the core count (small
@@ -355,32 +326,22 @@ def jaccard_pairs(
     # so slowly).  Same pattern the indexed strategy and minhash use; on
     # a cluster this is a bounded (id, hashes, band) spill, never bodies.
     base = base.localCheckpoint(eager=False)
-    _advice = ("blocking degenerated toward all-pairs; supply a sharper "
-               "block_col or use minhash_candidate_pairs()")
-    guard_inplan = False
+    # both strategies take their a-side from ``guarded``
+    guarded = base
     if max_block_size is not None:
-        if largest_block_hint is not None:
-            _guard_hint(largest_block_hint, max_block_size, "jaccard_pairs",
-                        "block", _advice)
-        elif guard_mode == "inplan" and strategy == "blocked":
-            guard_inplan = True
-        else:
-            # precheck (also the fallback for indexed-strategy inplan:
-            # the indexed path consumes base before any one-side filter
-            # point exists)
-            _guard_precheck(base, ["blk"], max_block_size, "jaccard_pairs",
-                            "block", _advice)
+        guarded = _guard_inplan(
+            base, ["blk"], max_block_size, "jaccard_pairs", "block",
+            "blocking degenerated toward all-pairs; supply a sharper "
+            "block_col or use minhash_candidate_pairs()",
+        )
     if strategy == "indexed":
-        return _jaccard_pairs_indexed(base, threshold)
+        return _jaccard_pairs_indexed(base, guarded, threshold)
     if strategy != "blocked":
         raise ValueError(f"jaccard_pairs: unknown strategy {strategy!r}")
-    a = base.select(
+    a = guarded.select(
         F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
         F.col("blk").alias("blk"), F.col("home").alias("home_a"),
     )
-    if guard_inplan:
-        a = _guard_inplan(a, ["blk"], max_block_size, "jaccard_pairs",
-                          "block", _advice)
     b = base.select(
         F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
         F.col("blk").alias("blk"), F.col("home").alias("home_b"),
@@ -418,22 +379,28 @@ def jaccard_pairs(
     )
 
 
-def _jaccard_pairs_indexed(base: DataFrame, threshold: float) -> DataFrame:
+def _jaccard_pairs_indexed(
+    base: DataFrame, guarded: DataFrame, threshold: float
+) -> DataFrame:
     """The "indexed" strategy body: skinny prefix-hash equi-join for the
     huge-block regime (see jaccard_pairs docstring).  ``base`` carries
     (id, sorted sh, blk, home) with bucket duplication already applied
-    and the shingle pass already checkpoint-shared by the caller."""
-    sets = base
+    and the shingle pass already checkpoint-shared by the caller;
+    ``guarded`` is ``base`` with the caller's block cap (or ``base``
+    itself), and feeds the join's a-side."""
     sz = F.size("sh")
-    pref = sets.select(
-        "id", "blk", "home", sz.alias("sz"),
-        F.explode(F.slice("sh", 1, _prefix_len(sz, threshold))).alias("ptok"),
-    )
-    a = pref.select(
+
+    def prefixes(frame: DataFrame) -> DataFrame:
+        return frame.select(
+            "id", "blk", "home", sz.alias("sz"),
+            F.explode(F.slice("sh", 1, _prefix_len(sz, threshold))).alias("ptok"),
+        )
+
+    a = prefixes(guarded).select(
         F.col("id").alias("id_a"), F.col("home").alias("home_a"),
         F.col("sz").alias("sz_a"), "ptok", "blk",
     )
-    b = pref.select(
+    b = prefixes(base).select(
         F.col("id").alias("id_b"), F.col("home").alias("home_b"),
         F.col("sz").alias("sz_b"), "ptok", "blk",
     )
@@ -452,7 +419,7 @@ def _jaccard_pairs_indexed(base: DataFrame, threshold: float) -> DataFrame:
     # one row per doc for the attach (default blocking emitted each doc
     # into two buckets; keep the home emission — cheaper than a
     # dropDuplicates shuffle of the fat arrays)
-    docs = sets.filter(F.col("blk") == F.col("home"))
+    docs = base.filter(F.col("blk") == F.col("home"))
     va = docs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     vb = docs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1098,8 +1065,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_distance: int = 3,
     max_bucket_size: int | None = None,
-    largest_bucket_hint: int | None = None,
-    guard_mode: str = "precheck",
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_distance.
     Blocking: 4 x 16-bit chunks — any pair within distance <= 3 shares at
@@ -1109,25 +1074,19 @@ def simhash_pairs(
     ``max_bucket_size`` mirrors ``jaccard_pairs.max_block_size``: a
     degenerate corpus (e.g. many empty/near-empty docs all hashing to
     simhash 0) collapses a chunk bucket and silently turns the blocked
-    join quadratic — when set, raises if any (chunk_idx, chunk_val)
-    bucket exceeds the cap.  The signature pass is pinned with a lazy
-    localCheckpoint when the guard runs so the mapInPandas doesn't
-    execute twice."""
+    join quadratic — when set, the a-side carries ``_guard_inplan``, so
+    a (chunk_idx, chunk_val) bucket over the cap fails the job.  The
+    signature pass is pinned with a lazy localCheckpoint when the cap
+    is set so the mapInPandas doesn't execute twice."""
     _advice = ("chunk blocking degenerated toward all-pairs (uniform/empty "
                "texts?); dedup exact-empty docs first or raise "
                "max_distance-aware bucketing")
     sigs = simhash_signatures(df, text_col, id_col).select(
         F.col(id_col).alias("id"), "simhash"
     )
-    precheck = (
-        max_bucket_size is not None
-        and largest_bucket_hint is None
-        and guard_mode != "inplan"
-    )
     if max_bucket_size is not None:
-        # lazy pin: with precheck the guard job doubles as checkpoint
-        # materialization; with inplan/hint it stops the mapInPandas
-        # signature pass running once per join side.
+        # lazy pin: stops the mapInPandas signature pass running once
+        # per join side.
         sigs = sigs.localCheckpoint(eager=False)
     chunks = sigs.select(
         "id",
@@ -1146,14 +1105,8 @@ def simhash_pairs(
             )
         ).alias("c"),
     ).select("id", "simhash", "c.chunk_idx", "c.chunk_val")
-    if max_bucket_size is not None and largest_bucket_hint is not None:
-        _guard_hint(largest_bucket_hint, max_bucket_size, "simhash_pairs",
-                    "chunk bucket", _advice)
-    elif precheck:
-        _guard_precheck(chunks, ["chunk_idx", "chunk_val"], max_bucket_size,
-                        "simhash_pairs", "chunk bucket", _advice)
     a = chunks.select(F.col("id").alias("id_a"), F.col("simhash").alias("sig_a"), "chunk_idx", "chunk_val")
-    if max_bucket_size is not None and largest_bucket_hint is None and guard_mode == "inplan":
+    if max_bucket_size is not None:
         a = _guard_inplan(a, ["chunk_idx", "chunk_val"], max_bucket_size,
                           "simhash_pairs", "chunk bucket", _advice)
     b = chunks.select(F.col("id").alias("id_b"), F.col("simhash").alias("sig_b"), "chunk_idx", "chunk_val")
@@ -1302,8 +1255,6 @@ def editdistance_pairs(
     block_chars: int = 32,
     max_dist: int = 12,
     max_block_size: int | None = None,
-    largest_block_hint: int | None = None,
-    guard_mode: str = "precheck",
 ) -> DataFrame:
     """All pairs (a<b) in the same block whose ``prefix_chars``-char
     prefixes are within Levenshtein distance ``max_dist`` — the
@@ -1342,15 +1293,8 @@ def editdistance_pairs(
     ).localCheckpoint(eager=False)
     _advice = ("blocking degenerated toward all-pairs; narrow block_chars or "
                "add a second content key (e.g. a simhash chunk)")
-    if max_block_size is not None and largest_block_hint is not None:
-        _guard_hint(largest_block_hint, max_block_size, "editdistance_pairs",
-                    "(band, first-token) block", _advice)
-    elif max_block_size is not None and guard_mode != "inplan":
-        _guard_precheck(base, ["blk", "tok"], max_block_size,
-                        "editdistance_pairs", "(band, first-token) block",
-                        _advice)
     a = base.select(F.col("id").alias("id_a"), F.col("pre").alias("pre_a"), "blk", "tok")
-    if max_block_size is not None and largest_block_hint is None and guard_mode == "inplan":
+    if max_block_size is not None:
         a = _guard_inplan(a, ["blk", "tok"], max_block_size,
                           "editdistance_pairs", "(band, first-token) block",
                           _advice)
@@ -1374,9 +1318,9 @@ def q_dedup_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-dup pairs over documents (48-char prefixes,
     32-char length bands × first-token blocking, distance <= 12)."""
     docs = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    # inplan guard: the degenerate-blocking cap still raises loudly but
-    # rides the main job's exchange instead of costing a pre-scan job
-    return editdistance_pairs(docs, max_block_size=20_000, guard_mode="inplan")
+    # the degenerate-blocking cap fails the job loudly, riding the main
+    # join's exchange
+    return editdistance_pairs(docs, max_block_size=20_000)
 
 
 # ---------------------------------------------------------------------------
@@ -1391,7 +1335,6 @@ def winnow_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_fp_df: int | None = None,
-    guard_mode: str = "precheck",
     num_partitions: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
@@ -1409,11 +1352,11 @@ def winnow_pairs(
     (``text.winnow_fp_rows``), per-doc distinct, one equi self-join on
     the fingerprint hash (posting-list join, no cross product), count
     per pair, filter.  ``max_fp_df`` is the hot-posting guard (a
-    fingerprint appearing in k docs contributes k^2 candidate pairs):
-    precheck / inplan / stats-hint modes per the family convention.
-    The cap is ENFORCEMENT-ONLY, not a filter — when a posting list
-    exceeds it this side RAISES rather than silently dropping the
-    fingerprint, so the cross-engine output contract (and the DuckDB
+    fingerprint appearing in k docs contributes k^2 candidate pairs),
+    folded into the join's a-side by ``_guard_inplan`` like the rest of
+    the family.  The cap is ENFORCEMENT-ONLY, not a filter — when a
+    posting list exceeds it the job FAILS rather than silently dropping
+    the fingerprint, so the cross-engine output contract (and the DuckDB
     oracle, which applies no cap) is defined only on corpora where the
     cap is unviolated.  Blank documents are excluded: every blank doc
     selects the identical sentinel fingerprint, which would weld all
@@ -1454,16 +1397,10 @@ def winnow_pairs(
         "boilerplate windows; raise w, pre-strip boilerplate, or cap "
         "with max_fp_df as part of the contract"
     )
+    a_side = fps
     if max_fp_df is not None:
-        if guard_mode == "inplan":
-            a_side = _guard_inplan(fps, ["_fp"], max_fp_df, "winnow_pairs",
-                                   "fingerprint posting", _advice)
-        else:
-            _guard_precheck(fps, ["_fp"], max_fp_df, "winnow_pairs",
-                            "fingerprint posting", _advice)
-            a_side = fps
-    else:
-        a_side = fps
+        a_side = _guard_inplan(fps, ["_fp"], max_fp_df, "winnow_pairs",
+                               "fingerprint posting", _advice)
     a = a_side.select(F.col("_wid").alias("id_a"), "_fp")
     b = fps.select(F.col("_wid").alias("id_b"), "_fp")
     return (
@@ -1487,7 +1424,7 @@ def q_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         cached_scan(spark, f"{sf_dir}/documents.parquet"),
         spark.sparkContext.defaultParallelism,
     )
-    return winnow_pairs(docs, min_shared=2, max_fp_df=10_000, guard_mode="inplan")
+    return winnow_pairs(docs, min_shared=2, max_fp_df=10_000)
 
 
 # ---------------------------------------------------------------------------

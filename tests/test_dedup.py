@@ -3,6 +3,8 @@ paths against the exact pairwise baseline on real testdata."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators import dedup
@@ -161,10 +163,8 @@ def test_jaccard_boundary_straddling_lengths_meet(spark):
 def test_jaccard_max_block_size_guard(spark):
     """A length-uniform corpus collapses into one bucket; the guard must
     refuse instead of silently running all-pairs."""
-    import pytest
-
     df = _docs(spark, [f"a b c d e unique{i}" for i in range(50)])
-    with pytest.raises(RuntimeError, match="block"):
+    with pytest.raises(SparkRuntimeException, match="block"):
         dedup.jaccard_pairs(df, max_block_size=20).collect()
 
 
@@ -223,12 +223,10 @@ def test_simhash_hot_bucket_guard(spark):
     """A degenerate corpus (identical texts -> identical simhash -> one
     chunk bucket holds everything) must raise loudly instead of silently
     going quadratic."""
-    import pytest
-
     df = spark.createDataFrame(
         [(i, "same words every time") for i in range(40)], "doc_id long, text string"
     )
-    with pytest.raises(RuntimeError, match="chunk bucket"):
+    with pytest.raises(SparkRuntimeException, match="chunk bucket"):
         dedup.simhash_pairs(df, max_bucket_size=20).collect()
     # under the cap: runs fine on a diverse corpus
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(50)
@@ -278,62 +276,84 @@ def test_editdistance_finds_planted_typos(spark):
 
 
 def test_editdistance_block_guard(spark):
-    import pytest
-
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.dedup import editdistance_pairs
 
     df = spark.createDataFrame(
         [(i, "same length text padded here!") for i in range(50)], ["doc_id", "text"]
     )
-    with pytest.raises(RuntimeError, match="first-token"):
+    with pytest.raises(SparkRuntimeException, match="first-token"):
         editdistance_pairs(df, max_block_size=10).collect()
 
 
-def test_guard_modes_inplan_and_hint(spark):
-    """The three guard modes are one contract, three costs: precheck
-    (extra job, raises pre-join), inplan (zero extra jobs, the cap
-    assertion rides the join-side exchange and fails the job), hint
-    (no measurement at all — validated arithmetically from caller
-    stats).  All three must refuse the same degenerate corpus, and
-    inplan/hint must not change the pairs on a healthy one."""
-    import pytest
+# One arm per near-dup operator (and jaccard strategy): the operator
+# with a cap, the cap's message, a corpus that collapses into one block,
+# and the cap that corpus overflows.
+_CAP_ARMS = {
+    "jaccard_blocked": (
+        lambda df, cap: dedup.jaccard_pairs(df, max_block_size=cap),
+        r"jaccard_pairs: largest block holds \d+ docs \(> cap 20\)",
+        [f"a b c d e unique{i}" for i in range(50)], 20,
+    ),
+    "jaccard_indexed": (
+        lambda df, cap: dedup.jaccard_pairs(df, max_block_size=cap, strategy="indexed"),
+        r"jaccard_pairs: largest block holds \d+ docs \(> cap 20\)",
+        [f"a b c d e unique{i}" for i in range(50)], 20,
+    ),
+    "simhash": (
+        lambda df, cap: dedup.simhash_pairs(df, max_bucket_size=cap),
+        r"simhash_pairs: largest chunk bucket holds \d+ docs \(> cap 20\)",
+        ["same words every time"] * 40, 20,
+    ),
+    "editdistance": (
+        lambda df, cap: dedup.editdistance_pairs(df, max_block_size=cap),
+        r"editdistance_pairs: largest \(band, first-token\) block holds \d+ "
+        r"docs \(> cap 10\)",
+        ["same length text padded here!"] * 50, 10,
+    ),
+    "winnow": (
+        lambda df, cap: dedup.winnow_pairs(df, max_fp_df=cap),
+        r"winnow_pairs: largest fingerprint posting holds \d+ docs \(> cap 10\)",
+        ["same exact words every single time again"] * 40, 10,
+    ),
+}
 
-    from py4j.protocol import Py4JJavaError
 
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.dedup import editdistance_pairs
+def _build_jobs(spark, group, build) -> int:
+    """Spark jobs started while ``build()`` constructs a query."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "near-dup query construction")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    bad = spark.createDataFrame(
-        [(i, "same length text padded here!") for i in range(50)], ["doc_id", "text"]
-    )
-    # inplan: assert_true fires inside the job -> Spark wraps the raise
-    with pytest.raises(Exception, match="first-token") as ei:
-        editdistance_pairs(bad, max_block_size=10, guard_mode="inplan").collect()
-    assert isinstance(ei.value, (RuntimeError, Py4JJavaError)) or "SparkRuntimeException" in type(ei.value).__name__
-    # hint over cap: refused with zero Spark jobs
-    with pytest.raises(RuntimeError, match="stats hint"):
-        editdistance_pairs(bad, max_block_size=10, largest_block_hint=50)
-    # healthy corpus: all three modes produce identical pairs
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(200)
-    base = {(r.id_a, r.id_b) for r in editdistance_pairs(docs, max_block_size=1000).collect()}
-    inplan = {
-        (r.id_a, r.id_b)
-        for r in editdistance_pairs(docs, max_block_size=1000, guard_mode="inplan").collect()
-    }
-    hinted = {
-        (r.id_a, r.id_b)
-        for r in editdistance_pairs(docs, max_block_size=1000, largest_block_hint=500).collect()
-    }
-    assert base == inplan == hinted
 
-    # jaccard inplan on the degenerate one-bucket corpus also refuses
-    udf_bad = spark.createDataFrame(
-        [(i, f"a b c d e unique{i}") for i in range(50)], ["doc_id", "text"]
-    )
-    with pytest.raises(Exception, match="block"):
-        dedup.jaccard_pairs(udf_bad, max_block_size=20, guard_mode="inplan").collect()
-    # simhash hint mode: over-cap refused without a job
-    with pytest.raises(RuntimeError, match="stats hint"):
-        dedup.simhash_pairs(udf_bad, max_bucket_size=20, largest_bucket_hint=40)
+@pytest.mark.parametrize("arm", sorted(_CAP_ARMS))
+def test_cap_guard_in_plan(spark, arm):
+    """The near-dup cap is one in-plan guard: a degenerate corpus fails
+    the job with the operator's cap message, a healthy corpus gives the
+    same pairs as no cap, and building a capped query starts no more
+    Spark jobs than building an uncapped one."""
+    op, message, bad_texts, bad_cap = _CAP_ARMS[arm]
+    with pytest.raises(SparkRuntimeException, match=message):
+        op(_docs(spark, bad_texts), bad_cap).collect()
+
+    # healthy: the sf0.001 documents plus a planted near-copy of each of
+    # the first five, so every arm has pairs to compare
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select("doc_id", "text")
+    planted = [
+        (r.doc_id + 1_000_000, r.text + " ok")
+        for r in docs.orderBy("doc_id").limit(5).collect()
+    ]
+    healthy = docs.unionByName(spark.createDataFrame(planted, docs.schema))
+    uncapped = sorted(op(healthy, None).collect())
+    assert uncapped
+    assert sorted(op(healthy, 1_000).collect()) == uncapped
+
+    assert _build_jobs(
+        spark, f"cap-guard-{arm}-capped", lambda: op(healthy, 1_000)
+    ) == _build_jobs(spark, f"cap-guard-{arm}-uncapped", lambda: op(healthy, None))
 
 
 def test_editdistance_matches_bruteforce_random_corpus(spark):
@@ -471,8 +491,6 @@ def test_winnow_pairs_guarantee_and_guard(spark):
     fingerprint, so the pair MUST surface at min_shared=1.  Unrelated
     docs share nothing.  The hot-posting guard refuses a corpus where
     one fingerprint's posting list exceeds the cap."""
-    import pytest
-
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.dedup import winnow_pairs
 
     shared_run = "alpha beta gamma delta epsilon zeta"  # 6 tokens = n+w-1
@@ -492,10 +510,8 @@ def test_winnow_pairs_guarantee_and_guard(spark):
         [(i, "same exact words every single time again") for i in range(40)],
         ["doc_id", "text"],
     )
-    with pytest.raises(RuntimeError, match="posting"):
-        winnow_pairs(hot, max_fp_df=10)
-    with pytest.raises(Exception, match="posting"):
-        winnow_pairs(hot, max_fp_df=10, guard_mode="inplan").collect()
+    with pytest.raises(SparkRuntimeException, match="posting"):
+        winnow_pairs(hot, max_fp_df=10).collect()
 
 
 def test_winnow_pairs_strategy_identity(spark):
