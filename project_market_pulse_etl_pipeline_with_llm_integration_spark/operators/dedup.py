@@ -199,20 +199,6 @@ def _jaccard_block_skinny(
     return df.select(F.explode(F.array(_bk, _bk + 1)).alias("blk"))
 
 
-def jaccard_block_pairs_per_row(
-    df: DataFrame, text_col: str = "text", block_col: Column | None = None
-) -> float:
-    """Measured within-block pair volume per emitted row under
-    ``jaccard_pairs``' blocking — the decision statistic behind
-    ``strategy="auto"``.  Runs ONE bounded Spark job (a 1-row scalar
-    agg over a block-key-only projection).  Public (review r12) so
-    callers that need pure-lazy ``jaccard_pairs`` construction can run
-    the probe at a time of their choosing and pass an explicit
-    strategy: ``"indexed"`` past ``AUTO_INDEXED_PAIRS_PER_ROW``, else
-    ``"blocked"``."""
-    return _block_pairs_per_row(_jaccard_block_skinny(df, text_col, block_col))
-
-
 def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -286,8 +272,7 @@ def jaccard_pairs(
       execution; ``"blocked"`` and ``"indexed"`` construct purely
       lazily.  Callers that only compose or inspect the returned frame
       (no action intended yet) and must not trigger cluster work
-      should probe themselves via ``jaccard_block_pairs_per_row`` —
-      or skip it — and pass an explicit strategy."""
+      should pass an explicit strategy."""
     if num_partitions:
         df = spread_if_narrow(df, num_partitions)
     if strategy == "auto":
@@ -595,17 +580,6 @@ def minhash_signature_from_hashes(sh: Column, k: int = 32) -> Column:
 
     return F.aggregate(
         sh, init, lambda acc, h: F.zip_with(acc, perm_hashes(h), lambda a, b: F.least(a, b))
-    )
-
-
-def minhash_signature(col: Column | str, k: int = 32, n: int = 3) -> Column:
-    """k seeded min-hashes of the distinct n-gram shingle set: the
-    shingle string is hashed once (xxhash64) and the k permutations are
-    cheap long-mixes of that base hash — vs the naive k×array_min
-    formulation this hashes each string once instead of k times (the
-    strings dominate the cost)."""
-    return minhash_signature_from_hashes(
-        F.transform(shingles(col, n), lambda s: F.xxhash64(s)), k
     )
 
 
@@ -1336,7 +1310,6 @@ def winnow_pairs(
     min_shared: int = 2,
     max_fp_df: int | None = None,
     num_partitions: int | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Near-copy pairs (a<b, n_shared) by shared WINNOW fingerprints
     (Schleimer et al. SIGMOD'03 — the MOSS plagiarism-detection
@@ -1348,13 +1321,15 @@ def winnow_pairs(
     be missed, while each doc contributes only ~1/w of its grams to
     the index.
 
-    Plan shape: the shared (id, fp) selection stream
-    (``text.winnow_fp_rows``), per-doc distinct, one equi self-join on
-    the fingerprint hash (posting-list join, no cross product), count
-    per pair, filter.  ``max_fp_df`` is the hot-posting guard (a
-    fingerprint appearing in k docs contributes k^2 candidate pairs),
-    folded into the join's a-side by ``_guard_inplan`` like the rest of
-    the family.  The cap is ENFORCEMENT-ONLY, not a filter — when a
+    Plan shape: the distinct (id, fp) selection rows
+    (``text.winnow_fp_set_rows`` — one mapInPandas pass over
+    hash(id)-partitioned text, whose in-kernel guard raises on a null
+    or duplicate id), pinned because both join sides read them, then
+    one equi self-join on the fingerprint hash (posting-list join, no
+    cross product), count per pair, filter.  ``max_fp_df`` is the
+    hot-posting guard (a fingerprint appearing in k docs contributes
+    k^2 candidate pairs), folded into the join's a-side by
+    ``_guard_inplan`` like the rest of the family.  The cap is ENFORCEMENT-ONLY, not a filter — when a
     posting list exceeds it the job FAILS rather than silently dropping
     the fingerprint, so the cross-engine output contract (and the DuckDB
     oracle, which applies no cap) is defined only on corpora where the
@@ -1367,31 +1342,17 @@ def winnow_pairs(
     copy-cluster sizes plus ``max_fp_df`` — the same posture as the
     minhash band join."""
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
-        winnow_fp_rows,
-        winnow_fp_set_rows_arrow,
+        winnow_fp_set_rows,
     )
 
-    if strategy not in ("auto", "arrow", "relational"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     if num_partitions:
         df = spread_if_narrow(df, num_partitions)
     docs = df.filter(F.trim(F.col(text_col)) != "")
-    # Two pinned-identical fingerprint streams (optimization r14, guide
-    # §4): "arrow" (the "auto" pick — pure map, per-doc set deduped in
-    # Python, so the global distinct is free) and "relational" (the
-    # explode + window plan, kept as the cross-check reference).  The
-    # checkpoint stays either way: fps is referenced twice (a/b sides)
-    # and an unpinned double reference doubles the plan per side.
-    if strategy in ("auto", "arrow"):
-        fps = winnow_fp_set_rows_arrow(
-            docs, text_col, n, w, id_col
-        ).localCheckpoint(eager=False)
-    else:
-        fps = (
-            winnow_fp_rows(docs, text_col, n, w, id_col)
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+    # pinned: fps is referenced twice (a/b sides), and an unpinned
+    # double reference doubles the plan per side
+    fps = winnow_fp_set_rows(
+        docs, text_col, n, w, id_col
+    ).localCheckpoint(eager=False)
     _advice = (
         "a fingerprint's posting list exceeds the cap — near-universal "
         "boilerplate windows; raise w, pre-strip boilerplate, or cap "

@@ -22,7 +22,7 @@ table, where one reducer would otherwise receive the whole hot key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import cached_scan
 
@@ -88,11 +88,6 @@ def salted_agg(
         F.round(F.sum("_psum"), 2).cast("double").alias("total"),
         F.sum("_pcnt").alias("cnt"),
     )
-
-
-def salt_column(n_buckets: int, seed: int = 42) -> Column:
-    """The salt expression itself, for custom compositions."""
-    return (F.rand(seed) * n_buckets).cast("int")
 
 
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:

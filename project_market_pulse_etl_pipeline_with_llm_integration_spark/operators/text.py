@@ -219,9 +219,9 @@ def _positional_shingles(col: Column | str, n: int = 3) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-strategy support (optimization r14, guide §4): a bit-exact
-# Python replica of the ``tokens()`` column helper, for mapInPandas
-# kernels that must reproduce relational token streams EXACTLY.
+# mapInPandas kernel support: a bit-exact Python replica of the
+# ``tokens()`` column helper, for kernels whose token streams must equal
+# the column helper's (and the DuckDB oracle's) EXACTLY.
 #
 # tokens(c) == F.split(F.trim(c), r"\s+"), whose Spark semantics are:
 #   - F.trim strips the ASCII SPACE character (0x20) ONLY (UTF8String
@@ -242,22 +242,20 @@ def _py_tokens(text: str) -> list[str]:
 
 
 def _py_winnow_fp_set(text: str | None, n: int, w: int) -> list[str]:
-    """Sorted DISTINCT winnow fingerprints of one document — the Python
-    replica of ``winnow_fp_rows``'s per-doc selection, consumed set-wise
-    by both consumers (``with_winnow_fingerprint`` collect_set +
-    ``dedup.winnow_pairs`` distinct).
+    """Sorted DISTINCT winnow fingerprints of one document — the
+    selection both winnow consumers read set-wise
+    (``with_winnow_fingerprint``'s count + digest and
+    ``dedup.winnow_pairs``' posting rows).
 
-    Replicates, step for step: positional word n-grams
-    (concat_ws(" ", slice(toks, i+1, n)) for i in 0..max(T-n, 0) —
-    " ".join over a Python slice is identical on non-null tokens), md5
-    hex per gram (hashlib.md5 == Spark md5 on the UTF-8 bytes), window
-    min over hex strings (ASCII, so Python str min == UTF8String binary
-    min) at positions 0..max(|grams|-w, 0).  NULL text behaves exactly
-    like EMPTY text (measured against the live plan): tokens(NULL) is
-    NULL, but the shingle transform maps each position through
-    concat_ws(" ", slice(NULL, ...)), and concat_ws skips NULL args and
-    returns '' — so the gram array is [''] (md5('') fingerprint), never
-    NULL, and winnow_fp_rows' coalesce-'' sentinel arm is dead code."""
+    Steps: positional word n-grams (" ".join(toks[i:i+n]) for i in
+    0..max(T-n, 0) over the audited ``_py_tokens``), md5 hex per gram,
+    then the min of each window of ``w`` hashes at positions
+    0..max(|grams|-w, 0) (hex strings are ASCII, so str min is the
+    byte-wise min the DuckDB oracle takes).  NULL text is read as
+    EMPTY text: the gram list is [''] and the set is {md5('')}.  The
+    oracle instead gives a NULL-text row no fingerprints (0, NULL
+    digest); both sides are pinned by literal in
+    tests/test_kernel_oracle.py."""
     if text is None:
         text = ""
     toks = _py_tokens(text)
@@ -269,13 +267,12 @@ def _py_winnow_fp_set(text: str | None, n: int, w: int) -> list[str]:
 
 
 def _winnow_id_guard(where: str, id_col: str):
-    """In-kernel contract check factory for the Arrow winnow strategies:
+    """In-kernel contract check factory for the winnow kernels:
     ``id_col`` must be non-null and unique.  The map input is
     hash-REPARTITIONED by id (see callers), so every copy of an id
     lands in ONE partition and a partition-local seen-set detects
-    every duplicate — the Arrow equivalent of the relational plan's
-    windowed count assert, raising the same message.  Returns a
-    per-task closure: call it on each batch's id Series.
+    every duplicate.  Returns a per-task closure: call it on each
+    batch's id Series.
 
     The guard is only sound on input hash-partitioned by ``id_col``
     (``repartition(F.col(id_col))`` right before the mapInPandas).
@@ -303,21 +300,16 @@ def _winnow_id_guard(where: str, id_col: str):
     return make
 
 
-def _winnow_fingerprint_rows_arrow(
+def _winnow_fingerprint_rows(
     df: DataFrame, text_col: str, n: int, w: int, id_col: str,
 ) -> DataFrame:
-    """Arrow half of ``with_winnow_fingerprint``: per-document
-    (id, n_fingerprints, winnow_digest) in ONE mapInPandas pass over
-    hash(id)-partitioned (id, text) — no explode, no window, no
-    per-gram shuffle.  The repartition is the contract-enforcement
-    colocator (``_winnow_id_guard``) and is strictly SMALLER than the
-    shuffle it replaces: the relational plan exchanges the per-gram
-    (id, pos, 32-char md5) rows — ~an order of magnitude more bytes
-    than the text itself — while this exchanges the text once
+    """Per-document (id, n_fingerprints, winnow_digest) in ONE
+    mapInPandas pass over hash(id)-partitioned (id, text) — no explode,
+    no window, no per-gram shuffle.  The repartition is the colocator
+    ``_winnow_id_guard`` needs, and it moves each text once
     (CollapseRepartition folds it over any caller-side spread
     repartition, so single-file local layouts pay ONE exchange total).
-    Row-identical to the relational fps subplan (pinned by test +
-    shared oracle): every step is exact string/integer work — see
+    Every step is exact string/integer work — see
     ``_py_winnow_fp_set`` and the ``_py_tokens`` audit."""
     import pandas as pd
     from pyspark.sql import types as T
@@ -353,18 +345,17 @@ def _winnow_fingerprint_rows_arrow(
     )
 
 
-def winnow_fp_set_rows_arrow(
+def winnow_fp_set_rows(
     df: DataFrame, text_col: str, n: int, w: int, id_col: str,
 ) -> DataFrame:
-    """Arrow sibling of ``winnow_fp_rows(...).distinct()``: one
-    (_wid, _fp) row per (document, DISTINCT selected fingerprint), in a
-    single mapInPandas pass over hash(id)-partitioned (id, text) — no
-    explode, no window, and the global ``.distinct()`` is free because
-    the per-doc sets are deduped in Python and ids are unique (the
-    colocating repartition + in-kernel guard — see
-    ``_winnow_fingerprint_rows_arrow`` for why the exchange is strictly
-    smaller than the per-gram shuffle it replaces).  Row-identical to
-    the relational stream (pinned by test): see ``_py_winnow_fp_set``."""
+    """The winnow selection as DISTINCT rows: one (_wid, _fp) row per
+    (document, selected fingerprint), in a single mapInPandas pass over
+    hash(id)-partitioned (id, text) — no explode, no window.  Rows are
+    distinct without a global ``.distinct()`` because each per-doc set
+    is deduped in Python and ids are unique (the colocating
+    repartition + in-kernel ``_winnow_id_guard``).  Consumed by
+    ``dedup.winnow_pairs``; see ``_py_winnow_fp_set`` for the
+    selection."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -398,7 +389,7 @@ def winnow_fp_set_rows_arrow(
 
 def with_winnow_fingerprint(
     df: DataFrame, text_col: str = "text", n: int = 3, w: int = 4,
-    id_col: str = "doc_id", strategy: str = "auto",
+    id_col: str = "doc_id",
 ) -> DataFrame:
     """Rolling-hash document fingerprint by winnowing (Schleimer et al.,
     SIGMOD'03): hash every positional word n-gram, keep the minimum of
@@ -411,53 +402,20 @@ def with_winnow_fingerprint(
     Hashes are md5 hex strings (window min = lexicographic min) so the
     DuckDB oracle reproduces the selection bit-for-bit.
 
-    Two physical strategies, pinned row-identical by test
-    (optimization r14, guide §4 — the interpreted shingle HOF + the
-    per-doc window shuffle are the cost):
-
-    - ``"arrow"`` (the ``"auto"`` pick — a pure map at any scale, no
-      size gate needed): one mapInPandas pass computes each document's
-      fingerprint set in Python (md5 via hashlib is the identical
-      digest; see ``_py_winnow_fp_set`` for the step-by-step identity
-      argument); the uniqueness contract is enforced in the kernel
-      itself: the input is hash-repartitioned by ``id_col`` so every
-      copy of an id lands in one partition, and a per-partition
-      seen-set (``_winnow_id_guard``) raises on the first repeat,
-      instead of the relational plan's windowed count.
-    - ``"relational"``: explode -> window-frame min -> collect_set,
-      NOT nested array lambdas: higher-order functions evaluate
-      interpreted (outside whole-stage codegen) with no
-      common-subexpression elimination, so the original
-      nested-``transform`` form re-evaluated the entire gram->md5
-      pipeline at every reference — measured ~40x slower at sf0.01 and
-      super-linear with doc length.  Here each gram is hashed EXACTLY
-      once; the sliding-window min is a rows-between frame over
-      (doc, pos); the per-doc set rides the same hash partitioning the
-      window already paid for (one skinny (id, pos, hash) shuffle,
-      then an exchange-reusing groupBy; bodies never shuffle —
-      consumers that keep only (id, fingerprint) columns prune the
-      join's text side entirely)."""
-    if strategy not in ("auto", "arrow", "relational"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy in ("auto", "arrow"):
-        fps = _winnow_fingerprint_rows_arrow(df, text_col, n, w, id_col)
-    else:
-        fps = (
-            winnow_fp_rows(df, text_col, n, w, id_col)
-            .groupBy("_wid")
-            .agg(F.collect_set("_fp").alias("_fps"))
-            .select(
-                F.col("_wid").alias(id_col),
-                F.size("_fps").cast("long").alias("n_fingerprints"),
-                F.md5(F.array_join(F.sort_array("_fps"), ",")).alias("winnow_digest"),
-            )
-        )
+    Plan: one mapInPandas pass computes each document's fingerprint
+    set in Python (``_winnow_fingerprint_rows``; hashlib md5 is Spark's
+    digest), then a left join carries the input columns back — a pure
+    map at any scale.  The uniqueness contract is enforced in the
+    kernel itself: the input is hash-repartitioned by ``id_col`` so
+    every copy of an id lands in one partition, and a per-partition
+    seen-set (``_winnow_id_guard``) raises on the first repeat."""
+    fps = _winnow_fingerprint_rows(df, text_col, n, w, id_col)
     # The null-id assert must live on the LEFT side: the equi-join is
     # null-intolerant, so Catalyst pushes isnotnull(id) into the fps
-    # branch and would prune a null-id row there BEFORE the in-plan
-    # check inside winnow_fp_rows ever evaluates it — leaving silent
-    # NULL fingerprint columns.  Left rows survive the left join, so
-    # this per-row assert cannot be optimized away.
+    # branch and would prune a null-id row there BEFORE the kernel's
+    # guard ever sees it — leaving silent NULL fingerprint columns.
+    # Left rows survive the left join, so this per-row assert cannot be
+    # optimized away.
     id_ok = F.coalesce(
         F.assert_true(
             F.col(id_col).isNotNull(),
@@ -474,76 +432,6 @@ def with_winnow_fingerprint(
         .filter("_idok")
         .drop("_idok")
         .join(fps, id_col, "left")
-    )
-
-
-def winnow_fp_rows(
-    df: DataFrame, text_col: str = "text", n: int = 3, w: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The winnow selection as a row stream: one (_wid, _fp) row per
-    (document, selected window-min hash), NOT deduplicated — consumers
-    dedup in their own agg/join.  Shared by the per-doc digest
-    (``with_winnow_fingerprint``) and the near-copy pair generator
-    (``dedup.winnow_pairs``).
-
-    The gram array is PROJECTED into a column before the explode:
-    Generate with an inline higher-order-function generator (or
-    companion expressions in its select) re-evaluates the array
-    expression per OUTPUT row (measured 17 s vs 0.3 s at sf0.01); with
-    the array materialized one operator below, Generate just iterates
-    it.  Winnow positions are 0..max(T-w, 0); the trailing window
-    frame truncates at the array end exactly like a slice().  A doc
-    with a null gram array (null text) yields one null-hash row -> the
-    '' sentinel (legacy [null] quirk: n=1, digest md5('')).
-
-    CONTRACT: ``id_col`` must be non-null and unique — the sliding
-    window is keyed by id, so two rows sharing an id would interleave
-    their gram streams into one corrupt fingerprint set, and a null id
-    would drop out of the consumer's equi-join as silent NULL
-    fingerprint columns.  Enforced IN-PLAN
-    (per-id count window + assert_true on the pre-explode rows): the
-    exchange it needs is the same hash partitioning the winnow window
-    needs anyway and survives the explode, so the check costs a sort,
-    not a job."""
-    grams = _positional_shingles(text_col, n)
-    keyed = df.select(F.col(id_col).alias("_wid"), grams.alias("_g"))
-    id_cnt = F.count("*").over(Window.partitionBy("_wid"))
-    # CONTRACT enforcement rides one expression: ids must be NON-NULL
-    # (a null id would produce fingerprint rows that silently miss the
-    # consumer's equi-join -> silent NULL n_fingerprints) and UNIQUE.
-    # Both degrade loudly as a plan-time assert, not silent NULLs.
-    unique_ok = F.coalesce(
-        F.assert_true(
-            F.col("_wid").isNotNull() & (id_cnt == 1),
-            F.format_string(
-                f"winnow_fp_rows: id_col '{id_col}' must be non-null and "
-                "unique (%s rows share one id value, null ids forbidden) — "
-                "fingerprints are per-document; dedup or re-key the input",
-                id_cnt,
-            ),
-        ).cast("boolean"),
-        F.lit(True),
-    )
-    rows = (
-        keyed.withColumn("_uniq", unique_ok)
-        .filter("_uniq")
-        .select(
-            "_wid", F.size("_g").alias("_T"),
-            F.posexplode_outer("_g").alias("_pos", "_gram"),
-        )
-        .select("_wid", "_T", "_pos", F.md5("_gram").alias("_h"))
-    )
-    win_min = F.min("_h").over(
-        Window.partitionBy("_wid").orderBy("_pos").rowsBetween(0, w - 1)
-    )
-    return (
-        rows.withColumn("_win", win_min)
-        .filter(
-            F.col("_pos").isNull()
-            | (F.col("_pos") <= F.greatest(F.col("_T") - w, F.lit(0)))
-        )
-        .select("_wid", F.coalesce("_win", F.lit("")).alias("_fp"))
     )
 
 
@@ -1552,7 +1440,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bpe_train_merges(
     df: DataFrame, n_merges: int = 3, text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """BPE tokenizer TRAINING (Sennrich et al. 2016), not just the
     counting step (``bpe_pair_counts``): run ``n_merges`` full merge
@@ -1565,226 +1452,95 @@ def bpe_train_merges(
     Exact BPE semantics including equal-symbol runs: for a winner
     (a, a), occurrences overlap, and left-to-right greedy merging keeps
     only even offsets within each maximal run of ``a`` ("aaaa" ->
-    "aa aa", never "a aa a") — implemented with a gaps-and-islands run
-    id, no sequential fold needed (for a != b adjacent matches cannot
-    overlap, so every candidate merges).  All counts are exact longs
-    and symbols are strings, so the learned rules are hash-identical
-    cross-engine; the oracle unrolls the same rounds in SQL.
+    "aa aa", never "a aa a") — the ``_bpe_fold_rule`` left-fold gives
+    exactly that.  All counts are exact longs and symbols are strings,
+    so the learned rules are hash-identical cross-engine; the oracle
+    unrolls the same rounds in SQL.
 
-    Two physical strategies, pinned output-identical by test:
+    Plan: state is the array-shaped word-type table
+    (``bpe_word_types``, lazily checkpointed); each round counts
+    adjacent pairs via a zip-slice explode + ONE hash agg, COLLECTS the
+    1-row argmax (scale-free driver state, one row per round, so
+    training is eager at construction),
+    and rewrites by stacking a ``_bpe_fold_rule`` column — no windows,
+    no per-round shuffle beyond the count agg, no checkpoint chain.
+    Early exhaustion (no pair left) stops the loop and returns the
+    legitimate SHORT table.
 
-    - ``"fold"`` (what ``"auto"`` picks): state is the array-shaped
-      word-type table (``bpe_word_types``, lazily checkpointed); each
-      round counts adjacent pairs via a zip-slice explode + ONE hash
-      agg, COLLECTS the 1-row argmax (the dedup.py 1-row-guard class —
-      scale-free driver state, one row per round, so training becomes
-      eager at construction like the jaccard auto probe), and rewrites
-      by stacking a ``_bpe_fold_rule`` column — no windows, no
-      per-round shuffle beyond the count agg, no checkpoint chain.
-      Early exhaustion (no pair left) stops the loop and returns the
-      legitimate SHORT table.
-    - ``"relational"``: the original fully-lazy loop — one word-keyed
-      window pass (lead + run ids) + one pair-keyed hash agg per
-      round; the winner joins back as a broadcast 1-row relation
-      (never a driver collect).  Kept as the laziness-preserving
-      cross-check reference; its state is the (word, freq, pos, sym)
-      relation with ``localCheckpoint`` pinning each round, the
-      pagerank fixed-loop discipline.
-
-    Either way the state is |distinct words| x avg word length,
-    independent of corpus row count: at 100 TB the word table is the
-    TYPE vocabulary (millions of rows, not billions), so every round
-    is cheap regardless of corpus size."""
-    if strategy not in ("auto", "fold", "relational"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy != "relational":
-        types = bpe_word_types(df, text_col).localCheckpoint(eager=False)
-        col = F.col("syms")
-        rules: list[tuple[int, str, str, int]] = []
-        for rnd in range(1, n_merges + 1):
-            win = (
-                types.select(
-                    "freq",
-                    F.explode(
-                        F.zip_with(
-                            F.slice(col, 1, F.size(col) - 1),
-                            F.slice(col, 2, F.size(col) - 1),
-                            lambda a, b: F.struct(
-                                a.alias("sym"), b.alias("nxt")
-                            ),
-                        )
-                    ).alias("p"),
-                )
-                .select(
-                    F.col("p.sym").alias("sym"),
-                    F.col("p.nxt").alias("nxt"),
-                    "freq",
-                )
-                .groupBy("sym", "nxt")
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), "sym", "nxt")
-                .limit(1)
-                .collect()
-            )
-            if not win:
-                break
-            r = win[0]
-            rules.append((rnd, r.sym, r.nxt, int(r.cnt)))
-            col = _bpe_fold_rule(col, r.sym, r.nxt)
-        return df.sparkSession.createDataFrame(
-            rules,
-            "merge_round long, left_sym string, right_sym string, "
-            "pair_weight long",
-        )
-    state = bpe_word_state(df, text_col).localCheckpoint(eager=False)
-    w_word = Window.partitionBy("word").orderBy("pos")
-    learned = []
+    The state is |distinct words| x avg word length, independent of
+    corpus row count: at 100 TB the word table is the TYPE vocabulary
+    (millions of rows, not billions), so every round is cheap
+    regardless of corpus size."""
+    types = bpe_word_types(df, text_col).localCheckpoint(eager=False)
+    col = F.col("syms")
+    rules: list[tuple[int, str, str, int]] = []
     for rnd in range(1, n_merges + 1):
-        paired = state.withColumn("nxt", F.lead("sym").over(w_word))
-        counts = (
-            paired.filter(F.col("nxt").isNotNull())
+        win = (
+            types.select(
+                "freq",
+                F.explode(
+                    F.zip_with(
+                        F.slice(col, 1, F.size(col) - 1),
+                        F.slice(col, 2, F.size(col) - 1),
+                        lambda a, b: F.struct(
+                            a.alias("sym"), b.alias("nxt")
+                        ),
+                    )
+                ).alias("p"),
+            )
+            .select(
+                F.col("p.sym").alias("sym"),
+                F.col("p.nxt").alias("nxt"),
+                "freq",
+            )
             .groupBy("sym", "nxt")
             .agg(F.sum("freq").alias("cnt"))
-        )
-        winner = (
-            counts.orderBy(F.col("cnt").desc(), "sym", "nxt")
+            .orderBy(F.col("cnt").desc(), "sym", "nxt")
             .limit(1)
-            .select(
-                F.col("sym").alias("win_a"),
-                F.col("nxt").alias("win_b"),
-                F.col("cnt").alias("win_cnt"),
-            )
+            .collect()
         )
-        winner = winner.localCheckpoint(eager=False)
-        learned.append(
-            winner.select(
-                F.lit(rnd).cast("long").alias("merge_round"),
-                F.col("win_a").alias("left_sym"),
-                F.col("win_b").alias("right_sym"),
-                F.col("win_cnt").cast("long").alias("pair_weight"),
-            )
-        )
-        state = _bpe_rewrite(paired, winner).localCheckpoint(eager=False)
-
-    out = learned[0]
-    for extra in learned[1:]:
-        out = out.unionAll(extra)
-    return out
-
-
-def bpe_word_state(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-word-TYPE symbol state (word, freq, pos, sym) — the shared
-    starting relation of BPE training and BPE encoding.  |distinct
-    words| x avg word length rows, independent of corpus row count."""
-    words = (
-        df.filter(F.trim(F.col(text_col)) != "")
-        .select(F.explode(tokens(text_col)).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
-    w_word = Window.partitionBy("word").orderBy("pos")
-    # split("", regex) can emit an empty trailing element; filter it and
-    # re-rank so positions are DENSE — the consumed/lag logic in
-    # _bpe_rewrite relies on pos p-1 being the physically previous symbol
-    return (
-        words.select(
-            "word",
-            "freq",
-            F.posexplode(F.split("word", "")).alias("pos", "sym"),
-        )
-        .filter(F.col("sym") != "")
-        .select(
-            "word", "freq", (F.row_number().over(w_word) - 1).alias("pos"), "sym"
-        )
-    )
-
-
-def _bpe_rewrite(paired: DataFrame, winner: DataFrame) -> DataFrame:
-    """One left-to-right greedy merge rewrite of the (word, freq, pos,
-    sym, nxt) state against a 1-row winner (win_a, win_b) relation —
-    the shared core of training (winner = this round's argmax pair) and
-    encoding (winner = the shipped merge rule for this round).
-
-    Equal-symbol runs merge at even offsets only ("aaaa" -> "aa aa",
-    never "a aa a") via a gaps-and-islands run id — exact left-to-right
-    BPE semantics with no sequential fold."""
-    w_word = Window.partitionBy("word").orderBy("pos")
-    run_w = Window.partitionBy("word", "sym").orderBy("pos")
-    return (
-        paired.crossJoin(F.broadcast(winner.select("win_a", "win_b")))
-        .withColumn("rg", F.col("pos") - F.row_number().over(run_w))
-        .withColumn(
-            "off",
-            F.col("pos")
-            - F.min("pos").over(Window.partitionBy("word", "sym", "rg")),
-        )
-        .withColumn(
-            "mflag",
-            (F.col("sym") == F.col("win_a"))
-            & (F.col("nxt") == F.col("win_b"))
-            & (
-                (F.col("win_a") != F.col("win_b"))
-                | (F.col("off") % 2 == 0)
-            ),
-        )
-        .withColumn("consumed", F.coalesce(F.lag("mflag").over(w_word), F.lit(False)))
-        .filter(~F.col("consumed"))
-        .select(
-            "word",
-            "freq",
-            (F.row_number().over(w_word) - 1).alias("pos"),
-            F.when(
-                F.col("mflag"), F.concat(F.col("sym"), F.col("nxt"))
-            ).otherwise(F.col("sym")).alias("sym"),
-        )
+        if not win:
+            break
+        r = win[0]
+        rules.append((rnd, r.sym, r.nxt, int(r.cnt)))
+        col = _bpe_fold_rule(col, r.sym, r.nxt)
+    return df.sparkSession.createDataFrame(
+        rules,
+        "merge_round long, left_sym string, right_sym string, "
+        "pair_weight long",
     )
 
 
 def bpe_apply_merges(
-    state: DataFrame, merges: DataFrame, n_merges: int = 3,
-    strategy: str = "auto",
+    types: DataFrame, merges: DataFrame, n_merges: int = 3,
 ) -> DataFrame:
     """BPE ENCODING: apply a FIXED, ordered merge table (the artifact
     ``bpe_train_merges`` ships — columns merge_round, left_sym,
-    right_sym) to a symbol state, rule by rule in rank order — the
+    right_sym) to the word-type table ``bpe_word_types`` builds
+    (word, freq, syms), rule by rule in rank order — the
     inference-time half of the tokenizer that training alone never
     exercises.  Applying rules learned on the same corpus reproduces
     the trainer's final state exactly (pinned by test); on UNSEEN text
     the rules apply wherever their pair occurs, the real encode
-    semantics.
+    semantics.  Returns (word, freq, pos, sym), one row per encoded
+    symbol.
 
-    Two physical strategies, pinned output-identical by test (the
-    dedup_jaccard auto precedent):
-
-    - ``"fold"`` (what ``"auto"`` picks): each word's symbols are
-      assembled into ONE array (a single word-keyed hash agg — the
-      only shuffle), then every rule is applied as a codegen'd
-      ``aggregate`` left-fold over that array: merge the incoming
-      symbol into the accumulator's tail when (tail, incoming) equals
-      the rule, else append.  A left-fold IS left-to-right greedy BPE
-      — after a merge the tail becomes the merged symbol, which can
-      only re-match as the rule's LEFT side if ``a + b == a``
-      (impossible, b nonempty), so overlapping pairs are skipped and
-      equal-symbol runs merge at even offsets exactly like the
-      relational rewrite.  No windows, no per-round shuffles: at a
-      100M-type vocabulary this is one exchange + scan-speed array
-      folds, vs n_merges rounds x four window sorts.
-    - ``"relational"``: the original per-round rewrite — the rule is
-      a broadcast 1-row relation (filter merge_round = r on the
-      checkpointed merge table), then the shared gaps-and-islands
-      window rewrite.  Kept as the cross-check reference; shares
-      ``_bpe_rewrite`` with the trainer, whose per-round argmax
-      genuinely needs the relational pair state.
+    Plan: every rule is a codegen'd ``aggregate`` left-fold over each
+    word's symbol array (``_bpe_fold_rule``): merge the incoming symbol
+    into the accumulator's tail when (tail, incoming) equals the rule,
+    else append.  A left-fold IS left-to-right greedy BPE — after a
+    merge the tail becomes the merged symbol, which can only re-match
+    as the rule's LEFT side if ``a + b == a`` (impossible, b nonempty),
+    so overlapping pairs are skipped and equal-symbol runs merge at
+    even offsets.  No windows and no shuffle of its own: the output
+    stays hash-partitioned on word (``bpe_word_types``' groupBy), so
+    q_bpe_encode's n_syms regroup and the roundtrip law's decode
+    regroup reuse that exchange.
 
     Laziness: the rule table is collected driver-side up front —
-    O(n_merges) rows, the dedup.py 1-row-guard class — both to
-    validate it (a GAP round would silently annihilate every row in
-    the relational path; a duplicated round would duplicate them; a
-    SHORT table, rounds exactly 1..k < n_merges, is legitimate early
-    exhaustion) and to drive the fold rules.  This collect was always
-    here; ``strategy`` does not change the eagerness contract."""
-    merges = merges.localCheckpoint(eager=False)  # rules re-read per round
+    O(n_merges) rows — to validate it (a GAP round or a duplicated
+    round raises; a SHORT table, rounds exactly 1..k < n_merges, is
+    legitimate early exhaustion) and to build the fold rules."""
     rules = sorted(
         (r.merge_round, r.left_sym, r.right_sym)
         for r in merges.select(
@@ -1798,48 +1554,20 @@ def bpe_apply_merges(
             f"(k <= {n_merges}, short only by training exhaustion); "
             f"got rounds {rounds}"
         )
-    if strategy not in ("auto", "fold", "relational"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy != "relational":
-        if "syms" in state.columns:
-            # already array-shaped (bpe_word_types): no regroup at all
-            arr = state
-        else:
-            # groupBy word ALONE (freq recovered via first(): it is
-            # functionally dependent on the word type) so the output
-            # stays hash-partitioned on word — q_bpe_encode's n_syms
-            # regroup and the roundtrip law's decode regroup reuse
-            # this exchange.
-            arr = state.groupBy("word").agg(
-                F.first("freq").alias("freq"),
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "sym"))),
-                    lambda s: s["sym"],
-                ).alias("syms"),
-            )
-        col = F.col("syms")
-        for _rnd, a, b in rules:
-            col = _bpe_fold_rule(col, a, b)
-        return arr.select(
-            "word", "freq", F.posexplode(col).alias("pos", "sym")
-        )
-    w_word = Window.partitionBy("word").orderBy("pos")
-    st = state
-    for rnd in range(1, len(rounds) + 1):
-        rule = merges.filter(F.col("merge_round") == rnd).select(
-            F.col("left_sym").alias("win_a"), F.col("right_sym").alias("win_b")
-        )
-        paired = st.withColumn("nxt", F.lead("sym").over(w_word))
-        st = _bpe_rewrite(paired, rule).localCheckpoint(eager=False)
-    return st
+    col = F.col("syms")
+    for _rnd, a, b in rules:
+        col = _bpe_fold_rule(col, a, b)
+    return types.select(
+        "word", "freq", F.posexplode(col).alias("pos", "sym")
+    )
 
 
 def bpe_word_types(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Array-shaped word-type state (word, freq, syms) — the fold
-    strategy's native input: one tokens-explode + one word groupBy,
-    initial symbols straight from ``split`` (no posexplode, no
-    position window, no regroup).  ``bpe_apply_merges`` consumes it
-    as-is; output stays hash-partitioned on word."""
+    """Per-word-TYPE symbol state (word, freq, syms) — the shared
+    starting table of BPE training and BPE encoding: one tokens-explode
+    + one word groupBy, initial symbols straight from ``split``.
+    |distinct words| rows, independent of corpus row count; output
+    stays hash-partitioned on word."""
     return (
         df.filter(F.trim(F.col(text_col)) != "")
         .select(F.explode(tokens(text_col)).alias("word"))
@@ -1885,10 +1613,10 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Encoding happens at the word-TYPE level (a word's encoding depends
     only on the word), then joins back to the per-doc token stream —
     so the expensive rewrite runs over the vocabulary, never the
-    corpus, and the join key is the word string.  The encode half runs
-    the fold strategy (one word-keyed exchange + codegen'd array
-    folds; see ``bpe_apply_merges``), and the n_syms regroup reuses
-    that exchange.  All longs; the oracle unrolls the same 3 train
+    corpus, and the join key is the word string.  The encode half is
+    one word-keyed exchange + codegen'd array folds (see
+    ``bpe_apply_merges``), and the n_syms regroup reuses that
+    exchange.  All longs; the oracle unrolls the same 3 train
     rounds + the type-level symbol count in SQL (the bpe_train twin
     extended to its final state)."""
     docs = cached_scan(spark, f"{sf_dir}/documents.parquet")
@@ -2749,7 +2477,6 @@ def phrase_search(
     phrases: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Batch phrase search via an inverted word-bigram index with
     verification — the positional-index query plan (Manning et al.,
@@ -2770,13 +2497,13 @@ def phrase_search(
     Returns (phrase, id, n_hits) per matching document.
 
     Scale shape: the bigram postings are pruned to the queried grams
-    INSIDE the scan projection (``array_intersect`` against a literal
-    array before the explode — at 100 TB the postings table is
-    precomputed and this filter is 'read only those posting lists');
-    only (id, gram) skinny rows shuffle for the candidate agg; the
-    query->gram table and the surviving candidates are both broadcast,
-    so document bodies never shuffle — the verification scan reads
-    texts a second time but sends nothing anywhere.  Contract: >= 2
+    INSIDE the scan's map pass (``_phrase_postings`` — at 100 TB the
+    postings table is precomputed and this filter is 'read only those
+    posting lists'); only (id, gram) skinny rows shuffle for the
+    candidate agg; the query->gram table and the surviving candidates
+    are both broadcast, so document bodies never shuffle — the
+    verification map pass (``_phrase_verify``) reads texts a second
+    time but sends nothing anywhere.  Contract: >= 2
     whitespace-separated words per phrase; duplicate phrases are
     deduplicated up front (a duplicate would double its gram rows and
     break the n_hit == k candidate test)."""
@@ -2791,45 +2518,12 @@ def phrase_search(
         pat_rows.extend((p, g, len(grams)) for g in grams)
     pat = spark.createDataFrame(pat_rows, "phrase string, gram string, k int")
     all_grams = sorted({g for _, g, _ in pat_rows})
-    if strategy not in ("auto", "arrow", "relational"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    arrow = strategy in ("auto", "arrow")
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
         spread_if_narrow,
     )
 
     spread = spread_if_narrow(docs, spark.sparkContext.defaultParallelism)
-    if arrow:
-        # Arrow postings (optimization r14, guide §4): one mapInPandas
-        # pass emits (id, gram) for each DISTINCT doc bigram that hits
-        # the query-gram set — the interpreted shingle transform +
-        # array_intersect + explode (and its checkpoint pushdown
-        # barrier, obsolete without a Generate) all collapse into
-        # native Python set probes.  Row-identical: same tokenization
-        # (_py_tokens audit), same distinct-gram set semantics, and
-        # the consumer is an order-insensitive count agg.
-        postings = _phrase_postings_arrow(
-            spread, frozenset(all_grams), id_col, text_col
-        )
-    else:
-        # Queried-gram postings: array projected BELOW the explode
-        # (Generate re-evaluation lesson, SCALE.md round 6); empty
-        # intersections emit no rows, so most docs die inside the scan
-        # stage.  The checkpoint is a pushdown barrier, not just a
-        # share point: InferFiltersFromGenerate adds size(_g) > 0
-        # below the explode and Catalyst would push it into the scan,
-        # re-running the whole gram-extraction pipeline a second time
-        # per row (round-6 lesson, SCALE.md).  Behind the barrier the
-        # inferred filter evaluates on the materialized tiny array.
-        pruned = F.array_intersect(
-            F.array_distinct(_positional_shingles(text_col, 2)),
-            F.array(*[F.lit(g) for g in all_grams]),
-        )
-        postings = (
-            spread.select(F.col(id_col).alias("_id"), pruned.alias("_g"))
-            .localCheckpoint(eager=False)
-            .select("_id", F.explode("_g").alias("gram"))
-        )
+    postings = _phrase_postings(spread, frozenset(all_grams), id_col, text_col)
     cand = (
         postings.join(F.broadcast(pat), "gram")
         .groupBy("phrase", "_id")
@@ -2838,45 +2532,20 @@ def phrase_search(
         .select("phrase", "_id")
     )
     carry = [c for c in docs.columns if c != text_col]
-    if arrow:
-        # Arrow verification: the relational CASE expression evaluates
-        # split(trim(text)) THREE times per candidate row (interpreted
-        # HOFs have no common-subexpression elimination); the Python
-        # kernel tokenizes once and counts token-subsequence starts
-        # with the same overlap semantics and the same n_hits > 0
-        # filter.  Exact: integer counts over the audited tokenization.
-        return _phrase_verify_arrow(docs, cand, carry, id_col, text_col)
-    # Token-subsequence verification: count positions i with
-    # toks[i..i+m-1] == phrase tokens.  sequence() descends when
-    # stop < start, so the short-doc case is guarded explicitly.
-    hits = F.expr(
-        f"CASE WHEN size(split(trim({text_col}), '\\\\s+')) >= "
-        "size(split(phrase, ' ')) THEN "
-        f"size(filter(sequence(1, size(split(trim({text_col}), '\\\\s+')) "
-        "- size(split(phrase, ' ')) + 1), "
-        f"i -> slice(split(trim({text_col}), '\\\\s+'), i, "
-        "size(split(phrase, ' '))) == split(phrase, ' '))) "
-        "ELSE 0 END"
-    ).cast("long")
-    return (
-        docs.join(F.broadcast(cand), F.col(id_col) == F.col("_id"))
-        .withColumn("n_hits", hits)
-        .where(F.col("n_hits") > 0)
-        .select("phrase", *carry, "n_hits")
-    )
+    return _phrase_verify(docs, cand, carry, id_col, text_col)
 
 
-def _phrase_postings_arrow(
+def _phrase_postings(
     spread_docs: DataFrame, qgrams: frozenset, id_col: str, text_col: str,
 ) -> DataFrame:
     """(_id, gram) rows for every DISTINCT document bigram that appears
-    in the query-gram set — the Arrow half of phrase_search's postings
-    prefilter.  A doc's gram enumeration replicates
-    ``_positional_shingles(text_col, 2)`` over the audited tokenizer;
-    set-probe + per-doc seen-set reproduce array_distinct ∩ literal
-    exactly (the consumer aggregates counts, so emission order is
-    immaterial).  NULL text emits nothing on both engines (its only
-    shingle is '', and every query gram contains a space)."""
+    in the query-gram set — phrase_search's postings prefilter, in one
+    mapInPandas pass of native Python set probes (no interpreted
+    shingle transform, no explode).  A doc's grams are its positional
+    word bigrams over the audited ``_py_tokens``; each doc emits a gram
+    at most once (the consumer counts distinct grams per doc, so
+    emission order is immaterial).  NULL text emits nothing (every
+    query gram contains a space)."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -2908,17 +2577,17 @@ def _phrase_postings_arrow(
     return spread_docs.select(id_col, text_col).mapInPandas(emit, schema=schema)
 
 
-def _phrase_verify_arrow(
+def _phrase_verify(
     docs: DataFrame, cand: DataFrame, carry: list[str],
     id_col: str, text_col: str,
 ) -> DataFrame:
     """Token-subsequence verification of the (broadcast) candidate set
     in one mapInPandas pass: n_hits = number of start positions where
     the document's token run equals the phrase's single-space-split
-    tokens (overlaps included), rows with n_hits == 0 dropped — the
-    exact integer semantics of the relational CASE/filter expression
-    (split(phrase, ' ') keeps empty tokens in both engines; a NULL
-    text yields 0 on both: size(split(trim(NULL))) is -1 < m)."""
+    tokens (overlaps included), rows with n_hits == 0 dropped.  Each
+    candidate text is tokenized once (``_py_tokens``); a NULL text
+    yields 0.  Exact integer counts, so the oracle's naive scan
+    matches by hash."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -2965,19 +2634,35 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phrase_search(docs, PHRASE_SEARCH_QUERIES)
 
 
-def _char_entropy_arrow(docs: DataFrame, min_nats_1e6: int) -> DataFrame:
-    """Arrow half of char_entropy_profile — row-identical to the fold
-    plan (pinned by test + the shared oracle).
+def char_entropy_profile(
+    docs: DataFrame,
+    min_nats_1e6: int = 2_000_000,
+) -> DataFrame:
+    """Per-document character-distribution Shannon entropy — the
+    C4/Gopher-family junk gate that catches what length and stopword
+    ratios miss (base64 blobs, key-mash, single-char floods all have
+    pathological char entropies).  H = ln(N) - (sum_c n_c ln n_c) / N
+    over character counts n_c.
 
-    Exactness: every output is a pure integer function of the per-char
-    COUNTS (Counter(text) == the array_sort+run fold), and the only
-    float step is floor(ln(x)·1e6) for x <= 10⁶ — which the committed
-    float_boundary_audit measured to sit HUNDREDS of ulps clear of
-    every floor boundary in that domain, so the <=1-ulp spread between
-    Java Math.log, C libm and DuckDB ln can never flip a floor (the
-    same argument the DuckDB oracle already rests on).  The
-    trim-nonempty filter stays IN SPARK so its exact single-space trim
-    semantics are untouched."""
+    Exactness (the perplexity recipe, applied per CHARACTER): each
+    distinct char contributes n_c·floor(ln(n_c)·1e6) to the sum — the
+    INTEGER multiple of a floored small float, not the floor of a big
+    float: tools/float_boundary_audit.py measured that
+    floor(n·ln(n)·1e6) sits EXACTLY on a floor boundary at n = 22988
+    (ulp grows with the value, so big-float floors are structurally
+    flippable across engines), while ln(n)·1e6 stays >= hundreds of
+    ulps clear of every boundary for all n <= 10⁶ — so the <=1-ulp
+    spread between Python's libm, Java Math.log and DuckDB ln can
+    never flip a floor.  The keep gate compares in pure integer space:
+    N·floor(ln(N)·1e6) - S >= min_nats_1e6·N.
+
+    Plan: ZERO shuffles — the trim-nonempty filter (kept in Spark for
+    its exact single-space trim semantics) feeds one mapInPandas pass
+    that counts chars with ``Counter``; every output is a pure integer
+    function of those counts.  A scan-local map, the cheapest possible
+    shape for a 100 TB quality pass.  Contract: single-byte/ASCII-range
+    text (the oracle's ``length()`` counts chars; the synthetic corpus
+    qualifies); unicode graphemes need a normalizer first."""
     import math
     from collections import Counter
 
@@ -3021,112 +2706,6 @@ def _char_entropy_arrow(docs: DataFrame, min_nats_1e6: int) -> DataFrame:
         docs.filter(F.trim("text") != "")
         .select("doc_id", "text")
         .mapInPandas(profile, schema=schema)
-    )
-
-
-def char_entropy_profile(
-    docs: DataFrame,
-    min_nats_1e6: int = 2_000_000,
-    strategy: str = "auto",
-) -> DataFrame:
-    """Per-document character-distribution Shannon entropy — the
-    C4/Gopher-family junk gate that catches what length and stopword
-    ratios miss (base64 blobs, key-mash, single-char floods all have
-    pathological char entropies).  H = ln(N) - (sum_c n_c ln n_c) / N
-    over character counts n_c.
-
-    Exactness (the perplexity recipe, applied per CHARACTER RUN): the
-    char stream is sorted IN-ROW (array_sort of the 1-char split) and
-    folded once, each run contributing n_c·floor(ln(n_c)·1e6) to the
-    sum — the INTEGER multiple of a floored small float, not the floor
-    of a big float: tools/float_boundary_audit.py measured that
-    floor(n·ln(n)·1e6) sits EXACTLY on a floor boundary at n = 22988
-    (ulp grows with the value, so big-float floors are structurally
-    flippable across engines), while ln(n)·1e6 stays >= hundreds of
-    ulps clear of every boundary for all n <= 10⁶.  The keep gate
-    compares in pure integer space:
-    N·floor(ln(N)·1e6) - S >= min_nats_1e6·N.
-
-    Scale shape: ZERO shuffles and zero explodes — the whole profile
-    is scan-local column algebra (split, array_sort, one aggregate
-    fold per row), the cheapest possible shape for a 100 TB quality
-    pass.  Contract: single-byte/ASCII-range text (length() counts
-    chars; the synthetic corpus qualifies); sorting unicode graphemes
-    needs a normalizer first.
-
-    Two physical strategies, pinned row-identical by test
-    (optimization r13, guide §4 — the per-char interpreted
-    array_sort + struct fold is the CPU bottleneck; counting chars in
-    an Arrow batch is the same integers ~5x cheaper):
-
-    - ``"arrow"`` (the ``"auto"`` pick — the operator is a pure map at
-      any scale, no size gate needed): one mapInPandas pass,
-      Counter-based; see ``_char_entropy_arrow`` for the bit-identity
-      argument.
-    - ``"fold"``: the scan-local column-algebra plan below — the
-      zero-Python reference and cross-check."""
-    if strategy not in ("auto", "arrow", "fold"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy in ("auto", "arrow"):
-        return _char_entropy_arrow(docs, min_nats_1e6)
-    chars = F.array_sort(F.split(F.col("text"), ""))
-
-    def term(nc):
-        d = nc.cast("double")
-        return F.when(nc <= 1, F.lit(0).cast("long")).otherwise(
-            nc * F.floor(F.log(d) * F.lit(1000000.0)).cast("long")
-        )
-
-    zero = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("s"),
-        F.lit(0).cast("long").alias("d"),
-    )
-    folded = F.aggregate(
-        chars,
-        zero,
-        lambda acc, x: F.when(
-            x == acc["prev"],
-            F.struct(
-                acc["prev"].alias("prev"),
-                (acc["run"] + 1).alias("run"),
-                acc["s"].alias("s"),
-                acc["d"].alias("d"),
-            ),
-        ).otherwise(
-            F.struct(
-                x.alias("prev"),
-                F.lit(1).cast("long").alias("run"),
-                (acc["s"] + term(acc["run"])).alias("s"),
-                (acc["d"] + 1).alias("d"),
-            )
-        ),
-        lambda acc: F.struct(
-            (acc["s"] + term(acc["run"])).alias("s"), acc["d"].alias("d")
-        ),
-    )
-    n = F.length("text").cast("long")
-    ln_n_1e6 = F.floor(F.log(n.cast("double")) * F.lit(1000000.0)).cast("long")
-    return (
-        docs.filter(F.trim("text") != "")
-        .select(
-            "doc_id",
-            n.alias("n_chars"),
-            ln_n_1e6.alias("ln_n_1e6"),
-            folded.alias("_f"),
-        )
-        .select(
-            "doc_id",
-            "n_chars",
-            F.col("_f.d").alias("distinct_chars"),
-            F.col("_f.s").alias("sum_nlogn_1e6"),
-            "ln_n_1e6",
-            (
-                F.col("n_chars") * F.col("ln_n_1e6") - F.col("_f.s")
-                >= F.lit(min_nats_1e6) * F.col("n_chars")
-            ).alias("entropy_keep"),
-        )
     )
 
 
@@ -3408,25 +2987,25 @@ RAKE_STOPWORDS = [
 ]
 
 
-def _rake_members_arrow(docs: DataFrame) -> DataFrame:
-    """Arrow half of ``rake_keywords``'s candidate-phrase membership
-    table: (doc_id, grp, w, plen, phrase) — one row per (document,
-    island member) — in ONE mapInPandas pass, replacing the posexplode
-    + per-doc row_number window + collect_list groupBy + join (four
-    operators, two of them shuffles of per-token rows).
+def _rake_members(docs: DataFrame) -> DataFrame:
+    """``rake_keywords``' candidate-phrase membership table:
+    (doc_id, grp, w, plen, phrase) — one row per (document, island
+    member) — in ONE mapInPandas pass: no posexplode, no per-doc
+    window, no per-token shuffle.
 
-    Row-identity argument (pinned by test + shared oracle): the
-    LOWERCASING stays IN SPARK (lower(text) before the map), so the
-    kernel never case-converts — lowering the whole text first equals
-    lowering per token because Unicode case mapping maps no character
-    to or from the five Java \\s separators (token boundaries are
-    unchanged) and the one context-sensitive rule (Greek final sigma)
+    The LOWERCASING stays IN SPARK (lower(text) before the map), so the
+    kernel never case-converts.  Lowering the whole text first equals
+    lowering per token: Unicode case mapping maps no character to or
+    from the five Java \\s separators (token boundaries are
+    unchanged), and the one context-sensitive rule (Greek final sigma)
     keys on the neighboring CASED characters, which whitespace is not.
-    Tokens + positions replicate posexplode(tokens(text)) via the
-    audited ``_py_tokens``; empty-token and stopword filters are exact
-    string membership; the island id grp = pos - rank is the same
-    integer; plen/phrase are per-island count and document-order
-    join — all exact."""
+    (The DuckDB oracle lowers sigma without that rule: 'ΦΩΣ' -> 'φωσ'
+    where Spark gives 'φως'; both are pinned by literal in
+    tests/test_kernel_oracle.py.)  Tokens and positions come from
+    ``_py_tokens``; empty-token and stopword filters are exact string
+    membership; the island id grp = pos - rank (rank counted from 1
+    over the kept tokens); plen/phrase are the per-island count and
+    document-order join — all exact."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -3487,7 +3066,7 @@ def _rake_members_arrow(docs: DataFrame) -> DataFrame:
     return src.mapInPandas(emit, schema=schema)
 
 
-def rake_keywords(docs: DataFrame, strategy: str = "auto") -> DataFrame:
+def rake_keywords(docs: DataFrame) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010) over the corpus:
     candidate phrases are maximal stopword-free token runs; each word
     scores deg/freq where freq counts its phrase occurrences and deg
@@ -3501,41 +3080,12 @@ def rake_keywords(docs: DataFrame, strategy: str = "auto") -> DataFrame:
     link_prediction_ra recipe), so ranking and the (score desc, phrase)
     tie-break are engine-exact.
 
-    Two pinned-identical strategies for the membership table
-    (optimization r14, guide §4): "arrow" (the "auto" pick — one
-    mapInPandas pass, see ``_rake_members_arrow``) and "relational"
-    (posexplode + per-doc window + collect_list groupBy + join — the
-    cross-check reference).  Downstream either way: hash aggs keyed by
-    word and phrase text; top-30 is TakeOrdered.  Word bodies shuffle
-    once as short phrase strings — no all-pairs, no global sort."""
-    if strategy not in ("auto", "arrow", "relational"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy in ("auto", "arrow"):
-        mem = _rake_members_arrow(docs)
-    else:
-        tk = (
-            docs.filter(F.trim("text") != "")
-            .select("doc_id", F.posexplode(tokens("text")).alias("pos", "word"))
-            .filter(F.col("word") != "")
-            .select("doc_id", "pos", F.lower("word").alias("w"))
-        )
-        ns = tk.filter(~F.col("w").isin(RAKE_STOPWORDS))
-        w_doc = Window.partitionBy("doc_id").orderBy("pos")
-        isl = ns.withColumn("grp", F.col("pos") - F.row_number().over(w_doc))
-        ph = isl.groupBy("doc_id", "grp").agg(
-            F.count("*").alias("plen"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                    lambda s: s["w"],
-                ),
-                " ",
-            ).alias("phrase"),
-        )
-        mem = isl.join(ph, ["doc_id", "grp"]).select(
-            "doc_id", "grp", "w", "plen", "phrase"
-        )
-    mem = mem.localCheckpoint(eager=False)  # word stats + phrase scores
+    Plan: the membership table is one mapInPandas pass
+    (``_rake_members``); downstream, hash aggs keyed by word and phrase
+    text; top-30 is TakeOrdered.  Word bodies shuffle once as short
+    phrase strings — no all-pairs, no global sort."""
+    # pinned: read twice, by the word stats and the phrase scores
+    mem = _rake_members(docs).localCheckpoint(eager=False)
     sc = (
         mem.groupBy("w")
         .agg(F.count("*").alias("freq"), F.sum("plen").alias("deg"))

@@ -136,17 +136,17 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
 
 def get_spark(
     app_name: str = "market-pulse-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism so the driver's
-    bench harness controls core count.
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (benchmark
+    harnesses set the core count through it); ``SPARK_GRAFT_MASTER``
+    overrides the master URL.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 

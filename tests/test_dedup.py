@@ -515,58 +515,24 @@ def test_winnow_pairs_guarantee_and_guard(spark):
 
 
 def test_winnow_pairs_strategy_identity(spark):
-    """The Arrow fingerprint stream (optimization r14) is pinned
-    ROW-IDENTICAL to the relational explode+window plan through the
-    whole pair pipeline — same pairs, same n_shared — on a corpus with
-    shared runs, duplicates, blanks, and whitespace adversaria; and the
-    duplicate-id contract still RAISES under the Arrow stream."""
+    """The one fingerprint stream (a mapInPandas pass over
+    hash(id)-partitioned text) keeps the per-document contract: two
+    rows sharing an id RAISE instead of welding their fingerprint sets.
+    Its pair output is checked against the DuckDB oracle, and its
+    ``min_shared=1`` pairs by literal, in tests/test_kernel_oracle.py."""
     import pytest
 
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.dedup import (
         winnow_pairs,
     )
 
-    shared_run = "alpha beta gamma delta epsilon zeta"
-    rows = [
-        (1, f"intro words here {shared_run} closing remarks one"),
-        (2, f"totally different opening {shared_run} and another tail"),
-        (3, f"{shared_run} {shared_run} repeated twice body"),
-        (4, "unrelated content about nothing shared with others at all"),
-        (5, ""),                      # blank: excluded
-        (6, "tabs\there\t" + shared_run + "\nnewline tail"),
-        (7, "short doc"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for ms in (1, 2):
-        rel = sorted(
-            tuple(r) for r in winnow_pairs(
-                df, min_shared=ms, strategy="relational"
-            ).collect()
-        )
-        arr = sorted(
-            tuple(r) for r in winnow_pairs(
-                df, min_shared=ms, strategy="arrow"
-            ).collect()
-        )
-        assert rel == arr, f"strategies diverge at min_shared={ms}"
-    auto = sorted(
-        tuple(r) for r in winnow_pairs(df, min_shared=1).collect()
-    )
-    rel = sorted(
-        tuple(r) for r in winnow_pairs(
-            df, min_shared=1, strategy="relational"
-        ).collect()
-    )
-    assert auto == rel
-    # duplicate ids: the broadcast assert branch must refuse as loudly
-    # as the relational window count did
     dup = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon"),
          (1, "zeta eta theta iota kappa")],
         ["doc_id", "text"],
     )
     with pytest.raises(Exception, match="non-null and unique"):
-        winnow_pairs(dup, min_shared=1, strategy="arrow").collect()
+        winnow_pairs(dup, min_shared=1).collect()
 
 
 def test_stitch_overlap_pairs(spark):

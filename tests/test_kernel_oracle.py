@@ -1,0 +1,190 @@
+"""Text and near-dup kernels against their DuckDB oracles, on
+adversarial corpora.
+
+Each case writes a small corpus with the ``documents`` schema, runs the
+registry entry (``queries()[name]``) on Spark and the entry's
+``oracle_sql()`` on DuckDB over the same parquet file, and compares the
+two with the order-insensitive value hash of ``tools/check_oracle.py``.
+Where the two engines' contracts part, the case pins BOTH sides by
+literal and hashes the rest:
+
+* NULL text in ``winnow_fingerprint``: Spark reads it as empty text
+  (one fingerprint, md5('')); the oracle gives it no fingerprints.
+* Greek final sigma in ``rake_keywords``: Spark lowers 'ΦΩΣ' to 'φως',
+  DuckDB to 'φωσ'.
+
+``dedup_winnow`` fixes ``min_shared=2``, which finds no pair on the
+shared-run corpus, so that case also pins ``winnow_pairs(min_shared=1)``
+by literal.
+"""
+
+from __future__ import annotations
+
+import hashlib
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+import __spark_entry__ as entry
+from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.dedup import (
+    winnow_pairs,
+)
+from tools.check_oracle import table_hash
+
+WINNOW = [
+    (1, "alpha beta gamma delta epsilon zeta eta theta"),
+    (2, "alpha beta gamma delta epsilon zeta eta theta"),  # exact dup
+    (3, "the quick brown fox jumps over alpha beta gamma delta"),
+    (4, "  leading and trailing  "),
+    (5, "tabs\there\tand\nnewlines mixed in a longer body of words"),
+    (6, "short doc"),
+    (7, "solo"),
+    (8, ""),
+    (9, None),
+    (10, "a\u00a0b c d e f g h"),  # NBSP inside a token
+    (11, "x " * 40),                # repeated bigram, trailing space
+]
+
+_SHARED_RUN = "alpha beta gamma delta epsilon zeta"
+SHARED_RUN = [
+    (1, f"intro words here {_SHARED_RUN} closing remarks one"),
+    (2, f"totally different opening {_SHARED_RUN} and another tail"),
+    (3, f"{_SHARED_RUN} {_SHARED_RUN} repeated twice body"),
+    (4, "unrelated content about nothing shared with others at all"),
+    (5, ""),                        # blank: excluded
+    (6, "tabs\there\t" + _SHARED_RUN + "\nnewline tail"),
+    (7, "short doc"),
+]
+
+RAKE = [
+    (1, "The quick brown fox jumps over the lazy dog"),
+    (2, "quick brown fox and lazy dog in the yard"),
+    (3, "  Deep learning models for market data  "),
+    (4, "deep learning\tmodels\nfor market data"),
+    (5, "a an and are as at"),          # all stopwords
+    (6, "solo"),
+    (7, ""),
+    (8, "market-data pipelines, with punctuation."),
+    (9, "QUICK BROWN FOX"),
+    (10, "ΦΩΣ ΚΑΛΟ market data"),       # final-sigma lowering
+    (11, "the of to " + "repeat phrase " * 5),
+]
+
+ENTROPY = [
+    (1, "abcabcabc"),
+    (2, "aaaaaaaaaa"),              # single-char flood
+    (3, "   "),                     # trim-empty: filtered
+    (4, ""),
+    (5, None),
+    (6, "the quick brown fox jumps over the lazy dog " * 50),
+    (7, "x"),
+]
+
+# learns r1 (a,a) and r2 (b,b) over equal-symbol runs, then r3 (a,bb)
+# over a merged symbol
+BPE_RUNS = [(1, "aaaaa baab abbb")]
+
+# words of the registry's fixed query batch (PHRASE_SEARCH_QUERIES)
+PHRASES = [
+    (1, "fast sort key"),
+    (2, "fast sort key fast sort key"),     # two hits
+    (3, "fast sort key."),                  # punctuated token: no hit
+    (4, "xfast sort key"),                  # compound token: no hit
+    (5, "  merge\tbatch   part  "),         # ragged whitespace still hits
+    (6, "table window table window table"),  # overlapping hits
+    (7, "scan slow fast scan slow"),
+    (8, ""),
+    (9, None),
+    (10, "fast sort\u00a0key"),  # NBSP is not a separator
+]
+
+_EMPTY_FP_DIGEST = hashlib.md5(
+    hashlib.md5(b"").hexdigest().encode()
+).hexdigest()
+
+CASES = [
+    pytest.param("char_entropy", ENTROPY, None, None,
+                 id="char_entropy-entropy"),
+    pytest.param(
+        "winnow_fingerprint", WINNOW,
+        ({"doc_id": 9, "n_fingerprints": 1, "winnow_digest": _EMPTY_FP_DIGEST},
+         {"doc_id": 9, "n_fingerprints": 0, "winnow_digest": None}),
+        None,
+        id="winnow_fingerprint-winnow",
+    ),
+    pytest.param("dedup_winnow", WINNOW, None, None,
+                 id="dedup_winnow-winnow"),
+    pytest.param(
+        "dedup_winnow", SHARED_RUN, None,
+        [(1, 2, 1), (1, 3, 1), (1, 6, 1), (2, 3, 1), (2, 6, 1), (3, 6, 1)],
+        id="dedup_winnow-shared_run",
+    ),
+    pytest.param(
+        "rake_keywords", RAKE,
+        ({"phrase": "φως καλο market data", "n_occur": 1,
+          "score_ppm": 13_333_332, "kw_rank": 3},
+         {"phrase": "φωσ καλο market data", "n_occur": 1,
+          "score_ppm": 13_333_332, "kw_rank": 3}),
+        None,
+        id="rake_keywords-rake",
+    ),
+    pytest.param("bpe_train", BPE_RUNS, None, None, id="bpe_train-bpe_runs"),
+    pytest.param("bpe_encode", BPE_RUNS, None, None, id="bpe_encode-bpe_runs"),
+    pytest.param("bpe_roundtrip_law", BPE_RUNS, None, None,
+                 id="bpe_roundtrip_law-bpe_runs"),
+    pytest.param("phrase_search", PHRASES, None, None,
+                 id="phrase_search-phrases"),
+]
+
+
+def _write_documents(sf_dir, rows) -> str:
+    """One parquet file with the ``documents`` schema (the registry's
+    single-file layout)."""
+    path = f"{sf_dir}/documents.parquet"
+    texts = [t for _, t in rows]
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([i for i, _ in rows], pa.int64()),
+            "text": pa.array(texts, pa.string()),
+            "lang": pa.array(["en"] * len(rows), pa.string()),
+            "source": pa.array(["s"] * len(rows), pa.string()),
+            "n_chars": pa.array(
+                [None if t is None else len(t) for t in texts], pa.int64()
+            ),
+        }),
+        path,
+    )
+    return path
+
+
+def _take(cols, rows, want: dict) -> list[tuple]:
+    """The rows other than the single one equal to ``want``."""
+    hit = [r for r in rows if dict(zip(cols, r)) == want]
+    assert len(hit) == 1, (want, rows)
+    return [r for r in rows if dict(zip(cols, r)) != want]
+
+
+@pytest.mark.parametrize("name,corpus,gap,pairs_at_1", CASES)
+def test_kernel_matches_oracle(spark, tmp_path, name, corpus, gap, pairs_at_1):
+    path = _write_documents(tmp_path, corpus)
+    sdf = entry.queries()[name](spark, str(tmp_path))
+    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    rel = con.sql(entry.oracle_sql()[name])
+    ocols, orows = [d[0] for d in rel.description], rel.fetchall()
+
+    if gap is not None:
+        spark_row, oracle_row = gap
+        srows = _take(scols, srows, spark_row)
+        orows = _take(ocols, orows, oracle_row)
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows)
+    assert table_hash(scols, srows) == table_hash(ocols, orows)
+
+    if pairs_at_1 is not None:
+        docs = spark.read.parquet(path)
+        got = sorted(map(tuple, winnow_pairs(docs, min_shared=1).collect()))
+        assert got == pairs_at_1

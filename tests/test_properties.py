@@ -861,9 +861,9 @@ def test_dow_anomaly_matches_python_on_random_frames(spark, rows):
 )
 def test_bpe_apply_equals_greedy_reference(spark, docs, n_merges):
     """On ARBITRARY corpora, applying the learned merge table through
-    the distributed gaps-and-islands rewrite reproduces the sequential
-    greedy BPE state word-for-word — including equal-symbol runs and
-    single-char words."""
+    the per-rule array left-fold reproduces the sequential greedy BPE
+    state word-for-word — including equal-symbol runs and single-char
+    words."""
     import collections
 
     from pyspark.sql import functions as F
@@ -871,14 +871,14 @@ def test_bpe_apply_equals_greedy_reference(spark, docs, n_merges):
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
         bpe_apply_merges,
         bpe_train_merges,
-        bpe_word_state,
+        bpe_word_types,
     )
 
     df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
     merges = bpe_train_merges(df, n_merges=n_merges)
     got = {
         r.word: r.syms
-        for r in bpe_apply_merges(bpe_word_state(df), merges, n_merges=n_merges)
+        for r in bpe_apply_merges(bpe_word_types(df), merges, n_merges=n_merges)
         .groupBy("word")
         .agg(
             F.transform(

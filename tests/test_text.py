@@ -868,51 +868,10 @@ def test_winnow_arrow_tokens_exactness(spark):
         assert got[i] == text._py_tokens(c), repr(c)
 
 
-_WINNOW_ADVERSARIAL = [
-    (1, "alpha beta gamma delta epsilon zeta eta theta"),
-    (2, "alpha beta gamma delta epsilon zeta eta theta"),  # exact dup
-    (3, "the quick brown fox jumps over alpha beta gamma delta"),
-    (4, "  leading and trailing  "),
-    (5, "tabs\there\tand\nnewlines mixed in a longer body of words"),
-    (6, "short doc"),
-    (7, "solo"),
-    (8, ""),
-    (9, None),
-    (10, "a b c d e f g h"),   # NBSP inside a token
-    (11, "x " * 40),                # repeated bigram, trailing space
-]
-
-
-def test_winnow_fingerprint_strategy_identity(spark):
-    """The Arrow strategy (optimization r14) is pinned ROW-IDENTICAL to
-    the relational plan on the adversarial corpus (dups, blanks, NULL
-    text, kept empty tokens, NBSP) — digests, counts, and carried
-    columns all equal."""
-    df = spark.createDataFrame(
-        _WINNOW_ADVERSARIAL, "doc_id long, text string"
-    )
-    rel = sorted(
-        tuple(r) for r in text.with_winnow_fingerprint(
-            df, strategy="relational"
-        ).collect()
-    )
-    arr = sorted(
-        tuple(r) for r in text.with_winnow_fingerprint(
-            df, strategy="arrow"
-        ).collect()
-    )
-    assert rel == arr
-    # auto resolves to arrow and stays identical
-    auto = sorted(
-        tuple(r) for r in text.with_winnow_fingerprint(df).collect()
-    )
-    assert auto == rel
-
-
 def test_winnow_rejects_duplicate_ids(spark):
-    """The sliding window is keyed by id, so duplicate ids would
-    interleave gram streams into corrupt fingerprints — the in-plan
-    uniqueness assert must refuse instead (code-review r6 finding)."""
+    """Fingerprints are per document, so duplicate ids would join each
+    copy to the other's fingerprints — the kernel's uniqueness guard
+    must refuse instead."""
     import pytest
 
     df = spark.createDataFrame(
@@ -1049,56 +1008,11 @@ def test_phrase_search_lossless_and_counts(spark):
         ("q r", 6): 1,
         ("a b a", 9): 2,
     }
-    # both physical strategies (optimization r14) are pinned to the
-    # same token-boundary-exact semantics, full-output-identical
-    for strat in ("auto", "arrow", "relational"):
-        out = T.phrase_search(
-            docs, ["a b c", "q r", "a b a", "q r"], strategy=strat
-        )
-        got = {(r.phrase, r.doc_id): r.n_hits for r in out.collect()}
-        assert got == want, strat
-    rel = sorted(tuple(r) for r in T.phrase_search(
-        docs, ["a b c", "q r", "a b a"], strategy="relational").collect())
-    arr = sorted(tuple(r) for r in T.phrase_search(
-        docs, ["a b c", "q r", "a b a"], strategy="arrow").collect())
-    assert rel == arr
+    out = T.phrase_search(docs, ["a b c", "q r", "a b a", "q r"])
+    got = {(r.phrase, r.doc_id): r.n_hits for r in out.collect()}
+    assert got == want
     with _pytest.raises(ValueError):
         T.phrase_search(docs, ["single"])
-
-
-def test_rake_keywords_strategy_identity(spark):
-    """The Arrow membership table (optimization r14) is pinned
-    ROW-IDENTICAL to the relational posexplode+window plan through the
-    full RAKE scoring pipeline — phrases, occurrence counts, ppm
-    scores, ranks — on an adversarial corpus: stopword boundaries,
-    leading/trailing/ragged whitespace, repeated phrases, single-word
-    docs, blanks, punctuation-glued tokens, uppercase (the
-    lower-before-map identity), and a Greek final-sigma case (the one
-    context-sensitive lowercase mapping)."""
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
-        rake_keywords,
-    )
-
-    rows = [
-        (1, "The quick brown fox jumps over the lazy dog"),
-        (2, "quick brown fox and lazy dog in the yard"),
-        (3, "  Deep learning models for market data  "),
-        (4, "deep learning\tmodels\nfor market data"),
-        (5, "a an and are as at"),          # all stopwords
-        (6, "solo"),
-        (7, ""),
-        (8, "market-data pipelines, with punctuation."),
-        (9, "QUICK BROWN FOX"),
-        (10, "ΦΩΣ ΚΑΛΟ market data"),       # final-sigma lowering
-        (11, "the of to " + "repeat phrase " * 5),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    rel = [tuple(r) for r in rake_keywords(docs, strategy="relational").collect()]
-    arr = [tuple(r) for r in rake_keywords(docs, strategy="arrow").collect()]
-    assert rel == arr
-    auto = [tuple(r) for r in rake_keywords(docs).collect()]
-    assert auto == rel
-    assert len(rel) > 0 and rel[0][3] == 1  # kw_rank starts at 1
 
 
 def test_kn_bigram_scores_hand_computed(spark):
@@ -1265,12 +1179,12 @@ def test_bpe_apply_reproduces_train_final_state(spark):
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
         bpe_apply_merges,
         bpe_train_merges,
-        bpe_word_state,
+        bpe_word_types,
     )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     merges = bpe_train_merges(docs, n_merges=3)
-    encoded = bpe_apply_merges(bpe_word_state(docs), merges, n_merges=3)
+    encoded = bpe_apply_merges(bpe_word_types(docs), merges, n_merges=3)
     got = {
         r.word: r.syms
         for r in encoded.groupBy("word")
@@ -1317,7 +1231,7 @@ def test_bpe_apply_fixed_rules_on_unseen_text(spark):
     ('aaaaa' under (a,a) then (aa,aa) -> ['aaaa', 'a'])."""
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
         bpe_apply_merges,
-        bpe_word_state,
+        bpe_word_types,
     )
 
     docs = spark.createDataFrame(
@@ -1330,7 +1244,7 @@ def test_bpe_apply_fixed_rules_on_unseen_text(spark):
     )
     got = {
         r.word: r.syms
-        for r in bpe_apply_merges(bpe_word_state(docs), merges, n_merges=3)
+        for r in bpe_apply_merges(bpe_word_types(docs), merges, n_merges=3)
         .groupBy("word")
         .agg(
             F.transform(
@@ -1345,51 +1259,34 @@ def test_bpe_apply_fixed_rules_on_unseen_text(spark):
     assert got == {"aaaaa": ["aaaa", "a"], "baab": ["baa", "b"]}
 
 
-def test_bpe_apply_strategies_identical(spark):
-    """The fold strategy (single exchange + codegen'd array left-fold
-    per rule) and the relational strategy (per-round gaps-and-islands
-    window rewrite) produce the IDENTICAL symbol state — on the real
-    sf0.001 corpus under its own learned rules AND on the crafted
-    equal-run / chained-rule cases where left-to-right greedy
-    semantics bite (the dedup_jaccard three-way-identity precedent).
-    ``auto`` resolves to fold."""
-    from conftest import SF_SMALL
+def test_bpe_apply_chained_rules_hand_case(spark):
+    """Left-to-right greedy semantics where they bite: r1 is an
+    equal-symbol run, r2 merges r1's outputs with a raw symbol, and r3
+    is a rule whose merged output (ab) must NOT re-match its own left
+    side ('a') right after the merge.  Hand-worked:
+    aaaaa -> r1 [aa, aa, a] -> r2 [aa, aaa];  baab -> r1 [b, aa, b];
+    abbb -> r3 [ab, b, b]."""
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
         bpe_apply_merges,
-        bpe_train_merges,
-        bpe_word_state,
-    )
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
         bpe_word_types,
     )
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    merges = bpe_train_merges(docs, n_merges=3)
-    state = bpe_word_state(docs)
-    fold = rows(bpe_apply_merges(state, merges, 3, strategy="fold"))
-    rel = rows(bpe_apply_merges(state, merges, 3, strategy="relational"))
-    auto = rows(bpe_apply_merges(state, merges, 3))
-    typed = rows(bpe_apply_merges(bpe_word_types(docs), merges, 3))
-    assert fold == rel == auto == typed and fold
 
     crafted = spark.createDataFrame(
         [(1, "aaaaa baab abbb")], "doc_id long, text string"
     )
     tricky = spark.createDataFrame(
-        # r1 equal-run, r2 merges r1's outputs, r3 left side is itself
-        # a merged symbol (ab) re-matching right after its own merge
         [(1, "a", "a", 0), (2, "aa", "a", 0), (3, "a", "b", 0)],
         "merge_round long, left_sym string, right_sym string, "
         "pair_weight long",
     )
-    st2 = bpe_word_state(crafted)
-    assert rows(bpe_apply_merges(st2, tricky, 3, strategy="fold")) == rows(
-        bpe_apply_merges(st2, tricky, 3, strategy="relational")
+    got = sorted(
+        map(tuple, bpe_apply_merges(bpe_word_types(crafted), tricky, 3).collect())
     )
+    assert got == [
+        ("aaaaa", 1, 0, "aa"), ("aaaaa", 1, 1, "aaa"),
+        ("abbb", 1, 0, "ab"), ("abbb", 1, 1, "b"), ("abbb", 1, 2, "b"),
+        ("baab", 1, 0, "b"), ("baab", 1, 1, "aa"), ("baab", 1, 2, "b"),
+    ]
 
 
 def test_bpe_encode_and_roundtrip_law(spark):
@@ -1511,11 +1408,11 @@ def test_bpe_apply_rejects_malformed_merge_tables(spark):
 
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
         bpe_apply_merges,
-        bpe_word_state,
+        bpe_word_types,
     )
 
     docs = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
-    state = bpe_word_state(docs)
+    state = bpe_word_types(docs)
     schema = (
         "merge_round long, left_sym string, right_sym string, "
         "pair_weight long"
@@ -1635,55 +1532,14 @@ def test_metadata_consistency_audit_hand_case(spark, tmp_path):
             s2["max_abs_delta"]) == (0, 0, 0)
 
 
-def test_bpe_train_strategies_identical(spark):
-    """Trainer fold strategy (zip-slice pair counts + 1-row argmax
-    collect + stacked fold rewrites) == the fully-lazy relational
-    loop, on the real corpus and on a partial-exhaustion case (one
-    mergeable pair, then nothing left -> identical SHORT table)."""
-    from conftest import SF_SMALL
+def test_bpe_train_short_table_on_exhaustion(spark):
+    """Training stops when no adjacent pair is left: 'aa b' has one
+    mergeable pair, so a 3-round request returns the legitimate SHORT
+    table with its single rule."""
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
         bpe_train_merges,
     )
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    fold = rows(bpe_train_merges(docs, n_merges=3, strategy="fold"))
-    rel = rows(bpe_train_merges(docs, n_merges=3, strategy="relational"))
-    auto = rows(bpe_train_merges(docs, n_merges=3))
-    assert fold == rel == auto and len(fold) == 3
-
     short = spark.createDataFrame([(1, "aa b")], "doc_id long, text string")
-    sf_ = rows(bpe_train_merges(short, n_merges=3, strategy="fold"))
-    sr = rows(bpe_train_merges(short, n_merges=3, strategy="relational"))
-    assert sf_ == sr == [(1, "a", "a", 1)]
-
-
-def test_char_entropy_strategy_identity(spark):
-    """The Arrow strategy (optimization r13) is pinned ROW-IDENTICAL to
-    the fold reference plan — repeated chars, single-char floods,
-    whitespace-only (filtered), empty and NULL texts, and a doc long
-    enough to exercise the n·ln(n) terms."""
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
-        char_entropy_profile,
-    )
-
-    rows = [
-        (1, "abcabcabc"),
-        (2, "aaaaaaaaaa"),
-        (3, "   "),           # trim-empty: filtered by both plans
-        (4, ""),
-        (5, None),
-        (6, "the quick brown fox jumps over the lazy dog " * 50),
-        (7, "x"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fold = sorted(
-        tuple(r) for r in char_entropy_profile(docs, strategy="fold").collect()
-    )
-    arrow = sorted(
-        tuple(r) for r in char_entropy_profile(docs, strategy="arrow").collect()
-    )
-    assert fold == arrow
-    assert char_entropy_profile(docs).count() == len(fold)  # auto == arrow
+    got = sorted(map(tuple, bpe_train_merges(short, n_merges=3).collect()))
+    assert got == [(1, "a", "a", 1)]
