@@ -425,8 +425,8 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ---- certified fillers (green rows in CORRECTNESS_r07) ----
         "latency_percentiles": analytics.q_latency_percentiles,
         "item_similarity": market.q_item_similarity,
-        # rfm_segments moved to the r10 window top (ranked-default
-        # re-certification)
+        # rfm_segments moved to the r10 window top (re-certified when
+        # its scoring plan changed)
         "kwic": text.q_kwic,
         "pyds_scan": R.q_pyds_scan,
         "variant_extract": R.q_variant_extract,

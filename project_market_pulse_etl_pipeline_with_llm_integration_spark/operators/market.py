@@ -238,106 +238,6 @@ def q_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("sim_rank")
 
 
-def _ntile_from_rank(rn: F.Column, n: int, k: int) -> F.Column:
-    """Spark/ANSI ntile(k) as PURE ARITHMETIC over a global 1-based rank
-    under the same total order: with q, r = divmod(n, k), the first r
-    buckets take q+1 rows and the rest take q — so
-
-        ntile(rn) = (rn-1) div (q+1) + 1              for rn <= (q+1)*r
-                    r + (rn - (q+1)*r - 1) div q + 1  otherwise
-
-    (n < k degenerates to ntile = rn via r = n).  This is what lets the
-    serial global-window ntile be replaced by a range-partitioned rank
-    at scale — the bucket becomes a pure function of (rank, n)."""
-    q, r = divmod(n, k)
-    boundary = (q + 1) * r
-    if q == 0:
-        return rn
-    # true integer `div` (advice r7): float `/` + cast happened to be
-    # exact for realistic magnitudes but contradicted the all-integer
-    # determinism rule; IntegralDivide keeps every step in longs.
-    def _idiv(a: F.Column, b: int) -> F.Column:
-        return F.call_function("div", a, F.lit(b))
-
-    return F.when(
-        rn <= F.lit(boundary),
-        _idiv(rn - 1, q + 1) + 1,
-    ).otherwise(F.lit(r) + _idiv(rn - F.lit(boundary) - 1, q) + 1)
-
-
-# Below this many customers the three serial ntile windows beat the
-# ranked machinery's three approxQuantile boundary jobs outright
-# (measured 0.41 s vs 2.81 s at sf0.1's 15k customers); above it the
-# single-task sort is the bottleneck and the ranked path takes over.
-# The explicit gate is the bloom-prefilter posture (relational.py:209):
-# the scale-safe method is the DEFAULT branch, the serial one is taken
-# only under a proven-small bound.
-RFM_RANKED_MIN_ROWS = 5_000_000
-
-
-def rfm_scores(
-    per_cust: DataFrame, method: str = "auto", n: int | None = None
-) -> DataFrame:
-    """Quartile scores for the three RFM metrics under pinned total
-    orders (metric DESC, o_custkey ASC).  Two physical strategies with
-    identical output (pinned by test — the ``dense_id`` multi-method
-    precedent), picked by an explicit size gate when ``method="auto"``:
-
-    * ``"window"`` — three global ``ntile(4)`` windows over the
-      post-aggregate one-row-per-customer frame.  Serial (one task
-      sorts |customers| rows three times); taken only below
-      ``RFM_RANKED_MIN_ROWS``, and kept as the test-pinned equivalence
-      twin of the ranked path.
-    * ``"ranked"`` — the 100 TB path: per metric, a global 1-based rank
-      via the range-partitioned dense-id machinery
-      (``ids.with_dense_id`` method="boundaries": driver-embedded
-      quantile boundaries, fully parallel shuffles, no full-table
-      sort on one task) and ntile recovered as PURE ARITHMETIC over
-      (rank, n) — see ``_ntile_from_rank``.  DESC metric orders become
-      ASC keys by exact negation (dates via epoch-day), so the total
-      order is bit-identical to the window form's."""
-    if method == "auto":
-        if n is None:
-            n = per_cust.count()
-        method = "ranked" if n >= RFM_RANKED_MIN_ROWS else "window"
-    if method == "window":
-        r_w = W.orderBy(F.col("last_order").desc(), F.col("o_custkey"))
-        f_w = W.orderBy(F.col("frequency").desc(), F.col("o_custkey"))
-        m_w = W.orderBy(F.col("monetary").desc(), F.col("o_custkey"))
-        return per_cust.select(
-            "o_custkey", "last_order", "frequency", "monetary",
-            F.ntile(4).over(r_w).cast("long").alias("r_score"),
-            F.ntile(4).over(f_w).cast("long").alias("f_score"),
-            F.ntile(4).over(m_w).cast("long").alias("m_score"),
-        )
-    if method != "ranked":
-        raise ValueError(f"unknown rfm method: {method!r}")
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.ids import (
-        with_dense_id,
-    )
-
-    if n is None:
-        n = per_cust.count()
-    keyed = per_cust.select(
-        "o_custkey", "last_order", "frequency", "monetary",
-        (-F.datediff(F.col("last_order"), F.lit("1970-01-01"))).alias("_rk"),
-        (-F.col("frequency")).alias("_fk"),
-        (-F.col("monetary")).alias("_mk"),
-    )
-    out = keyed
-    for key, rank_col in (("_rk", "_rrn"), ("_fk", "_frn"), ("_mk", "_mrn")):
-        out = with_dense_id(
-            out, [F.col(key), F.col("o_custkey")], id_col=rank_col,
-            method="boundaries",
-        )
-    return out.select(
-        "o_custkey", "last_order", "frequency", "monetary",
-        _ntile_from_rank(F.col("_rrn"), n, 4).cast("long").alias("r_score"),
-        _ntile_from_rank(F.col("_frn"), n, 4).cast("long").alias("f_score"),
-        _ntile_from_rank(F.col("_mrn"), n, 4).cast("long").alias("m_score"),
-    )
-
-
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation: per customer — recency (last order
     date), frequency (order count), monetary (DECIMAL-exact spend) —
@@ -345,31 +245,27 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, concatenated into the classic 'RFM cell' marketing segment.
 
     Determinism: counts/dates are exact; spend accumulates in DECIMAL
-    (money_sum); every ntile orders by (metric, customer id) — a total
-    order, so quartile boundaries are engine-stable (the quantile_bins
-    argument).  One shuffle for the per-customer agg (materialized via
-    a lazy localCheckpoint so the gate's count never re-scans orders);
-    scoring runs ``method="auto"``: below RFM_RANKED_MIN_ROWS the three
-    serial ntile windows (provably cheap on a dim-sized frame), above
-    it the ranked path — range-partitioned rank + ntile-from-rank
-    arithmetic, no single-task global sort — with both methods pinned
-    output-identical by test (the dense_id multi-method precedent)."""
+    (money_sum); every ntile orders by (metric DESC, customer id) — a
+    total order, so quartile boundaries are engine-stable (the
+    quantile_bins argument).  One shuffle for the per-customer agg,
+    then three global ``ntile(4)`` windows over its one-row-per-customer
+    output."""
     o = cached_scan(spark, f"{sf_dir}/orders.parquet")
     per_cust = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count("*").alias("frequency"),
         money_sum(F.col("o_totalprice")).alias("monetary"),
-    ).localCheckpoint(eager=False)  # gate count + scoring: one build
-    scored = rfm_scores(per_cust, method="auto")
-    return scored.select(
-        "o_custkey",
-        "last_order",
-        "frequency",
-        "monetary",
-        "r_score",
-        "f_score",
-        "m_score",
-        F.concat_ws("", "r_score", "f_score", "m_score").alias("rfm_cell"),
+    )
+    r_w = W.orderBy(F.col("last_order").desc(), F.col("o_custkey"))
+    f_w = W.orderBy(F.col("frequency").desc(), F.col("o_custkey"))
+    m_w = W.orderBy(F.col("monetary").desc(), F.col("o_custkey"))
+    return per_cust.select(
+        "o_custkey", "last_order", "frequency", "monetary",
+        F.ntile(4).over(r_w).cast("long").alias("r_score"),
+        F.ntile(4).over(f_w).cast("long").alias("f_score"),
+        F.ntile(4).over(m_w).cast("long").alias("m_score"),
+    ).withColumn(
+        "rfm_cell", F.concat_ws("", "r_score", "f_score", "m_score")
     )
 
 

@@ -14,6 +14,17 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
 
 
+def build_jobs(spark, group, build) -> int:
+    """Spark jobs started while ``build()`` constructs a query."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "query construction")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -8,7 +8,7 @@ from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators import dedup
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, build_jobs
 
 
 def _docs(spark, texts):
@@ -318,17 +318,6 @@ _CAP_ARMS = {
 }
 
 
-def _build_jobs(spark, group, build) -> int:
-    """Spark jobs started while ``build()`` constructs a query."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "near-dup query construction")
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("arm", sorted(_CAP_ARMS))
 def test_cap_guard_in_plan(spark, arm):
     """The near-dup cap is one in-plan guard: a degenerate corpus fails
@@ -351,9 +340,9 @@ def test_cap_guard_in_plan(spark, arm):
     assert uncapped
     assert sorted(op(healthy, 1_000).collect()) == uncapped
 
-    assert _build_jobs(
+    assert build_jobs(
         spark, f"cap-guard-{arm}-capped", lambda: op(healthy, 1_000)
-    ) == _build_jobs(spark, f"cap-guard-{arm}-uncapped", lambda: op(healthy, None))
+    ) == build_jobs(spark, f"cap-guard-{arm}-uncapped", lambda: op(healthy, None))
 
 
 def test_editdistance_matches_bruteforce_random_corpus(spark):

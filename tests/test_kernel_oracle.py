@@ -16,11 +16,16 @@ literal and hashes the rest:
 ``dedup_winnow`` fixes ``min_shared=2``, which finds no pair on the
 shared-run corpus, so that case also pins ``winnow_pairs(min_shared=1)``
 by literal.
+
+``rfm_segments`` reads ``orders`` instead: its cases are the sf0.001
+orders table and tiny corpora whose customer counts split unevenly
+into quartiles, with ties on every metric.
 """
 
 from __future__ import annotations
 
 import hashlib
+from datetime import datetime, timedelta
 
 import duckdb
 import pyarrow as pa
@@ -28,6 +33,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entry
+from conftest import SF_SMALL
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.dedup import (
     winnow_pairs,
 )
@@ -188,3 +194,56 @@ def test_kernel_matches_oracle(spark, tmp_path, name, corpus, gap, pairs_at_1):
         docs = spark.read.parquet(path)
         got = sorted(map(tuple, winnow_pairs(docs, min_shared=1).collect()))
         assert got == pairs_at_1
+
+
+def _write_orders(sf_dir, n_customers: int) -> str:
+    """``orders`` for ``n_customers`` customers whose three RFM metrics
+    tie in groups, so every quartile boundary falls on a tie that only
+    the customer id breaks: order count 1..3 (cycle of 3), spend
+    60.00 or 120.00 (cycle of 4, split evenly over the orders, so equal
+    spends come from different order counts), last order on one of two
+    days (cycle of 2)."""
+    path = f"{sf_dir}/orders.parquet"
+    day0 = datetime(1995, 3, 1)
+    rows = []
+    for c in range(n_customers):
+        freq = 1 + c % 3
+        spend = 60.0 * (1 + (c // 2) % 2)
+        for k in range(freq):
+            rows.append((7 * c + 3, day0 + timedelta(days=c % 2 - 10 * k),
+                         spend / freq))
+    pq.write_table(
+        pa.table({
+            "o_orderkey": pa.array(range(len(rows)), pa.int64()),
+            "o_custkey": pa.array([r[0] for r in rows], pa.int64()),
+            "o_orderstatus": pa.array(["F"] * len(rows), pa.string()),
+            "o_totalprice": pa.array([r[2] for r in rows], pa.float64()),
+            "o_orderdate": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "o_orderpriority": pa.array(["1-URGENT"] * len(rows), pa.string()),
+        }),
+        path,
+    )
+    return path
+
+
+@pytest.mark.parametrize("n_customers", [None, 1, 3, 4, 5, 17],
+                         ids=["sf0.001", "1", "3", "4", "5", "17"])
+def test_rfm_segments_matches_oracle(spark, tmp_path, n_customers):
+    if n_customers is None:
+        sf_dir = SF_SMALL
+        path = f"{sf_dir}/orders.parquet"
+    else:
+        sf_dir = str(tmp_path)
+        path = _write_orders(sf_dir, n_customers)
+    sdf = entry.queries()["rfm_segments"](spark, sf_dir)
+    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW orders AS SELECT * FROM '{path}'")
+    rel = con.sql(entry.oracle_sql()["rfm_segments"])
+    ocols, orows = [d[0] for d in rel.description], rel.fetchall()
+
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows) > 0
+    if n_customers is not None:
+        assert len(srows) == n_customers
+    assert table_hash(scols, srows) == table_hash(ocols, orows)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, build_jobs
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators import (
     graph,
@@ -598,51 +598,14 @@ def test_label_propagation_tiebreak_min(spark):
     assert labels[5] == 1
 
 
-def test_rfm_ranked_method_matches_window(spark):
-    """The 100 TB rfm path (range-partitioned rank + ntile arithmetic)
-    must produce bit-identical quartiles to the global-window ntile —
-    the dense_id multi-method precedent applied to segmentation."""
-    from pyspark.sql import functions as F
-
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.market import (
-        rfm_scores,
-    )
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.relational import (
-        money_sum,
-    )
-
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("last_order"),
-        F.count("*").alias("frequency"),
-        money_sum(F.col("o_totalprice")).alias("monetary"),
-    )
-    key = lambda r: (r.o_custkey, r.r_score, r.f_score, r.m_score)  # noqa: E731
-    w = sorted(key(r) for r in rfm_scores(per_cust, "window").collect())
-    ranked = sorted(key(r) for r in rfm_scores(per_cust, "ranked").collect())
-    assert w == ranked and len(w) > 100
-
-
-def test_ntile_from_rank_matches_spark_ntile(spark):
-    """_ntile_from_rank replicates Spark's ntile() for awkward n/k
-    combinations (n < k, n % k != 0, n == k)."""
-    from pyspark.sql import Window, functions as F
-
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.market import (
-        _ntile_from_rank,
-    )
-
-    for n in (1, 3, 4, 5, 10, 17, 100):
-        df = spark.range(1, n + 1).withColumnRenamed("id", "rn")
-        want = (
-            spark.range(n)
-            .withColumn("nt", F.ntile(4).over(Window.orderBy("id")))
-            .selectExpr("id + 1 AS rn", "nt")
-        )
-        got = df.select("rn", _ntile_from_rank(F.col("rn"), n, 4).alias("nt"))
-        assert {tuple(r) for r in got.collect()} == {
-            tuple(r) for r in want.collect()
-        }, f"n={n}"
+def test_rfm_segments_builds_without_jobs(spark):
+    """Building rfm_segments plans the aggregate and its three ntile
+    windows without running any of them: no Spark job starts before
+    the caller's action."""
+    market.q_rfm_segments(spark, SF_SMALL)  # resolves the orders scan once
+    assert build_jobs(
+        spark, "rfm-build", lambda: market.q_rfm_segments(spark, SF_SMALL)
+    ) == 0
 
 
 def test_kcore_peel_known_graph(spark):

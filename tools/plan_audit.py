@@ -80,10 +80,9 @@ NOPART_WINDOW_OK = {
     "vocab_encode": "vocab capped at 200 rows by contract",
     "vocab_roundtrip": "vocab capped at 200 rows by contract",
     "skyline_pareto": "phase-2 input = partition-local frontier survivors",
-    "rfm_segments": "ntile windows taken ONLY under the explicit runtime "
-                    "size gate (|customers| < RFM_RANKED_MIN_ROWS = 5e6, "
-                    "market.py); at scale the auto method switches to the "
-                    "ranked path — pinned output-identical by test",
+    "rfm_segments": "three ntile(4) quartile windows over the "
+                    "per-customer aggregate — one row per customer "
+                    "after the aggregate",
     "ab_uplift_ci": "replicate-uplift frame bounded by B = 32 rows",
     "mixture_waterfill": "post-agg per-source supply frame — O(|sources|) "
                          "rows (tens), the water-level cut windows",
