@@ -9,19 +9,37 @@ against external oracles), Arrow transfers for the Pandas-UDF slow path.
 ``spark.sql.shuffle.partitions`` defaults to the local core count here;
 on a real cluster it should be ~2-3x total executor cores, and AQE
 coalescing makes over-provisioning cheap.
+
+On a ``local[...]`` master the Python workers fork from ``_worker_daemon``,
+pyspark's own daemon with ``zipimport.zipimporter.invalidate_caches`` made a
+no-op.  pyspark calls ``importlib.invalidate_caches()`` at the start of every
+task, and under CPython 3.11 that makes each zipimporter on the worker path
+(``pyspark.zip``, the py4j zip, the package zip) re-read its whole archive
+directory: 0.2-0.3 s of set-up per ``mapInPandas`` task on 4 vCPUs.
+Skipping it cannot serve stale code: those zips never change within a
+session, ``_ship_package`` writes a fresh, uniquely named zip per process,
+and a zip added later by ``addPyFile`` gets a new zipimporter on its first
+import.  ``FileFinder`` caches are still invalidated, so a ``.py`` shipped
+mid-session imports too.  Other masters keep pyspark's default daemon (their workers
+need not see this package's directory; see ``_worker_daemon_conf``).
 """
 
 from __future__ import annotations
 
 import atexit
+import logging
 import os
+import re
 import tempfile
 import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
 
+_log = logging.getLogger(__name__)
+
 _PKG_ZIP: str | None = None
+_DAEMON_MODULE = f"{__package__}._worker_daemon"
 
 # Sessions already pinned by ensure_engine_confs.  The driver calls every
 # query through _wrap -> ensure_engine_confs, so a full bench run makes
@@ -47,28 +65,60 @@ def _ship_package(spark: SparkSession) -> None:
     closures reference package functions by module path).  Zips the
     package once per process, into a file of its own so that concurrent
     processes never rewrite each other's zip, and registers it via
-    addPyFile."""
+    addPyFile.
+
+    A failure to build the zip raises here, not later as a worker's
+    ``ModuleNotFoundError``; only a session that refuses ``addPyFile``
+    (e.g. one without a SparkContext) is tolerated, with a warning."""
     global _PKG_ZIP
+    if _PKG_ZIP is None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        pkg_name = os.path.basename(pkg_dir)
+        fd, zip_path = tempfile.mkstemp(prefix=f"{pkg_name}_", suffix=".zip")
+        os.close(fd)
+        atexit.register(_remove_quietly, zip_path)
+        with zipfile.ZipFile(zip_path, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
+                        zf.write(full, rel)
+        _PKG_ZIP = zip_path
     try:
-        if _PKG_ZIP is None:
-            pkg_dir = os.path.dirname(os.path.abspath(__file__))
-            pkg_name = os.path.basename(pkg_dir)
-            fd, zip_path = tempfile.mkstemp(prefix=f"{pkg_name}_", suffix=".zip")
-            os.close(fd)
-            atexit.register(_remove_quietly, zip_path)
-            with zipfile.ZipFile(zip_path, "w") as zf:
-                for root, _dirs, files in os.walk(pkg_dir):
-                    for fn in files:
-                        if fn.endswith(".py"):
-                            full = os.path.join(root, fn)
-                            rel = os.path.join(
-                                pkg_name, os.path.relpath(full, pkg_dir)
-                            )
-                            zf.write(full, rel)
-            _PKG_ZIP = zip_path
         spark.sparkContext.addPyFile(_PKG_ZIP)
-    except Exception:
-        pass  # already added, or a deployment where addPyFile is restricted
+    except Exception as exc:
+        _log.warning(
+            "package zip %s not shipped (%s): executors that cannot import "
+            "%s from their own path will fail", _PKG_ZIP, exc, __package__,
+        )
+
+
+def _worker_daemon_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """The confs that fork this session's Python workers from
+    ``_worker_daemon`` (see the module docstring), given the master URL and
+    the caller's ``extra_conf``.
+
+    Only a ``local[...]`` master gets them: its workers run on this machine
+    and can import the module from the package's parent directory, which
+    goes on their ``PYTHONPATH`` (the daemon starts before any
+    ``addPyFile``), ahead of a ``PYTHONPATH`` the caller passes.  A cluster
+    worker that could not import it would fail every Python UDF, so any
+    other master keeps pyspark's daemon, with a warning."""
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        _log.warning(
+            "master %s is not local: Python workers keep pyspark's daemon, "
+            "not %s", master, _DAEMON_MODULE,
+        )
+        return {}
+    paths = (
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        extra_conf.get("spark.executorEnv.PYTHONPATH"),
+    )
+    return {
+        "spark.python.daemon.module": _DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(p for p in paths if p),
+    }
 
 
 def _default_driver_memory() -> str:
@@ -97,6 +147,12 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
 
     Idempotent and memoized per session object: the first call pins and
     ships, later calls return immediately (see _PINNED above).
+
+    The worker daemon (``spark.python.daemon.module``, see the module
+    docstring) is a static conf, read when the SparkContext starts, so it
+    cannot be set here: a session built without ``get_spark``, such as the
+    one ``__spark_entry__``'s harness hands in, keeps pyspark's default
+    daemon and its per-task zip re-read.
     """
     if spark in _PINNED:
         return spark
@@ -143,7 +199,8 @@ def get_spark(
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism (benchmark
     harnesses set the core count through it); ``SPARK_GRAFT_MASTER``
-    overrides the master URL.
+    overrides the master URL.  A local master also gets the worker daemon
+    confs of ``_worker_daemon_conf``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -196,7 +253,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in {**extra_conf, **_worker_daemon_conf(master, extra_conf)}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

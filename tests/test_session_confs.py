@@ -1,16 +1,31 @@
 """Pin the r13 ensure_engine_confs memoization: first call pins the
 required runtime confs, later calls are free no-ops, and a child session
-(spark.newSession(), used by q_recursive_cte) is pinned independently."""
+(spark.newSession(), used by q_recursive_cte) is pinned independently.
+
+Also pin the local worker daemon (``_worker_daemon``): tasks see the no-op
+``zipimporter.invalidate_caches``, modules shipped after the first Python
+task still import, and only a local master gets the daemon confs."""
 
 from __future__ import annotations
 
+import logging
 import os
+import types
+import uuid
+import zipfile
 
+import pytest
+
+from project_market_pulse_etl_pipeline_with_llm_integration_spark import session
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.session import (
+    _DAEMON_MODULE,
     _PINNED,
     _default_driver_memory,
+    _worker_daemon_conf,
     ensure_engine_confs,
 )
+
+PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
 
 
 def test_ensure_engine_confs_pins_and_memoizes(spark):
@@ -40,11 +55,6 @@ def test_package_zip_private_to_each_process(monkeypatch):
     """Each process zips the package into its own file: a second process
     (simulated by clearing the per-process memo) gets a new path and
     leaves the first zip, still registered elsewhere, untouched."""
-    import types
-    import zipfile
-
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark import session
-
     shipped: list[str] = []
     fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
     monkeypatch.setattr(session, "_PKG_ZIP", None)
@@ -69,3 +79,103 @@ def test_default_driver_memory_half_of_ram_capped_at_48g(monkeypatch):
     assert _default_driver_memory() == "8192m"
     monkeypatch.setattr(os, "sysconf", fake_sysconf(512 * 2**30 // 4096))
     assert _default_driver_memory() == "49152m"
+
+
+def _on_workers(spark, probe) -> set[str]:
+    """``str(probe())`` in a mapInPandas task on each of 4 partitions; the
+    distinct results."""
+
+    def run(batches):
+        import pandas as pd
+
+        for _ in batches:
+            yield pd.DataFrame({"v": [str(probe())]})
+
+    rows = spark.range(0, 4, 1, 4).mapInPandas(run, "v string").collect()
+    return {r.v for r in rows}
+
+
+def test_tasks_see_the_no_op_zip_invalidation(spark):
+    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == _DAEMON_MODULE
+    where = _on_workers(
+        spark, lambda: __import__("zipimport").zipimporter.invalidate_caches.__code__.co_filename
+    )
+    assert where == {os.path.join(PKG_PARENT, *_DAEMON_MODULE.split(".")) + ".py"}
+
+
+def test_zip_shipped_after_first_task_imports_on_workers(spark, tmp_path):
+    _on_workers(spark, lambda: 1)  # workers up, their zipimporters built
+    name = f"late_zip_{uuid.uuid4().hex}"
+    path = tmp_path / f"{name}.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{name}.py", "VALUE = 'from-zip'\n")
+    spark.sparkContext.addPyFile(str(path))
+    assert _on_workers(spark, lambda: __import__(name).VALUE) == {"from-zip"}
+
+
+def test_py_shipped_after_first_task_imports_on_workers(spark, tmp_path):
+    """A plain .py lands in the SparkFiles directory, already on the worker
+    path under a FileFinder.  That finder also refreshes when the
+    directory's mtime moves, so the import alone cannot tell whether its
+    per-task invalidation still runs: check that the method is importlib's
+    own as well."""
+
+    def refresh_module():
+        import importlib.machinery
+
+        return importlib.machinery.FileFinder.invalidate_caches.__module__
+
+    assert _on_workers(spark, refresh_module) == {refresh_module()}
+    name = f"late_py_{uuid.uuid4().hex}"
+    path = tmp_path / f"{name}.py"
+    path.write_text("VALUE = 'from-py'\n")
+    spark.sparkContext.addPyFile(str(path))
+    assert _on_workers(spark, lambda: __import__(name).VALUE) == {"from-py"}
+
+
+@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]", "local[4,2]"])
+def test_daemon_conf_on_local_masters(master):
+    assert _worker_daemon_conf(master, {}) == {
+        "spark.python.daemon.module": _DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": PKG_PARENT,
+    }
+
+
+@pytest.mark.parametrize(
+    "master", ["spark://host:7077", "yarn", "k8s://https://host:443", "local-cluster[2,1,1024]"]
+)
+def test_daemon_conf_skipped_with_a_warning_on_other_masters(master, caplog):
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        assert _worker_daemon_conf(master, {}) == {}
+    warned = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warned) == 1 and _DAEMON_MODULE in warned[0] and master in warned[0]
+
+
+def test_daemon_conf_merges_a_caller_pythonpath():
+    conf = _worker_daemon_conf("local[2]", {"spark.executorEnv.PYTHONPATH": "/a:/b"})
+    assert conf["spark.executorEnv.PYTHONPATH"] == os.pathsep.join([PKG_PARENT, "/a:/b"])
+
+
+def test_package_zip_build_failure_raises(monkeypatch):
+    def broken(*_args, **_kwargs):
+        raise OSError("disk full")
+
+    shipped: list[str] = []
+    fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
+    monkeypatch.setattr(session, "_PKG_ZIP", None)
+    monkeypatch.setattr(zipfile, "ZipFile", broken)
+    with pytest.raises(OSError, match="disk full"):
+        session._ship_package(fake)
+    assert session._PKG_ZIP is None and shipped == []
+
+
+def test_package_zip_refused_by_add_py_file_warns(monkeypatch, caplog):
+    def refuse(_path):
+        raise RuntimeError("addPyFile not supported")
+
+    fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=refuse))
+    monkeypatch.setattr(session, "_PKG_ZIP", None)
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session._ship_package(fake)
+    assert session._PKG_ZIP is not None
+    assert any("addPyFile not supported" in r.getMessage() for r in caplog.records)
