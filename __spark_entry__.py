@@ -4050,18 +4050,22 @@ def oracle_sql() -> dict[str, str]:
             "FROM documents GROUP BY 1"
         ),
         "dedup_jaccard": (
-            # |blk_a - blk_b| <= 1 == the engine's own-bucket+successor
-            # emission: adjacent length buckets always meet
+            # an inverted shingle index: a pair's shared-shingle count is
+            # |A ∩ B| (shingles are distinct per doc).  Length buckets
+            # |blk_a - blk_b| <= 1 meet (the engine's own-bucket +
+            # successor emission) through an equi-join: b posts under its
+            # own bucket and both neighbours, so each pair meets once
             f"WITH toks AS (SELECT doc_id AS id, {_TOKS} AS tk FROM documents), "
             "t AS (SELECT id, list_distinct([array_to_string(tk[i:i+2], ' ') "
             "FOR i IN generate_series(1, greatest(len(tk)-2, 1))]) AS sh, "
-            "len(tk) // 16 AS blk FROM toks) "
-            "SELECT a.id AS id_a, b.id AS id_b, "
-            "round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / "
-            "(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard "
-            "FROM t a JOIN t b ON abs(a.blk - b.blk) <= 1 AND a.id < b.id "
-            "WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / "
-            "(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.6"
+            "len(tk) // 16 AS blk FROM toks), "
+            "p AS (SELECT id, blk, len(sh) AS n, unnest(sh) AS g FROM t), "
+            "q AS (SELECT id, n, g, blk + d AS blk FROM p, (VALUES (-1), (0), (1)) v(d)), "
+            "c AS (SELECT a.id AS id_a, b.id AS id_b, a.n AS n_a, b.n AS n_b, "
+            "count(*) AS k FROM p a JOIN q b ON a.blk = b.blk AND a.g = b.g "
+            "AND a.id < b.id GROUP BY ALL) "
+            "SELECT id_a, id_b, round(CAST(k AS DOUBLE) / (n_a + n_b - k), 6) AS jaccard "
+            "FROM c WHERE CAST(k AS DOUBLE) / (n_a + n_b - k) >= 0.6"
         ),
         "ann_bruteforce": (
             "WITH q AS (SELECT vec_id AS query_id, embedding AS query_vec FROM embeddings "

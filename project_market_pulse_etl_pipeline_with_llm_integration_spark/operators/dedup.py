@@ -145,60 +145,6 @@ def _prefix_len(sz: Column, threshold: float) -> Column:
     return (sz - ceil_t_sz + 1).cast("int")
 
 
-# "auto" strategy switch point: when the average number of
-# within-block pairs PER EMITTED ROW exceeds this, the blocked
-# strategy's quadratic enumeration term dominates and "indexed" wins.
-# Calibrated r12 on the realistic-sf1 fixture (tools/sf1_validate.py):
-# at 785 pairs/row (sf0.1) blocked wins 1.3 s vs 3.4 s; at 6529
-# pairs/row (sf1) indexed wins 13.1 s vs 69.9 s — the raw crossover is
-# ~3000 pairs/row, and the threshold sits below it because the failure
-# mode is asymmetric (blocked degrades QUADRATICALLY past the
-# crossover; indexed is only ~2.7x worse below it).
-AUTO_INDEXED_PAIRS_PER_ROW = 1024
-
-
-def _auto_strategy(skinny: DataFrame) -> str:
-    """Pick the physical pair-generation strategy from the measured
-    block profile: ONE scalar agg over a skinny block-key-only
-    projection (tokenize + size, NO shingle hashing — measured ~0.2 s
-    at sf0.1 vs ~0.85 s when the agg was fed the full shingle frame).
-    Blocked enumerates EVERY within-block pair before the prefix
-    filter can reject it — cost Σ_blk n²/2 regardless of
-    true-duplicate volume — so the decision statistic is that
-    enumeration volume per row.  Returns a plan-time choice (a bounded
-    1-row collect, the documented driver-side pattern); the two
-    strategies are output-identical (pinned by test), so the switch
-    can never change results."""
-    if _block_pairs_per_row(skinny) > AUTO_INDEXED_PAIRS_PER_ROW:
-        return "indexed"
-    return "blocked"
-
-
-def _block_pairs_per_row(skinny: DataFrame) -> float:
-    st = (
-        skinny.groupBy("blk")
-        .count()
-        .agg(
-            F.sum(F.col("count") * (F.col("count") - 1) / 2.0).alias("pairs"),
-            F.sum("count").alias("rows"),
-        )
-        .collect()[0]
-    )
-    rows, pairs = st["rows"] or 0, st["pairs"] or 0.0
-    return (pairs / rows) if rows else 0.0
-
-
-def _jaccard_block_skinny(
-    df: DataFrame, text_col: str, block_col: Column | None
-) -> DataFrame:
-    """The block-key-only projection under jaccard_pairs' emission rule
-    (custom key once; default length bucket own+next)."""
-    if block_col is not None:
-        return df.select(block_col.alias("blk"))
-    _bk = (F.size(tokens(text_col)) / _JACCARD_BLOCK_WIDTH).cast("int")
-    return df.select(F.explode(F.array(_bk, _bk + 1)).alias("blk"))
-
-
 def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -208,7 +154,6 @@ def jaccard_pairs(
     block_col: Column | None = None,
     num_partitions: int | None = None,
     max_block_size: int | None = None,
-    strategy: str = "blocked",
 ) -> DataFrame:
     """All pairs (a<b) with token-shingle Jaccard >= threshold, joined
     within blocks.
@@ -227,61 +172,31 @@ def jaccard_pairs(
     as the verifier.
 
     ``max_block_size`` guards against degenerate blocking (e.g. a
-    length-uniform corpus collapsing into one bucket, which silently
-    turns the "blocked" join into all-pairs): when set, the a-side of
-    either strategy's join carries ``_guard_inplan``, so a block over
-    the cap fails the job before the join output materializes.
+    length-uniform corpus collapsing into one bucket): when set, the
+    a-side of the join carries ``_guard_inplan``, so a block over the
+    cap fails the job before the join output materializes.
 
     ``num_partitions`` spreads the CPU-bound shingle/intersect work when
     the input's scan partitioning is coarser than the core count (small
     single-file inputs); leave None when the source is already well
     partitioned.
 
-    Two physical strategies, IDENTICAL output (pinned by test):
-
-    * ``"blocked"`` (default) — one equi-join on the block key carrying
-      the shingle arrays, then per-pair verification.  Verification is
-      two-tier: an O(prefix) ``arrays_overlap`` on the sorted-hash
-      prefixes (an exactness-preserving necessary condition — see
-      ``_prefix_len``) rejects ~90% of block pairs before the O(m+n)
-      full intersection runs.  Cheapest while blocks fit comfortably in
-      a task (the common case with length bucketing); cost grows with
-      the within-block pair count.
-
-    * ``"indexed"`` — the prefix hashes themselves become join keys:
-      explode each doc's prefix, equi-join skinny (id, size, hash) rows
-      on (block, prefix_hash), dedup candidate pairs, then attach the
-      arrays and verify.  The within-block quadratic term collapses to
-      ~(true near-dups + shared-prefix noise); this is the 100 TB
-      regime where blocks hold 10^5+ docs and enumerating block pairs —
-      even to reject them cheaply — is itself the bottleneck.  Costs ~3
-      extra shuffles, so it loses at small scale.
-
-    * ``"auto"`` — measure the within-block pair volume with one scalar
-      agg over the skinny frame and pick between the two (see
-      ``_auto_strategy``; threshold ``AUTO_INDEXED_PAIRS_PER_ROW``).
-      The r12 sf1 validation caught the blocked default going 54x on a
-      realistic 10x corpus (block population grows linearly with corpus
-      size at fixed length distribution, so block PAIRS grow
-      quadratically) — auto is the scale-safe default for corpus-sized
-      inputs.
-
-      LAZINESS CONTRACT: ``strategy="auto"`` runs that probe — one
-      bounded Spark job (a 1-row scalar agg) — EAGERLY at
-      DataFrame-construction time, freezing the physical choice before
-      execution; ``"blocked"`` and ``"indexed"`` construct purely
-      lazily.  Callers that only compose or inspect the returned frame
-      (no action intended yet) and must not trigger cluster work
-      should pass an explicit strategy."""
+    The plan is ppjoin's prefix filter with the prefix hashes as join
+    keys: each doc's sorted-hash prefix (``_prefix_len``) is exploded,
+    skinny (id, size, hash) rows are equi-joined on (block, prefix
+    hash), candidate pairs are deduplicated, and only then are the
+    shingle arrays attached for the full intersection.  A pair that
+    shares no prefix hash cannot clear the threshold, so it is never
+    built.  Cost: the join emits ~(true near-dups + shared-prefix noise)
+    rows, not every within-block pair, so it grows with the docs'
+    prefix lengths rather than with the square of the block
+    populations; it takes four shuffles (prefix join, candidate
+    distinct, two attach joins) after the shared shingle pass.
+    Building the frame runs no job of its own; when ``num_partitions``
+    spreads a narrow scan, AQE runs that shuffle's map stage while it
+    plans the lazy ``localCheckpoint`` below."""
     if num_partitions:
         df = spread_if_narrow(df, num_partitions)
-    if strategy == "auto":
-        # decide BEFORE building the shingle frame, from a block-key-
-        # only projection (the same emission rule as the real blocking
-        # below) — this is the documented EAGER probe (one bounded
-        # Spark job at construction time; see the docstring's laziness
-        # contract)
-        strategy = _auto_strategy(_jaccard_block_skinny(df, text_col, block_col))
     if block_col is not None:
         base = df.select(
             F.col(id_col).alias("id"),
@@ -304,14 +219,13 @@ def jaccard_pairs(
             F.explode(F.array(F.col("home"), F.col("home") + 1)).alias("blk"),
             "home",
         )
-    # Share the shingle pass between the two self-join sides (and the
-    # guard): without this the tokenize->shingle->hash->sort pipeline
+    # Share the shingle pass between the self-join sides, the attach and
+    # the guard: without this the tokenize->shingle->hash->sort pipeline
     # runs once PER SIDE — measured 1.9s -> 1.6s steady-state and 45s ->
     # 4s cold at sf0.1 (the duplicated codegen was also what JIT warmed
-    # so slowly).  Same pattern the indexed strategy and minhash use; on
-    # a cluster this is a bounded (id, hashes, band) spill, never bodies.
+    # so slowly).  Same pattern as minhash; on a cluster this is a
+    # bounded (id, hashes, band) spill, never bodies.
     base = base.localCheckpoint(eager=False)
-    # both strategies take their a-side from ``guarded``
     guarded = base
     if max_block_size is not None:
         guarded = _guard_inplan(
@@ -319,80 +233,25 @@ def jaccard_pairs(
             "blocking degenerated toward all-pairs; supply a sharper "
             "block_col or use minhash_candidate_pairs()",
         )
-    if strategy == "indexed":
-        return _jaccard_pairs_indexed(base, guarded, threshold)
-    if strategy != "blocked":
-        raise ValueError(f"jaccard_pairs: unknown strategy {strategy!r}")
-    a = guarded.select(
-        F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-        F.col("blk").alias("blk"), F.col("home").alias("home_a"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-        F.col("blk").alias("blk"), F.col("home").alias("home_b"),
-    )
-    prefix_hit = F.arrays_overlap(
-        F.slice("sh_a", 1, _prefix_len(F.size("sh_a"), threshold)),
-        F.slice("sh_b", 1, _prefix_len(F.size("sh_b"), threshold)),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        a.join(b, ["blk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # same-home pairs meet in BOTH emitted buckets; keeping only the
-        # meeting at greatest(home_a, home_b) makes each pair survive in
-        # exactly one bucket — a cheap pre-intersect filter instead of a
-        # dropDuplicates shuffle of the fat shingle-array payloads
-        .filter(F.col("blk") == F.greatest("home_a", "home_b"))
-        # size-ratio prune: J(A,B) = |A∩B|/|A∪B| <= min(|A|,|B|)/max(|A|,|B|),
-        # so pairs failing min >= t*max can never clear the threshold —
-        # array lengths are O(1) to read vs the O(n log n) intersection.
-        # Integer cross-multiplied: a float t·max prunes boundary pairs
-        # when t's binary form rounds up (the containment 0.8 incident)
-        .filter(
-            F.least(F.size("sh_a"), F.size("sh_b")) * 1_000_000
-            >= F.lit(int(round(threshold * 1_000_000)))
-            * F.greatest(F.size("sh_a"), F.size("sh_b"))
-        )
-        # tier-1 verify: O(prefix) overlap check (lossless, see above)
-        .filter(prefix_hit)
-        # tier-2 verify: the full O(m+n) intersection on survivors
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _jaccard_pairs_indexed(
-    base: DataFrame, guarded: DataFrame, threshold: float
-) -> DataFrame:
-    """The "indexed" strategy body: skinny prefix-hash equi-join for the
-    huge-block regime (see jaccard_pairs docstring).  ``base`` carries
-    (id, sorted sh, blk, home) with bucket duplication already applied
-    and the shingle pass already checkpoint-shared by the caller;
-    ``guarded`` is ``base`` with the caller's block cap (or ``base``
-    itself), and feeds the join's a-side."""
     sz = F.size("sh")
 
-    def prefixes(frame: DataFrame) -> DataFrame:
+    def prefixes(frame: DataFrame, side: str) -> DataFrame:
         return frame.select(
-            "id", "blk", "home", sz.alias("sz"),
+            F.col("id").alias(f"id_{side}"), F.col("home").alias(f"home_{side}"),
+            sz.alias(f"sz_{side}"), "blk",
             F.explode(F.slice("sh", 1, _prefix_len(sz, threshold))).alias("ptok"),
         )
 
-    a = prefixes(guarded).select(
-        F.col("id").alias("id_a"), F.col("home").alias("home_a"),
-        F.col("sz").alias("sz_a"), "ptok", "blk",
-    )
-    b = prefixes(base).select(
-        F.col("id").alias("id_b"), F.col("home").alias("home_b"),
-        F.col("sz").alias("sz_b"), "ptok", "blk",
-    )
     cands = (
-        a.join(b, ["blk", "ptok"])
+        prefixes(guarded, "a").join(prefixes(base, "b"), ["blk", "ptok"])
         .filter(F.col("id_a") < F.col("id_b"))
+        # same-home pairs meet in BOTH emitted buckets; keeping only the
+        # meeting at greatest(home_a, home_b) drops the copy before the
+        # distinct
         .filter(F.col("blk") == F.greatest("home_a", "home_b"))
+        # size-ratio prune: J(A,B) <= min(|A|,|B|)/max(|A|,|B|).
+        # Integer cross-multiplied: a float t·max prunes boundary pairs
+        # when t's binary form rounds up (the containment 0.8 incident)
         .filter(
             F.least("sz_a", "sz_b") * 1_000_000
             >= F.lit(int(round(threshold * 1_000_000)))
@@ -426,7 +285,6 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(
         df, n=3, threshold=0.6,
         num_partitions=spark.sparkContext.defaultParallelism,
-        strategy="auto",
     )
 
 
@@ -897,20 +755,20 @@ def q_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
       path from the pipeline's hashed-long verify stage) clears the
       threshold.  Structural, not data-dependent: it holds at any sf
       unless the hashed verify math diverges from first principles.
-      (Previously this was containment in blocked ``jaccard_pairs``,
-      which is data-dependent — the exact blocking's documented recall
+      (Previously this was containment in ``jaccard_pairs``' output,
+      which is data-dependent — its length buckets' documented recall
       bound can miss a genuine large-length-gap pair that LSH finds,
       flipping the row red with nothing wrong.)
-    * ``recall_ok`` — LSH finds >= 0.8 of the pairs the blocked exact
-      baseline finds (measured at sf0.01: 1.0).
+    * ``recall_ok`` — LSH finds >= 0.8 of the pairs that exact Jaccard
+      (``jaccard_pairs``, same n and threshold) finds (measured at
+      sf0.01: 1.0).
 
     Everything upstream is seeded and the corpus fixed, so both booleans
     are hard oracle-checkable constants."""
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
     par = spark.sparkContext.defaultParallelism
     exact = (
-        jaccard_pairs(df, n=3, threshold=0.6, num_partitions=par,
-                      strategy="auto")
+        jaccard_pairs(df, n=3, threshold=0.6, num_partitions=par)
         .select("id_a", "id_b")
         .withColumn("in_exact", F.lit(1))
     )

@@ -47,9 +47,16 @@ _DAEMON_MODULE = f"{__package__}._worker_daemon"
 # already-shipped package zip measured 4.4 ms/call (~4.5 s per full bench)
 # plus one WARN log line each (optimization r13, guide §1.2/§7.3 —
 # driver-side fixed overhead).  Runtime confs persist on the session and
-# addPyFile is per-SparkContext, so pinning once per session is exactly
-# equivalent; a WeakSet keeps dead sessions collectable.
+# so are pinned once per session; a WeakSet keeps dead sessions
+# collectable.
 _PINNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+
+# (SparkContext, zip) of the last addPyFile.  addPyFile is per
+# SparkContext, and child sessions (``spark.newSession()``) share their
+# parent's, so the zip is shipped once per context, not per session:
+# re-adding it logs a JVM WARN and appends it to the context's Python
+# includes again.
+_SHIPPED: tuple[object, str] | None = None
 
 
 def _remove_quietly(path: str) -> None:
@@ -65,12 +72,12 @@ def _ship_package(spark: SparkSession) -> None:
     closures reference package functions by module path).  Zips the
     package once per process, into a file of its own so that concurrent
     processes never rewrite each other's zip, and registers it via
-    addPyFile.
+    addPyFile once per SparkContext.
 
     A failure to build the zip raises here, not later as a worker's
     ``ModuleNotFoundError``; only a session that refuses ``addPyFile``
     (e.g. one without a SparkContext) is tolerated, with a warning."""
-    global _PKG_ZIP
+    global _PKG_ZIP, _SHIPPED
     if _PKG_ZIP is None:
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         pkg_name = os.path.basename(pkg_dir)
@@ -86,12 +93,17 @@ def _ship_package(spark: SparkSession) -> None:
                         zf.write(full, rel)
         _PKG_ZIP = zip_path
     try:
-        spark.sparkContext.addPyFile(_PKG_ZIP)
+        sc = spark.sparkContext
+        if _SHIPPED == (sc, _PKG_ZIP):
+            return
+        sc.addPyFile(_PKG_ZIP)
     except Exception as exc:
         _log.warning(
             "package zip %s not shipped (%s): executors that cannot import "
             "%s from their own path will fail", _PKG_ZIP, exc, __package__,
         )
+        return
+    _SHIPPED = (sc, _PKG_ZIP)
 
 
 def _worker_daemon_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:

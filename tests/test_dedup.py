@@ -168,55 +168,21 @@ def test_jaccard_max_block_size_guard(spark):
         dedup.jaccard_pairs(df, max_block_size=20).collect()
 
 
-def test_jaccard_strategies_identical_output(spark):
-    """The "blocked" (default) and "indexed" physical strategies are two
-    plans for the SAME operator — outputs must match pair-for-pair on
-    the real documents table."""
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    blocked = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup.jaccard_pairs(docs, n=3, threshold=0.6).collect()
-    }
-    indexed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup.jaccard_pairs(docs, n=3, threshold=0.6, strategy="indexed").collect()
-    }
-    assert blocked == indexed
-    assert len(blocked) > 0
-    # "auto" resolves to one of the two, so it must match both
-    auto = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup.jaccard_pairs(
-            docs, n=3, threshold=0.6, strategy="auto"
-        ).collect()
-    }
-    assert auto == blocked
+# Jobs that building each registry query over jaccard_pairs starts: only
+# the shuffle stages that AQE runs for the query's lazy localCheckpoint
+# pins (dedup_jaccard: the spread of the single-file scan under its
+# shingle pin; minhash_quality: that one plus five under its LSH side's
+# and re-verify pins).  No probe job picks a plan.
+_BUILD_JOBS = {"q_dedup_jaccard": 1, "q_minhash_quality": 6}
 
 
-def test_jaccard_auto_strategy_decision(spark):
-    """_auto_strategy picks by measured within-block pair volume (the
-    r12 sf1 finding: the blocked default went 54x on a realistic 10x
-    corpus because block pairs grow quadratically): a spread corpus
-    stays 'blocked'; a degenerate one-block corpus with pair volume
-    past AUTO_INDEXED_PAIRS_PER_ROW flips to 'indexed'."""
-    from pyspark.sql import functions as F
-
-    # 60 docs spread over many length buckets: ~2 docs/block -> blocked
-    spread = _docs(
-        spark, [" ".join(f"w{i}t{j}" for j in range(4 + 16 * (i % 20)))
-                for i in range(60)]
-    )
-    base_s = spread.select(
-        F.col("doc_id").alias("id"),
-        (F.size(F.split("text", " ")) / 16).cast("int").alias("blk"),
-    )
-    assert dedup._auto_strategy(base_s) == "blocked"
-    # one block, n docs where (n-1)/2 > threshold -> indexed
-    n = 2 * dedup.AUTO_INDEXED_PAIRS_PER_ROW + 3
-    one_block = spark.range(n).select(
-        F.col("id"), F.lit(0).alias("blk")
-    )
-    assert dedup._auto_strategy(one_block) == "indexed"
+@pytest.mark.parametrize("query", sorted(_BUILD_JOBS))
+def test_jaccard_queries_build_only_their_pins(spark, query):
+    q = getattr(dedup, query)
+    q(spark, SF_SMALL)  # resolves the documents scan once
+    assert build_jobs(
+        spark, f"{query}-build", lambda: q(spark, SF_SMALL)
+    ) == _BUILD_JOBS[query]
 
 
 def test_simhash_hot_bucket_guard(spark):
@@ -285,17 +251,12 @@ def test_editdistance_block_guard(spark):
         editdistance_pairs(df, max_block_size=10).collect()
 
 
-# One arm per near-dup operator (and jaccard strategy): the operator
-# with a cap, the cap's message, a corpus that collapses into one block,
-# and the cap that corpus overflows.
+# One arm per near-dup operator: the operator with a cap, the cap's
+# message, a corpus that collapses into one block, and the cap that
+# corpus overflows.
 _CAP_ARMS = {
-    "jaccard_blocked": (
+    "jaccard": (
         lambda df, cap: dedup.jaccard_pairs(df, max_block_size=cap),
-        r"jaccard_pairs: largest block holds \d+ docs \(> cap 20\)",
-        [f"a b c d e unique{i}" for i in range(50)], 20,
-    ),
-    "jaccard_indexed": (
-        lambda df, cap: dedup.jaccard_pairs(df, max_block_size=cap, strategy="indexed"),
         r"jaccard_pairs: largest block holds \d+ docs \(> cap 20\)",
         [f"a b c d e unique{i}" for i in range(50)], 20,
     ),

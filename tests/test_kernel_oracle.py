@@ -12,10 +12,18 @@ literal and hashes the rest:
   (one fingerprint, md5('')); the oracle gives it no fingerprints.
 * Greek final sigma in ``rake_keywords``: Spark lowers 'ΦΩΣ' to 'φως',
   DuckDB to 'φωσ'.
+* NULL text in ``dedup_jaccard``: Spark reads it as empty text (one
+  empty shingle), so it pairs with each empty doc at J = 1; the oracle
+  gives it no shingles and no pairs.
 
 ``dedup_winnow`` fixes ``min_shared=2``, which finds no pair on the
 shared-run corpus, so that case also pins ``winnow_pairs(min_shared=1)``
 by literal.
+
+``dedup_jaccard`` runs on the sf0.001 documents table too, and its
+adversarial corpus also pins the pair set by literal, including the
+two pairs that clear the threshold outside the length-bucket recall
+contract and so must be missed.
 
 ``rfm_segments`` reads ``orders`` instead: its cases are the sf0.001
 orders table and tiny corpora whose customer counts split unevenly
@@ -106,6 +114,40 @@ PHRASES = [
     (10, "fast sort\u00a0key"),  # NBSP is not a separator
 ]
 
+
+def _words(prefix: str, lo: int, hi: int) -> str:
+    return " ".join(f"{prefix}{i}" for i in range(lo, hi))
+
+
+# word 3-gram Jaccard >= 0.6 within length buckets of 16 tokens (own +
+# successor bucket, so buckets at most one apart meet)
+JACCARD = [
+    (1, ""),
+    (2, None),
+    (3, "   "),
+    (4, "solo"),                    # under 3 tokens: one whole-doc shingle
+    (5, "solo"),                    # exact dup
+    (6, "short doc"),
+    (7, "short \t doc"),            # same tokens, ragged whitespace
+    (8, _words("w", 0, 15)),        # 15 tokens: bucket 0
+    (9, _words("w", 0, 16)),        # 16 tokens: bucket 1
+    (10, _words("v", 0, 31)),       # 31 tokens: bucket 1
+    (11, _words("v", 0, 32)),       # 32 tokens: bucket 2
+    (12, _words("t", 1, 7)),        # 4 shingles, 3 shared with 13:
+    (13, _words("t", 2, 8)),        # J = 3/5 = 0.6 exactly
+    (14, _words("u", 0, 31)),       # bucket 1, J = 29/46 with 15, but
+    (15, _words("u", 0, 48)),       # bucket 3: outside the contract
+    (16, "a b c a b c"),            # bucket 0, J = 1 with 17, but
+    (17, " ".join(["a b c"] * 20)),  # bucket 3: outside the contract
+    (18, _words("v", 0, 31)),       # exact dup of 10
+]
+
+JACCARD_PAIRS = [
+    (1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0), (4, 5, 1.0), (6, 7, 1.0),
+    (8, 9, 0.928571), (10, 11, 0.966667), (10, 18, 1.0),
+    (11, 18, 0.966667), (12, 13, 0.6),
+]
+
 _EMPTY_FP_DIGEST = hashlib.md5(
     hashlib.md5(b"").hexdigest().encode()
 ).hexdigest()
@@ -115,8 +157,8 @@ CASES = [
                  id="char_entropy-entropy"),
     pytest.param(
         "winnow_fingerprint", WINNOW,
-        ({"doc_id": 9, "n_fingerprints": 1, "winnow_digest": _EMPTY_FP_DIGEST},
-         {"doc_id": 9, "n_fingerprints": 0, "winnow_digest": None}),
+        ([{"doc_id": 9, "n_fingerprints": 1, "winnow_digest": _EMPTY_FP_DIGEST}],
+         [{"doc_id": 9, "n_fingerprints": 0, "winnow_digest": None}]),
         None,
         id="winnow_fingerprint-winnow",
     ),
@@ -129,10 +171,10 @@ CASES = [
     ),
     pytest.param(
         "rake_keywords", RAKE,
-        ({"phrase": "φως καλο market data", "n_occur": 1,
-          "score_ppm": 13_333_332, "kw_rank": 3},
-         {"phrase": "φωσ καλο market data", "n_occur": 1,
-          "score_ppm": 13_333_332, "kw_rank": 3}),
+        ([{"phrase": "φως καλο market data", "n_occur": 1,
+           "score_ppm": 13_333_332, "kw_rank": 3}],
+         [{"phrase": "φωσ καλο market data", "n_occur": 1,
+           "score_ppm": 13_333_332, "kw_rank": 3}]),
         None,
         id="rake_keywords-rake",
     ),
@@ -142,6 +184,14 @@ CASES = [
                  id="bpe_roundtrip_law-bpe_runs"),
     pytest.param("phrase_search", PHRASES, None, None,
                  id="phrase_search-phrases"),
+    pytest.param("dedup_jaccard", None, None, None, id="dedup_jaccard-sf0.001"),
+    pytest.param(
+        "dedup_jaccard", JACCARD,
+        ([{"id_a": 1, "id_b": 2, "jaccard": 1.0},
+          {"id_a": 2, "id_b": 3, "jaccard": 1.0}], []),
+        None,
+        id="dedup_jaccard-jaccard",
+    ),
 ]
 
 
@@ -165,17 +215,22 @@ def _write_documents(sf_dir, rows) -> str:
     return path
 
 
-def _take(cols, rows, want: dict) -> list[tuple]:
-    """The rows other than the single one equal to ``want``."""
-    hit = [r for r in rows if dict(zip(cols, r)) == want]
-    assert len(hit) == 1, (want, rows)
-    return [r for r in rows if dict(zip(cols, r)) != want]
+def _take(cols, rows, want: list[dict]) -> list[tuple]:
+    """The rows other than those in ``want``, each of which must occur
+    exactly once."""
+    for w in want:
+        hit = [r for r in rows if dict(zip(cols, r)) == w]
+        assert len(hit) == 1, (w, rows)
+    return [r for r in rows if dict(zip(cols, r)) not in want]
 
 
 @pytest.mark.parametrize("name,corpus,gap,pairs_at_1", CASES)
 def test_kernel_matches_oracle(spark, tmp_path, name, corpus, gap, pairs_at_1):
-    path = _write_documents(tmp_path, corpus)
-    sdf = entry.queries()[name](spark, str(tmp_path))
+    """``corpus`` None runs the sf0.001 documents table."""
+    sf_dir = SF_SMALL if corpus is None else str(tmp_path)
+    path = (f"{SF_SMALL}/documents.parquet" if corpus is None
+            else _write_documents(tmp_path, corpus))
+    sdf = entry.queries()[name](spark, sf_dir)
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
@@ -183,9 +238,9 @@ def test_kernel_matches_oracle(spark, tmp_path, name, corpus, gap, pairs_at_1):
     ocols, orows = [d[0] for d in rel.description], rel.fetchall()
 
     if gap is not None:
-        spark_row, oracle_row = gap
-        srows = _take(scols, srows, spark_row)
-        orows = _take(ocols, orows, oracle_row)
+        spark_only, oracle_only = gap
+        srows = _take(scols, srows, spark_only)
+        orows = _take(ocols, orows, oracle_only)
     assert sorted(scols) == sorted(ocols)
     assert len(srows) == len(orows)
     assert table_hash(scols, srows) == table_hash(ocols, orows)
@@ -194,6 +249,16 @@ def test_kernel_matches_oracle(spark, tmp_path, name, corpus, gap, pairs_at_1):
         docs = spark.read.parquet(path)
         got = sorted(map(tuple, winnow_pairs(docs, min_shared=1).collect()))
         assert got == pairs_at_1
+
+
+def test_dedup_jaccard_pairs_on_adversarial_corpus(spark, tmp_path):
+    """The registry entry finds every pair the corpus plants within the
+    recall contract (exact duplicates, lengths on bucket edges, a pair
+    at exactly J = 0.6) and misses the two outside it."""
+    _write_documents(tmp_path, JACCARD)
+    sdf = entry.queries()["dedup_jaccard"](spark, str(tmp_path))
+    assert sorted(map(tuple, sdf.select("id_a", "id_b", "jaccard").collect())) \
+        == JACCARD_PAIRS
 
 
 def _write_orders(sf_dir, n_customers: int) -> str:

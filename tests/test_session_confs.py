@@ -51,6 +51,16 @@ def test_child_session_pinned_independently(spark):
     assert child.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
+def test_package_zip_shipped_once_per_context(spark):
+    """Child sessions share their parent's SparkContext, which already
+    holds the zip: pinning three of them ships nothing more."""
+    ensure_engine_confs(spark)
+    for _ in range(3):
+        ensure_engine_confs(spark.newSession())
+    includes = spark.sparkContext._python_includes
+    assert includes.count(os.path.basename(session._PKG_ZIP)) == 1
+
+
 def test_package_zip_private_to_each_process(monkeypatch):
     """Each process zips the package into its own file: a second process
     (simulated by clearing the per-process memo) gets a new path and
@@ -58,6 +68,7 @@ def test_package_zip_private_to_each_process(monkeypatch):
     shipped: list[str] = []
     fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
     monkeypatch.setattr(session, "_PKG_ZIP", None)
+    monkeypatch.setattr(session, "_SHIPPED", None)
     session._ship_package(fake)
     first = shipped[0]
     stamp = os.stat(first).st_mtime_ns

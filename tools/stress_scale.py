@@ -111,11 +111,10 @@ STRESS_QUERIES = [
     # round-12 additions: the conditional-min conversion state (linear
     # control over events), the Arrow-batched flaky-transport contract
     # row (mapInPandas throughput over the near-dup corpus).
-    # dedup_jaccard is already in the list above — it now runs its
-    # r12 "auto" strategy here, and the 10-copy corpus is auto's
-    # adversarial case (block pair volume AND true-pair volume both
-    # explode, so auto must flip to indexed and stay linear in true
-    # pairs).
+    # dedup_jaccard is already in the list above; the 10-copy corpus is
+    # its adversarial case (block population AND true-pair volume both
+    # explode), and its one prefix-indexed plan must stay linear in
+    # true pairs.
     "first_touch_conversion", "enrich_flaky_contract",
     # round-13 continuation additions: the two all-pairs embedding
     # audits on their BLAS strategy (10x vectors = 100x pairs — the
