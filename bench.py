@@ -22,6 +22,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.session import (  # noqa: E402
     get_spark,
 )
+from tests.conftest import codegen_compiles  # noqa: E402
 
 # Representative slice of the operator surface: scan+agg, shuffle joins,
 # global ordering, windows, dedup (exact + LSH), ANN, text, enrichment
@@ -520,6 +521,9 @@ def main() -> int:
     # outliers on identical plans); the min is the steady-state cost of
     # the plan, which is what round-over-round comparisons need.
     times: dict[str, float] = {}
+    # generated classes compiled over each query's timed reps: ties a
+    # timing move to whole-stage codegen compilation
+    compiles: dict[str, int] = {}
     exec_plans: dict[str, list[str]] = {}
     # SPARK_GRAFT_SKIP_CAPTURE=1 disables the per-query untimed
     # capture execution (and hence the drift gate) for THIS run only —
@@ -535,10 +539,12 @@ def main() -> int:
         # reaches steady state (SCALE.md round-3 notes); the HEAVY_TIER
         # movers get 5 reps too; everything else is stable by run 2
         reps = 5 if (name.startswith("dedup_") or name in HEAVY_TIER) else 3
+        compiled = codegen_compiles(spark)
         for _ in range(reps):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
+        compiles[name] = codegen_compiles(spark) - compiled
         times[name] = round(best, 3)
         _drain_blocks()
 
@@ -673,6 +679,7 @@ def main() -> int:
         "value": total,
         "unit": "sec",
         "queries": times,
+        "codegen_compiles": compiles,
         "sf": sf,
         "n_queries": len(times),
         "exec_plan_fp": fps,

@@ -22,6 +22,18 @@ and a zip added later by ``addPyFile`` gets a new zipimporter on its first
 import.  ``FileFinder`` caches are still invalidated, so a ``.py`` shipped
 mid-session imports too.  Other masters keep pyspark's default daemon (their workers
 need not see this package's directory; see ``_worker_daemon_conf``).
+
+``spark.sql.codegen.cache.maxEntries`` bounds the JVM-wide cache of
+whole-stage generated classes, keyed by the generated source, so a plan
+whose code was compiled before skips Janino.  Spark's default of 100 is
+smaller than one pass of a rotating query mix: perfbench's ``query_mix``
+needs ~196 distinct classes per pass, so at 100 every pass evicted and
+recompiled 137-190 classes it had compiled one pass earlier, ~5-8 ms of
+compile time each on 4 vCPUs (~1 s of a 4-6 s pass).  A cached class
+costs at most ~63 KB of JVM non-heap (101 -> 387 MB over the 4,552 classes
+of one sf0.001 registry pass), so ``_CODEGEN_CACHE_ENTRIES`` caps the cache
+at ~125 MB.  A cache hit reuses the identical class; plans and rows cannot
+change.
 """
 
 from __future__ import annotations
@@ -40,6 +52,12 @@ _log = logging.getLogger(__name__)
 
 _PKG_ZIP: str | None = None
 _DAEMON_MODULE = f"{__package__}._worker_daemon"
+
+_CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+# Holds a query_mix-sized cycle of generated classes 10x over (see the
+# module docstring).  bench.py runs each query's reps back to back, so it
+# never needs the whole registry's classes resident at once.
+_CODEGEN_CACHE_ENTRIES = 2000
 
 # Sessions already pinned by ensure_engine_confs.  The driver calls every
 # query through _wrap -> ensure_engine_confs, so a full bench run makes
@@ -160,11 +178,17 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     Idempotent and memoized per session object: the first call pins and
     ships, later calls return immediately (see _PINNED above).
 
-    The worker daemon (``spark.python.daemon.module``, see the module
-    docstring) is a static conf, read when the SparkContext starts, so it
-    cannot be set here: a session built without ``get_spark``, such as the
-    one ``__spark_entry__``'s harness hands in, keeps pyspark's default
-    daemon and its per-task zip re-read.
+    Two static confs of ``get_spark`` are read when the SparkContext starts,
+    so they cannot be set here, and a session built without ``get_spark``,
+    such as the one ``__spark_entry__``'s harness hands in, goes without
+    them (see the module docstring):
+      - the worker daemon (``spark.python.daemon.module``): such a session
+        keeps pyspark's default daemon and its per-task zip re-read
+      - the generated-class cache (``spark.sql.codegen.cache.maxEntries``):
+        such a session keeps Spark's 100 entries and recompiles a rotating
+        query mix's whole-stage code on every query; pinning a session
+        whose cache is smaller than ``_CODEGEN_CACHE_ENTRIES`` logs one
+        warning naming the conf
     """
     if spark in _PINNED:
         return spark
@@ -197,6 +221,14 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
         _eu._enable_debugging_cache = False
     except Exception:
         pass  # private cache moved/renamed: the conf alone still governs
+    codegen_entries = int(spark.conf.get(_CODEGEN_CACHE_CONF))
+    if codegen_entries < _CODEGEN_CACHE_ENTRIES:
+        _log.warning(
+            "%s is %d, below the engine's %d: it is a static conf, so this "
+            "session recompiles the whole-stage code of queries it ran "
+            "before; build the session with get_spark to keep it",
+            _CODEGEN_CACHE_CONF, codegen_entries, _CODEGEN_CACHE_ENTRIES,
+        )
     _ship_package(spark)
     _PINNED.add(spark)
     return spark
@@ -212,7 +244,9 @@ def get_spark(
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism (benchmark
     harnesses set the core count through it); ``SPARK_GRAFT_MASTER``
     overrides the master URL.  A local master also gets the worker daemon
-    confs of ``_worker_daemon_conf``.
+    confs of ``_worker_daemon_conf``.  The generated-class cache holds
+    ``_CODEGEN_CACHE_ENTRIES`` classes; ``extra_conf`` overrides it, as it
+    does every conf here.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -264,6 +298,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(_CODEGEN_CACHE_CONF, str(_CODEGEN_CACHE_ENTRIES))
     )
     extra_conf = extra_conf or {}
     for k, v in {**extra_conf, **_worker_daemon_conf(master, extra_conf)}.items():

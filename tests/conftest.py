@@ -25,6 +25,16 @@ def build_jobs(spark, group, build) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far.
+
+    Only the count is exact: the metric's mean x count is a reservoir
+    estimate of the compile time, whose deltas between reads can go
+    negative."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

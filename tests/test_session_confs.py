@@ -4,7 +4,10 @@ required runtime confs, later calls are free no-ops, and a child session
 
 Also pin the local worker daemon (``_worker_daemon``): tasks see the no-op
 ``zipimporter.invalidate_caches``, modules shipped after the first Python
-task still import, and only a local master gets the daemon confs."""
+task still import, and only a local master gets the daemon confs.
+
+And pin the generated-class cache: a cycle of plans larger than Spark's
+default cache compiles once, and a session with a smaller cache warns."""
 
 from __future__ import annotations
 
@@ -15,15 +18,19 @@ import uuid
 import zipfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark import session
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.session import (
+    _CODEGEN_CACHE_CONF,
+    _CODEGEN_CACHE_ENTRIES,
     _DAEMON_MODULE,
     _PINNED,
     _default_driver_memory,
     _worker_daemon_conf,
     ensure_engine_confs,
 )
+from tests.conftest import codegen_compiles
 
 PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
 
@@ -190,3 +197,41 @@ def test_package_zip_refused_by_add_py_file_warns(monkeypatch, caplog):
         session._ship_package(fake)
     assert session._PKG_ZIP is not None
     assert any("addPyFile not supported" in r.getMessage() for r in caplog.records)
+
+
+def test_codegen_cache_sized_for_the_engine(spark):
+    assert spark.conf.get(_CODEGEN_CACHE_CONF) == str(_CODEGEN_CACHE_ENTRIES)
+
+
+def test_a_cycle_of_plans_compiles_its_code_once(spark):
+    """Each plan inlines its literal into its generated code, so the 150
+    plans need more classes than Spark's default cache of 100 holds: a
+    cache that small recompiles every one of them on the second pass."""
+
+    def compiles_in_one_pass() -> int:
+        before = codegen_compiles(spark)
+        for i in range(150):
+            spark.range(3).select(F.col("id") + F.lit(i)).collect()
+        return codegen_compiles(spark) - before
+
+    assert compiles_in_one_pass() >= 150
+    assert compiles_in_one_pass() == 0
+
+
+def test_small_codegen_cache_warns_once_when_pinned(spark, monkeypatch, caplog):
+    """A child session shares its parent's static confs, so it stands in
+    for a session built without get_spark once the engine's size is above
+    the live one."""
+
+    def warnings_when_pinned(child) -> list[str]:
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger=session.__name__):
+            ensure_engine_confs(child)
+            ensure_engine_confs(child)
+        return [r.getMessage() for r in caplog.records if _CODEGEN_CACHE_CONF in r.getMessage()]
+
+    assert warnings_when_pinned(spark.newSession()) == []
+    live = int(spark.conf.get(_CODEGEN_CACHE_CONF))
+    monkeypatch.setattr(session, "_CODEGEN_CACHE_ENTRIES", live + 1)
+    warned = warnings_when_pinned(spark.newSession())
+    assert len(warned) == 1 and str(live) in warned[0]
