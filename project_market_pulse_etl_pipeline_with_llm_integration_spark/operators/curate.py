@@ -35,7 +35,10 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.samp
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.text import (
     with_corpus_filter,
 )
-from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import cached_scan
+from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
+    cached_scan,
+    spread_if_narrow,
+)
 
 
 def curate_corpus(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -51,17 +54,12 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     keep_ids = dedup.exact_dedup(admitted).select(F.col("keep_id").alias("doc_id"))
     exact_surv = admitted.join(keep_ids, "doc_id", "left_semi")
 
-    par = spark.sparkContext.defaultParallelism
-    pairs = dedup.minhash_dedup_pairs(
-        exact_surv, threshold=0.6, num_partitions=par
-    )
+    pairs = dedup.minhash_dedup_pairs(spread_if_narrow(exact_surv), threshold=0.6)
     near_surv = dedup.dedup_corpus(exact_surv, pairs).localCheckpoint(eager=False)
 
     is_bench = F.md5(F.col("doc_id").cast("string")) < "20"
     bench = docs.filter(is_bench)
-    verdict = dedup.decontaminate(
-        near_surv.filter(~is_bench), bench, num_partitions=par
-    )
+    verdict = dedup.decontaminate(spread_if_narrow(near_surv.filter(~is_bench)), bench)
     clean = near_surv.filter(~is_bench).join(
         verdict.filter(~F.col("contaminated")).select("doc_id"), "doc_id", "left_semi"
     )

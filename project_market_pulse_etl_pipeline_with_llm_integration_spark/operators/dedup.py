@@ -40,9 +40,9 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.functions.colu
     tokens,
 )
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
+    cached_scan,
     spread_if_narrow,
 )
-from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import cached_scan
 
 # ---------------------------------------------------------------------------
 # Degenerate-blocking guard (shared by the near-dup families)
@@ -77,12 +77,9 @@ def exact_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Group identical (normalized) texts; survivor = min id.
     Returns (keep_id, dup_count) per distinct content."""
-    if num_partitions:
-        df = spread_if_narrow(df, num_partitions)
     return (
         df.withColumn("fp", F.md5(norm_text(text_col)))
         .groupBy("fp")
@@ -92,9 +89,7 @@ def exact_dedup(
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    return exact_dedup(
-        df, num_partitions=spark.sparkContext.defaultParallelism
-    ).select("fp", "keep_id", "dup_count")
+    return exact_dedup(spread_if_narrow(df)).select("fp", "keep_id", "dup_count")
 
 
 # ---------------------------------------------------------------------------
@@ -152,7 +147,6 @@ def jaccard_pairs(
     n: int = 1,
     threshold: float = 0.6,
     block_col: Column | None = None,
-    num_partitions: int | None = None,
     max_block_size: int | None = None,
 ) -> DataFrame:
     """All pairs (a<b) with token-shingle Jaccard >= threshold, joined
@@ -176,10 +170,8 @@ def jaccard_pairs(
     a-side of the join carries ``_guard_inplan``, so a block over the
     cap fails the job before the join output materializes.
 
-    ``num_partitions`` spreads the CPU-bound shingle/intersect work when
-    the input's scan partitioning is coarser than the core count (small
-    single-file inputs); leave None when the source is already well
-    partitioned.
+    NULL text has no shingles, so it pairs with nothing (an empty or
+    blank text is one empty shingle and pairs with its kind at J = 1).
 
     The plan is ppjoin's prefix filter with the prefix hashes as join
     keys: each doc's sorted-hash prefix (``_prefix_len``) is exploded,
@@ -192,11 +184,10 @@ def jaccard_pairs(
     prefix lengths rather than with the square of the block
     populations; it takes four shuffles (prefix join, candidate
     distinct, two attach joins) after the shared shingle pass.
-    Building the frame runs no job of its own; when ``num_partitions``
-    spreads a narrow scan, AQE runs that shuffle's map stage while it
-    plans the lazy ``localCheckpoint`` below."""
-    if num_partitions:
-        df = spread_if_narrow(df, num_partitions)
+    Building the frame runs no job of its own; when the caller spreads a
+    narrow scan (``spread_if_narrow``), AQE runs that shuffle's map stage
+    while it plans the lazy ``localCheckpoint`` below."""
+    df = df.filter(F.col(text_col).isNotNull())
     if block_col is not None:
         base = df.select(
             F.col(id_col).alias("id"),
@@ -282,10 +273,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpora (almost every pair matches); word trigrams measure actual
     # copied passages.
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    return jaccard_pairs(
-        df, n=3, threshold=0.6,
-        num_partitions=spark.sparkContext.defaultParallelism,
-    )
+    return jaccard_pairs(spread_if_narrow(df), n=3, threshold=0.6)
 
 
 def containment_pairs(
@@ -295,7 +283,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     min_shingles: int = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Directed containment near-dup pairs: (a, b) with
     |sh(A) ∩ sh(B)| / |sh(A)| >= threshold — doc A's shingles mostly
@@ -322,8 +309,6 @@ def containment_pairs(
     containment value is inter/|A| on exact integers, identical in
     binary double on any engine (no transcendental — hashable under the
     SCALE.md rule)."""
-    if num_partitions:
-        df = spread_if_narrow(df, num_partitions)
     # The checkpoint sits DIRECTLY on the shingle select, with the
     # min_shingles filter ABOVE it: placed below, Catalyst pushes the
     # size(<whole shingle pipeline>) predicate through the repartition
@@ -405,9 +390,7 @@ def containment_pairs(
 
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    return containment_pairs(
-        df, n=3, threshold=0.8, num_partitions=spark.sparkContext.defaultParallelism
-    )
+    return containment_pairs(spread_if_narrow(df), n=3, threshold=0.8)
 
 
 # ---------------------------------------------------------------------------
@@ -490,11 +473,8 @@ def minhash_candidate_pairs(
     k: int = 32,
     bands: int = 8,
     n: int = 3,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """LSH-banding candidate pairs (id_a, id_b) straight from text."""
-    if num_partitions:
-        df = spread_if_narrow(df, num_partitions)
     return _candidates_from_hashed(_hashed_shingle_sets(df, text_col, id_col, n), k, bands)
 
 
@@ -506,7 +486,6 @@ def minhash_dedup_pairs(
     bands: int = 8,
     threshold: float = 0.6,
     n: int = 3,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact Jaccard verify.
     Output (id_a, id_b, jaccard) with id_a < id_b.
@@ -519,8 +498,6 @@ def minhash_dedup_pairs(
     context cleaner when the plan is garbage-collected, while
     ``DataFrame.persist`` stays pinned in the CacheManager until an
     explicit unpersist — a leak for one-shot pipeline calls like this.)"""
-    if num_partitions:
-        df = spread_if_narrow(df, num_partitions)
     hashed = _hashed_shingle_sets(df, text_col, id_col, n).localCheckpoint(eager=False)
     cands = _candidates_from_hashed(hashed, k, bands)
     a = hashed.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -613,10 +590,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterative -> no SQL oracle (rows-only check); correctness pinned by
     tests against a hand-built graph."""
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    pairs = minhash_dedup_pairs(
-        df, threshold=0.6, num_partitions=spark.sparkContext.defaultParallelism
-    )
-    return dup_clusters(pairs)
+    return dup_clusters(minhash_dedup_pairs(spread_if_narrow(df), threshold=0.6))
 
 
 def q_cluster_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -637,9 +611,9 @@ def q_cluster_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation and each catches a distinct failure mode of the
     pointer-jumping loop."""
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    pairs = minhash_dedup_pairs(
-        df, threshold=0.6, num_partitions=spark.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=False)
+    pairs = minhash_dedup_pairs(spread_if_narrow(df), threshold=0.6).localCheckpoint(
+        eager=False
+    )
     labels = dup_clusters(pairs)
     la = labels.select(F.col("id").alias("id_a"), F.col("cluster_id").alias("label_a"))
     lb = labels.select(F.col("id").alias("id_b"), F.col("cluster_id").alias("label_b"))
@@ -688,9 +662,7 @@ def q_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduplicated documents table (minhash pairs -> clusters ->
     survivors only).  Iterative -> rows-only check."""
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    pairs = minhash_dedup_pairs(
-        df, threshold=0.6, num_partitions=spark.sparkContext.defaultParallelism
-    )
+    pairs = minhash_dedup_pairs(spread_if_narrow(df), threshold=0.6)
     return dedup_corpus(df, pairs).select("doc_id", "lang", "source", "n_chars")
 
 
@@ -710,8 +682,7 @@ def q_corpus_survivor_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     must satisfy (a second pass that still finds dups means the first
     pass under-merged)."""
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    pairs = minhash_dedup_pairs(df, threshold=0.6, num_partitions=par).localCheckpoint(
+    pairs = minhash_dedup_pairs(spread_if_narrow(df), threshold=0.6).localCheckpoint(
         eager=False
     )
     labels = dup_clusters(pairs)
@@ -722,7 +693,7 @@ def q_corpus_survivor_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = df.agg(F.count("*").alias("n_docs"))
     n_losers = losers.agg(F.count("*").alias("n_losers"))
     n_surv = survivors.agg(F.count("*").alias("n_surv"))
-    n_resid = minhash_dedup_pairs(survivors, threshold=0.6, num_partitions=par).agg(
+    n_resid = minhash_dedup_pairs(spread_if_narrow(survivors), threshold=0.6).agg(
         F.count("*").alias("n_resid")
     )
     return (
@@ -741,9 +712,7 @@ def q_corpus_survivor_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    return minhash_dedup_pairs(
-        df, threshold=0.6, num_partitions=spark.sparkContext.defaultParallelism
-    )
+    return minhash_dedup_pairs(spread_if_narrow(df), threshold=0.6)
 
 
 def q_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,13 +735,13 @@ def q_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything upstream is seeded and the corpus fixed, so both booleans
     are hard oracle-checkable constants."""
     df = cached_scan(spark, f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
+    spread = spread_if_narrow(df)
     exact = (
-        jaccard_pairs(df, n=3, threshold=0.6, num_partitions=par)
+        jaccard_pairs(spread, n=3, threshold=0.6)
         .select("id_a", "id_b")
         .withColumn("in_exact", F.lit(1))
     )
-    lsh = minhash_dedup_pairs(df, threshold=0.6, n=3, num_partitions=par).select(
+    lsh = minhash_dedup_pairs(spread, threshold=0.6, n=3).select(
         "id_a", "id_b"
     )
     # independent re-verify: string shingles, same (inter, union, round)
@@ -953,10 +922,7 @@ def simhash_pairs(
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spread_if_narrow(
-        cached_scan(spark, f"{sf_dir}/documents.parquet"),
-        spark.sparkContext.defaultParallelism,
-    )
+    df = spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet"))
     return simhash_pairs(df, max_distance=3)
 
 
@@ -983,10 +949,9 @@ def q_simhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + _PLANT_ID_OFFSET).alias("doc_id"), "text"
     )
     corpus = df.unionByName(planted)
-    pairs = simhash_pairs(
-        spread_if_narrow(corpus, spark.sparkContext.defaultParallelism),
-        max_distance=3,
-    ).localCheckpoint(eager=False)
+    pairs = simhash_pairs(spread_if_narrow(corpus), max_distance=3).localCheckpoint(
+        eager=False
+    )
     ham = pairs.agg(F.max("hamming").alias("max_ham"))
     expected = df.filter(F.col("doc_id") % 20 == 0).select(
         F.col("doc_id").alias("id_a"),
@@ -1014,7 +979,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Training-set decontamination: flag corpus documents that share
     any word ``n``-gram with a held-out benchmark/eval set (the
@@ -1029,15 +993,7 @@ def decontaminate(
     map-side combine, and the corpus text never shuffles.  Documents
     shorter than ``n`` tokens contribute their whole token run as a
     single gram (same convention both engines).
-
-    ``num_partitions`` spreads the CPU-bound gram construction when the
-    input arrives in few large files (the SCALE.md scan-parallelism
-    lever; on the single-file testdata the explode otherwise runs on
-    one core — measured 3.3 s -> sub-second at sf0.1).  At cluster
-    scale the scan is already parallel and this stays None.
     """
-    if num_partitions:
-        corpus = spread_if_narrow(corpus, num_partitions)
     def grams(df: DataFrame) -> Column:
         toks = tokens(text_col)
         return F.transform(
@@ -1068,11 +1024,9 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(doc_id) < '20' (~1/8) play the benchmark, the rest the corpus."""
     docs = cached_scan(spark, f"{sf_dir}/documents.parquet")
     is_bench = F.md5(F.col("doc_id").cast("string")) < "20"
-    return decontaminate(
-        docs.filter(~is_bench),
-        docs.filter(is_bench),
-        num_partitions=spark.sparkContext.defaultParallelism,
-    )
+    # spread the corpus side's gram explode: on the single-file testdata
+    # it otherwise runs on one core (measured 3.3 s -> sub-second at sf0.1)
+    return decontaminate(spread_if_narrow(docs.filter(~is_bench)), docs.filter(is_bench))
 
 
 # ---------------------------------------------------------------------------
@@ -1167,7 +1121,6 @@ def winnow_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_fp_df: int | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Near-copy pairs (a<b, n_shared) by shared WINNOW fingerprints
     (Schleimer et al. SIGMOD'03 — the MOSS plagiarism-detection
@@ -1203,8 +1156,6 @@ def winnow_pairs(
         winnow_fp_set_rows,
     )
 
-    if num_partitions:
-        df = spread_if_narrow(df, num_partitions)
     docs = df.filter(F.trim(F.col(text_col)) != "")
     # pinned: fps is referenced twice (a/b sides), and an unpinned
     # double reference doubles the plan per side
@@ -1235,14 +1186,7 @@ def q_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnow near-copy pairs over documents (word trigrams, window 4,
     >= 2 shared fingerprints).  Adaptive spread: single-file sources
     get the parallelism lever, multi-file scans pass through."""
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
-    docs = spread_if_narrow(
-        cached_scan(spark, f"{sf_dir}/documents.parquet"),
-        spark.sparkContext.defaultParallelism,
-    )
+    docs = spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet"))
     return winnow_pairs(docs, min_shared=2, max_fp_df=10_000)
 
 
@@ -1279,15 +1223,8 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # paying the body shuffle per consumer; and an UNCONDITIONAL
     # upfront repartition regressed the already-32-file 10x stress
     # layout 3x — hence the adaptive form.
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
     docs = leakage_safe_split(
-        spread_if_narrow(
-            cached_scan(spark, f"{sf_dir}/documents.parquet"),
-            spark.sparkContext.defaultParallelism,
-        )
+        spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet"))
     )
     train = docs.filter(F.col("split") == "train")
     test = docs.filter(F.col("split") == "test")
@@ -1311,7 +1248,6 @@ def incremental_dedup(
     id_col: str = "doc_id",
     n: int = 5,
     near_ppm: int = 500_000,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus (the daily-crawl
     shape: the corpus is petabytes and must not be re-deduped from
@@ -1340,11 +1276,6 @@ def incremental_dedup(
     production deployment the corpus digest set would be a maintained
     index table, which this plan degrades to for free (swap the scan
     for the index read)."""
-    if num_partitions:
-        # single-file local inputs: spread the corpus-side gram explode
-        # (SCALE.md scan-parallelism lever); adaptive — an already
-        # parallel scan passes through without a body shuffle
-        corpus = spread_if_narrow(corpus, num_partitions)
     c_fp = corpus.select(F.md5(norm_text(text_col)).alias("fp"))
     b = batch.select(
         F.col(id_col).alias("bid"), F.col(text_col).alias("btext")
@@ -1425,9 +1356,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = cached_scan(spark, f"{sf_dir}/documents.parquet")
     batch = docs.filter(F.col("doc_id") % 20 == 7)
     corpus = docs.filter(F.col("doc_id") % 20 != 7)
-    return incremental_dedup(
-        corpus, batch, num_partitions=spark.sparkContext.defaultParallelism
-    )
+    # single-file inputs: spread the corpus-side gram explode (SCALE.md
+    # scan-parallelism lever); an already parallel scan passes through
+    return incremental_dedup(spread_if_narrow(corpus), batch)
 
 
 def q_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1770,10 +1701,7 @@ def source_minhash_overlap(
 
 
 def q_source_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_if_narrow(
-        cached_scan(spark, f"{sf_dir}/documents.parquet"),
-        spark.sparkContext.defaultParallelism,
-    )
+    docs = spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet"))
     return source_minhash_overlap(docs, k=32, n=3)
 
 
@@ -1886,10 +1814,7 @@ def duplicated_ngram_coverage(
 
 
 def q_duplicated_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_if_narrow(
-        cached_scan(spark, f"{sf_dir}/documents.parquet"),
-        spark.sparkContext.defaultParallelism,
-    )
+    docs = spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet"))
     return duplicated_ngram_coverage(docs, window=5)
 
 
@@ -1925,10 +1850,7 @@ def dup_span_mask(
 
 
 def q_dup_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_if_narrow(
-        cached_scan(spark, f"{sf_dir}/documents.parquet"),
-        spark.sparkContext.defaultParallelism,
-    )
+    docs = spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet"))
     return dup_span_mask(docs, window=5, min_span=5)
 
 

@@ -129,11 +129,14 @@ def enrich_one(
     """Enrich a single article -> (sentiment, category, summary).
 
     Reference ``enriquecer_con_llm_ajustado`` (``Main.py:53-124``):
-    single attempt, errors folded into in-band sentinels.
+    single attempt, errors folded into in-band sentinels.  A NULL title
+    or content renders as '' in the prompt, as in the dedup gateway's.
     """
     if disabled if disabled is not None else _llm_disabled():
         return OFFLINE_TRIPLE
-    prompt = build_prompt(title, content)
+    prompt = build_prompt(
+        "" if title is None else title, "" if content is None else content
+    )
     try:
         raw = (transport or _transport or _default_transport)(prompt)
     except Exception:
@@ -171,6 +174,8 @@ def enrich(
     the reference's single-threaded 1/rate_delay rows/s contract.
     """
     spark = df.sparkSession
+    # the task slots (the cores, see session.py): the budget is split over
+    # the tasks that can run at once, not over the partitions
     tasks = parallelism or spark.sparkContext.defaultParallelism
     # N concurrent tasks each emitting at 1/(N*rate_delay) rows/s sum to
     # the global 1/rate_delay contract, so each task sleeps N*rate_delay
@@ -302,15 +307,8 @@ def enrich_deduped(
     transport is a pure function of the prompt (pinned by test), at
     one LLM call per unique payload instead of one per row.
 
-    CONTRACT (ADVICE r13): NULL payload fields are normalized to ''
-    BEFORE the LLM call — the digest already coalesces NULL and '' to
-    one key, so a NULL-titled group's representative prompt reads
-    "Title: " where row-level ``enrich(df)`` would render "Title:
-    None".  Row-for-row equality with ``enrich(df)`` therefore holds
-    for non-NULL payloads (all declared surfaces) and for any
-    transport insensitive to that rendering; callers that need the
-    literal "None" rendering must coalesce before calling ``enrich``
-    themselves.
+    NULL title or content reads as '' on both paths (the digest key and
+    ``enrich_one``'s prompt), so NULL payloads are row-for-row equal too.
 
     The reference pays per ROW (Main.py:177-189 iterates the frame at
     <=5 rows/s with no memoization); on a corpus with duplicate

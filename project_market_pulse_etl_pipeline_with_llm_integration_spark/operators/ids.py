@@ -78,6 +78,8 @@ def with_dense_id(
     if method != "boundaries":
         raise ValueError(f"unknown dense-id method: {method!r}")
 
+    # default: one bucket per task slot (the cores, see session.py), so
+    # every slot numbers one bucket; the ids do not depend on the count
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     key0 = F.col(order_by[0]) if isinstance(order_by[0], str) else order_by[0]
     key0_type = df.select(key0.alias(_BKT)).schema[0].dataType

@@ -33,6 +33,7 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.functions.colu
 )
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
     parquet_num_rows,
+    spread_if_narrow,
 )
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.guards import (
@@ -1125,10 +1126,6 @@ def _semantic_blas(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
     spark = corpus.sparkSession
     brows = benchmark.select(F.col(vec_col).alias("_bv")).collect()
     nb = len(brows)
@@ -1224,10 +1221,9 @@ def _semantic_blas(
             T.StructField("_h", T.LongType()),
         ]
     )
-    par = spark.sparkContext.defaultParallelism
-    scored = spread_if_narrow(
-        corpus.select(id_col, vec_col), par
-    ).mapInPandas(score, schema=out_schema)
+    scored = spread_if_narrow(corpus.select(id_col, vec_col)).mapInPandas(
+        score, schema=out_schema
+    )
     return (
         scored.groupBy(id_col)
         .agg(F.max("_mr").alias("_mr"), F.sum("_h").cast("long").alias("n_benchmark_hits"))
@@ -2551,9 +2547,6 @@ def q_knn_label_agreement(
     from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.analytics import (
         _ppm2,
     )
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
 
     emb = cached_scan(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "label", quantize_embedding("embedding").alias("qv")
@@ -2605,8 +2598,7 @@ def q_knn_label_agreement(
                     "nn_label": np.array(out_lbl, dtype=object),
                 })
 
-        par = spark.sparkContext.defaultParallelism
-        nn = spread_if_narrow(emb, par).mapInPandas(
+        nn = spread_if_narrow(emb).mapInPandas(
             score,
             schema=f"a_id long, a_label {ltype}, nn_label {ltype}",
         )
@@ -2614,8 +2606,7 @@ def q_knn_label_agreement(
         # the probe side carries the n² scoring work; a single-file
         # scan would run it SERIALLY under the broadcast nested-loop
         # join
-        par = spark.sparkContext.defaultParallelism
-        a = spread_if_narrow(emb, par).select(
+        a = spread_if_narrow(emb).select(
             F.col("vec_id").alias("a_id"), F.col("label").alias("a_label"),
             F.col("qv").alias("a_qv"),
         )
@@ -2670,10 +2661,6 @@ def _bitext_margin_blas(
     (|margin2k| <= 2K · dim · 254² ~ 3.3e7 « 2^53)."""
     import numpy as np
 
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
     best_schema = (
         "x_id long, y_id long, y_lang string, d2 long, margin2k long"
     )
@@ -2685,7 +2672,6 @@ def _bitext_margin_blas(
         return spark.createDataFrame([], best_schema)
     x2 = (X * X).sum(axis=1)
     y2 = (Y * Y).sum(axis=1)
-    par = spark.sparkContext.defaultParallelism
 
     bc_x = spark.sparkContext.broadcast((X, x2))
 
@@ -2710,7 +2696,7 @@ def _bitext_margin_blas(
             })
 
     sy_pdf = (
-        spread_if_narrow(ydf, par)
+        spread_if_narrow(ydf)
         .mapInPandas(score_y, schema="y_id long, sy long")
         .toPandas()
     )
@@ -2750,9 +2736,7 @@ def _bitext_margin_blas(
                     rows["margin2k"].append(int(M[r, j]))
             yield pd.DataFrame(rows)
 
-    return spread_if_narrow(xdf, par).mapInPandas(
-        score_x, schema=best_schema
-    )
+    return spread_if_narrow(xdf).mapInPandas(score_x, schema=best_schema)
 
 
 def q_bitext_margin_mining(
@@ -2806,10 +2790,6 @@ def q_bitext_margin_mining(
     Reference anchor: Main.py has no cross-lingual surface at all;
     this is part of the mandated training-data-pipeline extension
     (SURVEY.md §6)."""
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
     K = 4
     docs = cached_scan(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang"
@@ -2842,8 +2822,7 @@ def q_bitext_margin_mining(
     if strategy == "blas":
         best = _bitext_margin_blas(spark, xdf, ydf, K)
     else:
-        par = spark.sparkContext.defaultParallelism
-        x = spread_if_narrow(xdf, par).select(
+        x = spread_if_narrow(xdf).select(
             "x_id", F.col("qv").alias("x_qv")
         )
         y = ydf.select("y_id", "y_lang", F.col("qv").alias("y_qv"))

@@ -26,7 +26,10 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.guar
     PPM2_LIMIT,
     guard_int64,
 )
-from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import cached_scan
+from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
+    cached_scan,
+    spread_if_narrow,
+)
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 # Real pipelines plug in fastText/CLD3 via a Pandas UDF; the heuristic
@@ -251,13 +254,10 @@ def _py_winnow_fp_set(text: str | None, n: int, w: int) -> list[str]:
     0..max(T-n, 0) over the audited ``_py_tokens``), md5 hex per gram,
     then the min of each window of ``w`` hashes at positions
     0..max(|grams|-w, 0) (hex strings are ASCII, so str min is the
-    byte-wise min the DuckDB oracle takes).  NULL text is read as
-    EMPTY text: the gram list is [''] and the set is {md5('')}.  The
-    oracle instead gives a NULL-text row no fingerprints (0, NULL
-    digest); both sides are pinned by literal in
-    tests/test_kernel_oracle.py."""
+    byte-wise min the DuckDB oracle takes).  NULL text has no
+    fingerprints; empty text has one, md5('')."""
     if text is None:
-        text = ""
+        return []
     toks = _py_tokens(text)
     t = len(toks)
     grams = [" ".join(toks[i : i + n]) for i in range(max(t - n, 0) + 1)]
@@ -326,7 +326,9 @@ def _winnow_fingerprint_rows(
             for text in pdf[text_col]:
                 fps = _py_winnow_fp_set(text, n, w)
                 nfp.append(len(fps))
-                dig.append(hashlib.md5(",".join(fps).encode("utf-8")).hexdigest())
+                # NULL text: 0 fingerprints and a NULL digest, as the oracle
+                dig.append(None if text is None else
+                           hashlib.md5(",".join(fps).encode("utf-8")).hexdigest())
             yield pd.DataFrame(
                 {id_col: pdf[id_col], "n_fingerprints": nfp,
                  "winnow_digest": dig}
@@ -636,14 +638,7 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source is a single parquet file (scan parallelism 1 — measured
     # 3.4 s -> 0.6 s at sf0.1); an already-parallel multi-file scan
     # passes through untouched (no body shuffle).
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
-    df = spread_if_narrow(
-        cached_scan(spark, f"{sf_dir}/documents.parquet"),
-        spark.sparkContext.defaultParallelism,
-    )
+    df = spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet"))
     return with_winnow_fingerprint(df).select("doc_id", "n_fingerprints", "winnow_digest")
 
 
@@ -2378,12 +2373,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase_search pathology; measured 6.0 -> 1.1 s at sf0.1).  The
     explode+md5 above the barrier replays once per branch, but over
     stored arrays it is noise."""
-    from ..sources.readers import spread_if_narrow
-
-    docs = spread_if_narrow(
-        cached_scan(spark, f"{sf_dir}/documents.parquet"),
-        spark.sparkContext.defaultParallelism,
-    ).filter(F.trim(F.col("text")) != "")
+    docs = spread_if_narrow(cached_scan(spark, f"{sf_dir}/documents.parquet")).filter(
+        F.trim(F.col("text")) != ""
+    )
     grams = F.array_distinct(_positional_shingles("text", 3))
     arr = docs.select("doc_id", grams.alias("_g")).localCheckpoint(eager=False)
     rows = (
@@ -2518,11 +2510,7 @@ def phrase_search(
         pat_rows.extend((p, g, len(grams)) for g in grams)
     pat = spark.createDataFrame(pat_rows, "phrase string, gram string, k int")
     all_grams = sorted({g for _, g, _ in pat_rows})
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
-    spread = spread_if_narrow(docs, spark.sparkContext.defaultParallelism)
+    spread = spread_if_narrow(docs)
     postings = _phrase_postings(spread, frozenset(all_grams), id_col, text_col)
     cand = (
         postings.join(F.broadcast(pat), "gram")
@@ -3009,17 +2997,11 @@ def _rake_members(docs: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
-        spread_if_narrow,
-    )
-
-    spark = docs.sparkSession
     stop = frozenset(RAKE_STOPWORDS)
     src = spread_if_narrow(
         docs.filter(F.trim("text") != "").select(
             "doc_id", F.lower(F.col("text")).alias("_lt")
-        ),
-        spark.sparkContext.defaultParallelism,
+        )
     )
 
     def emit(batches):

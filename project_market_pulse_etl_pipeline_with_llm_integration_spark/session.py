@@ -6,9 +6,21 @@ AQE on (runtime re-plan + skew-join splitting + partition coalescing),
 UTC session timezone (so naive parquet timestamps compare bit-identically
 against external oracles), Arrow transfers for the Pandas-UDF slow path.
 
-``spark.sql.shuffle.partitions`` defaults to the local core count here;
-on a real cluster it should be ~2-3x total executor cores, and AQE
-coalescing makes over-provisioning cheap.
+``spark.sql.shuffle.partitions`` is one count on every host,
+``_SHUFFLE_PARTITIONS``, not the core count: the count shapes the physical
+plan (exchange widths and the joins AQE re-plans to), so a count tied to
+the cores gave a 4-core run, an 8-core run and a 32-core run different
+plans for the same query.  AQE coalescing trims the count to the data at
+run time, so over-provisioning a small host is cheap; on a real cluster it
+should be ~2-3x total executor cores, passed through ``extra_conf``.
+
+``spark.default.parallelism`` stays unset, so the default parallelism is the
+slot count (the cores of ``local[N]``).  Three readers want exactly that,
+not a partition count: ``spread_if_narrow``'s width, ``enrich``'s per-task
+rate budget and ``with_dense_id``'s bucket default.  Pinning it too was
+measured: ``spark.default.parallelism=8`` on 4 vCPUs made news_etl's
+``op_p50_s`` worse in 2 of 3 pairs (0.923 -> 1.019 s, 0.969 -> 1.079 s),
+most likely from the extra scan splits and tasks.
 
 On a ``local[...]`` master the Python workers fork from ``_worker_daemon``,
 pyspark's own daemon with ``zipimport.zipimporter.invalidate_caches`` made a
@@ -52,6 +64,10 @@ _log = logging.getLogger(__name__)
 
 _PKG_ZIP: str | None = None
 _DAEMON_MODULE = f"{__package__}._worker_daemon"
+
+# A 32-core host's count, which the enrolled executed plans (EXEC_PLANS.json)
+# match; AQE coalescing trims it on smaller hosts (see the module docstring).
+_SHUFFLE_PARTITIONS = 32
 
 _CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 # Holds a query_mix-sized cycle of generated classes 10x over (see the
@@ -236,27 +252,26 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
 
 def get_spark(
     app_name: str = "market-pulse-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism (benchmark
     harnesses set the core count through it); ``SPARK_GRAFT_MASTER``
-    overrides the master URL.  A local master also gets the worker daemon
-    confs of ``_worker_daemon_conf``.  The generated-class cache holds
-    ``_CODEGEN_CACHE_ENTRIES`` classes; ``extra_conf`` overrides it, as it
-    does every conf here.
+    overrides the master URL.  The core count sets the task slots only:
+    shuffles get ``_SHUFFLE_PARTITIONS`` partitions on every host, so the
+    same query plans the same way on 4 cores and on 32.  A local master
+    also gets the worker daemon confs of ``_worker_daemon_conf``.  The
+    generated-class cache holds ``_CODEGEN_CACHE_ENTRIES`` classes;
+    ``extra_conf`` overrides it, as it does every conf here.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

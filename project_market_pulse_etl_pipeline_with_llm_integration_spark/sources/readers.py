@@ -101,11 +101,12 @@ def invalidate_scan(path: str, spark: SparkSession | None = None) -> None:
 _NPARTS: "WeakKeyDictionary[DataFrame, int]" = WeakKeyDictionary()
 
 
-def spread_if_narrow(df: DataFrame, target: int, min_parts: int = 4) -> DataFrame:
-    """Repartition to ``target`` ONLY when the scan is effectively
-    SERIAL (< ``min_parts`` partitions — the single-row-group
-    single-file layout).  The threshold is deliberately low, not
-    proportional to ``target``: for body-carrying frames the
+def spread_if_narrow(df: DataFrame) -> DataFrame:
+    """Repartition to the session's slot count (its default parallelism,
+    the cores) ONLY when the scan is effectively SERIAL (fewer than 4
+    partitions, or fewer than the slots on a smaller host — the
+    single-row-group single-file layout).  The threshold is deliberately
+    low, not proportional to the slots: for body-carrying frames the
     repartition is a full corpus shuffle, worth paying only when map
     work would otherwise run near-serially.  Measured (warm, min-of-2):
     single-file sf0.1 layouts gain 2-3x from the spread
@@ -119,8 +120,9 @@ def spread_if_narrow(df: DataFrame, target: int, min_parts: int = 4) -> DataFram
     n = _NPARTS.get(df)
     if n is None:
         n = _NPARTS[df] = df.rdd.getNumPartitions()
-    if n < min(min_parts, target):
-        return df.repartition(target)
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    if n < min(4, slots):
+        return df.repartition(slots)
     return df
 
 

@@ -38,7 +38,7 @@ def codegen_compiles(spark) -> int:
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    s = get_spark(app_name="mp-tests", shuffle_partitions=8)
+    s = get_spark(app_name="mp-tests")
     yield s
 
 

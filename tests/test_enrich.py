@@ -164,15 +164,20 @@ def test_enrich_deduped_equals_enrich(spark):
 
 def test_enrich_deduped_null_payloads(spark):
     """NULL title/content coalesce into the digest key instead of
-    vanishing: two all-NULL payload rows share one enrichment."""
-    rows = [(1, None, None), (2, None, None), (3, "t", "c")]
+    vanishing: two all-NULL payload rows share one enrichment, and both
+    paths prompt with '' for NULL, so the gateway stays row-for-row equal
+    to ``enrich(df)`` under a pure transport."""
+    rows = [(1, None, None), (2, None, None), (3, "t", "c"), (4, None, "c")]
     df = spark.createDataFrame(rows, "id long, title string, content string")
-    assert E.dedup_payloads(df).count() == 2
-    out = E.enrich_deduped(
-        df, rate_delay=0.0, run_timestamp=datetime(2024, 1, 1),
-        transport=_make_pure_transport(), disabled=False,
-    )
-    assert out.count() == 3
+    assert E.dedup_payloads(df).count() == 3
+    kw = dict(rate_delay=0.0, run_timestamp=datetime(2024, 1, 1),
+              transport=_make_pure_transport(), disabled=False)
+    # keyed by id: NULL fields do not order against strings
+    got = sorted((r.asDict() for r in E.enrich_deduped(df, **kw).collect()),
+                 key=lambda r: r["id"])
+    want = sorted((r.asDict() for r in E.enrich(df, **kw).collect()),
+                  key=lambda r: r["id"])
+    assert got == want and len(got) == 4
 
 
 def _make_poison_transport():

@@ -8,13 +8,8 @@ two with the order-insensitive value hash of ``tools/check_oracle.py``.
 Where the two engines' contracts part, the case pins BOTH sides by
 literal and hashes the rest:
 
-* NULL text in ``winnow_fingerprint``: Spark reads it as empty text
-  (one fingerprint, md5('')); the oracle gives it no fingerprints.
 * Greek final sigma in ``rake_keywords``: Spark lowers 'ΦΩΣ' to 'φως',
   DuckDB to 'φωσ'.
-* NULL text in ``dedup_jaccard``: Spark reads it as empty text (one
-  empty shingle), so it pairs with each empty doc at J = 1; the oracle
-  gives it no shingles and no pairs.
 
 ``dedup_winnow`` fixes ``min_shared=2``, which finds no pair on the
 shared-run corpus, so that case also pins ``winnow_pairs(min_shared=1)``
@@ -32,7 +27,6 @@ into quartiles, with ties on every metric.
 
 from __future__ import annotations
 
-import hashlib
 from datetime import datetime, timedelta
 
 import duckdb
@@ -142,26 +136,18 @@ JACCARD = [
     (18, _words("v", 0, 31)),       # exact dup of 10
 ]
 
+# NULL text (doc 2) has no shingles and pairs with nothing
 JACCARD_PAIRS = [
-    (1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0), (4, 5, 1.0), (6, 7, 1.0),
+    (1, 3, 1.0), (4, 5, 1.0), (6, 7, 1.0),
     (8, 9, 0.928571), (10, 11, 0.966667), (10, 18, 1.0),
     (11, 18, 0.966667), (12, 13, 0.6),
 ]
 
-_EMPTY_FP_DIGEST = hashlib.md5(
-    hashlib.md5(b"").hexdigest().encode()
-).hexdigest()
-
 CASES = [
     pytest.param("char_entropy", ENTROPY, None, None,
                  id="char_entropy-entropy"),
-    pytest.param(
-        "winnow_fingerprint", WINNOW,
-        ([{"doc_id": 9, "n_fingerprints": 1, "winnow_digest": _EMPTY_FP_DIGEST}],
-         [{"doc_id": 9, "n_fingerprints": 0, "winnow_digest": None}]),
-        None,
-        id="winnow_fingerprint-winnow",
-    ),
+    pytest.param("winnow_fingerprint", WINNOW, None, None,
+                 id="winnow_fingerprint-winnow"),
     pytest.param("dedup_winnow", WINNOW, None, None,
                  id="dedup_winnow-winnow"),
     pytest.param(
@@ -185,13 +171,8 @@ CASES = [
     pytest.param("phrase_search", PHRASES, None, None,
                  id="phrase_search-phrases"),
     pytest.param("dedup_jaccard", None, None, None, id="dedup_jaccard-sf0.001"),
-    pytest.param(
-        "dedup_jaccard", JACCARD,
-        ([{"id_a": 1, "id_b": 2, "jaccard": 1.0},
-          {"id_a": 2, "id_b": 3, "jaccard": 1.0}], []),
-        None,
-        id="dedup_jaccard-jaccard",
-    ),
+    pytest.param("dedup_jaccard", JACCARD, None, None,
+                 id="dedup_jaccard-jaccard"),
 ]
 
 

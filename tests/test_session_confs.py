@@ -7,7 +7,10 @@ Also pin the local worker daemon (``_worker_daemon``): tasks see the no-op
 task still import, and only a local master gets the daemon confs.
 
 And pin the generated-class cache: a cycle of plans larger than Spark's
-default cache compiles once, and a session with a smaller cache warns."""
+default cache compiles once, and a session with a smaller cache warns.
+
+And pin the partition counts: shuffles take one count on every host, while
+the task slots follow ``SPARK_GRAFT_CPUS``."""
 
 from __future__ import annotations
 
@@ -26,6 +29,7 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.session import
     _CODEGEN_CACHE_ENTRIES,
     _DAEMON_MODULE,
     _PINNED,
+    _SHUFFLE_PARTITIONS,
     _default_driver_memory,
     _worker_daemon_conf,
     ensure_engine_confs,
@@ -197,6 +201,15 @@ def test_package_zip_refused_by_add_py_file_warns(monkeypatch, caplog):
         session._ship_package(fake)
     assert session._PKG_ZIP is not None
     assert any("addPyFile not supported" in r.getMessage() for r in caplog.records)
+
+
+def test_shuffle_partitions_do_not_follow_the_cores(spark):
+    """The slots are ``local[$SPARK_GRAFT_CPUS]``'s; the shuffle count is
+    the module constant whatever that is, and ``spark.default.parallelism``
+    is left to Spark so that the slot count stays the cores."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(_SHUFFLE_PARTITIONS)
+    assert spark.sparkContext.defaultParallelism == int(os.environ["SPARK_GRAFT_CPUS"])
+    assert not spark.sparkContext.getConf().contains("spark.default.parallelism")
 
 
 def test_codegen_cache_sized_for_the_engine(spark):

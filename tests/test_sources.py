@@ -1,5 +1,6 @@
 """Source/sink format coverage: CSV and JSONL roundtrips with pinned
-schemas, plus the generic write_table sink."""
+schemas, plus the generic write_table sink; and ``spread_if_narrow``,
+the one place that sizes a read's spread."""
 
 from __future__ import annotations
 
@@ -9,11 +10,12 @@ from pyspark.sql import types as T
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.readers import (
     read_csv,
     read_jsonl,
+    spread_if_narrow,
 )
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.writers import (
     write_table,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, build_jobs
 
 
 def test_csv_roundtrip_with_schema(spark, tmp_path):
@@ -190,3 +192,17 @@ def test_csv_malformed_row_handling(spark, tmp_path):
     )
     assert sorted(r.k for r in dropped.collect()) == [1, 3]
     permissive.unpersist()
+
+
+def test_spread_if_narrow_spreads_a_serial_frame_to_the_slots(spark):
+    narrow = spark.range(0, 64, 1, numPartitions=1)
+    spread = []
+    assert build_jobs(spark, "spread-narrow", lambda: spread.append(spread_if_narrow(narrow))) == 0
+    assert spread[0].rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_spread_if_narrow_passes_a_parallel_frame_through(spark):
+    wide = spark.range(0, 64, 1, numPartitions=4)
+    spread = []
+    assert build_jobs(spark, "spread-wide", lambda: spread.append(spread_if_narrow(wide))) == 0
+    assert spread[0] is wide
