@@ -176,17 +176,18 @@ def q_enrich_offline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_enrich_dedup_gateway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-cost dedup gateway over documents (operators/enrich.py
-    enrich_deduped): each DISTINCT payload is enriched once through
-    the full mapInPandas plumbing and the triple joins back to every
-    carrying row — the reference pays per ROW at <=5 rows/s
+    """LLM-cost dedup over documents: ``enrich`` answers each distinct
+    payload once per task, and repartitioning its input on the payload
+    columns puts every copy of a payload in one task, so the entry makes
+    one call per DISTINCT payload with one exchange (no aggregate, no
+    join back).  The reference pays per ROW at <=5 rows/s
     (Main.py:177-189, no memoization), so on a corpus with duplicate
-    articles the gateway is a direct API-cost win.  Readout per
-    source: row count, distinct payloads (the LLM bill), and the
-    sentiment distribution the joined-back triples produce — equality
-    with the per-row oracle proves the fan-out join loses nothing.
-    Payload here is the bare text (empty title), so the dedup unit is
-    the article body — the same unit the dedup family measures."""
+    articles this is a direct API-cost win.  Readout per source: row
+    count, distinct payloads (the LLM bill), and the sentiment
+    distribution the fanned-out answers produce — equality with the
+    per-row oracle proves the fan-out loses nothing.  Payload here is the
+    bare text (empty title), so the dedup unit is the article body — the
+    same unit the dedup family measures."""
     from pyspark.sql import functions as F
 
     docs = cached_scan(spark, f"{sf_dir}/documents.parquet").select(
@@ -194,12 +195,8 @@ def q_enrich_dedup_gateway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("").alias("title"),
         F.col("text").alias("content"),
     )
-    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.enrich import (
-        enrich_deduped,
-    )
-
-    out = enrich_deduped(
-        docs,
+    out = enrich(
+        docs.repartition("title", "content"),
         rate_delay=0.0,
         run_timestamp=_ENRICH_TS,
         transport=_make_deterministic_transport(),
@@ -3135,18 +3132,20 @@ def oracle_sql() -> dict[str, str]:
         ),
         # the engine's prefix-filter blocking is LOSSLESS (any
         # floor((1-t)|A|)+1 of A's shingles include one in B when
-        # containment >= t), so the oracle is the naive all-pairs
-        # definition - matching it row-for-row proves the blocking
+        # containment >= t), so the oracle is the all-pairs definition -
+        # matching it row-for-row proves the blocking.  It runs as an
+        # inverted shingle index: a pair's shared-shingle count is
+        # |A ∩ B| (shingles are distinct per doc), and pairs sharing no
+        # shingle have containment 0, below any threshold
         "dedup_containment": (
             f"WITH toks AS (SELECT doc_id AS id, {_TOKS} AS tk FROM documents), "
             "t AS (SELECT id, list_distinct([array_to_string(tk[i:i+2], ' ') "
             "FOR i IN generate_series(1, greatest(len(tk)-2, 1))]) AS sh FROM toks), "
-            "f AS (SELECT id, sh, len(sh) AS sz FROM t WHERE len(sh) >= 5) "
-            "SELECT a.id AS id_a, b.id AS id_b, "
-            "round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / a.sz, 6) "
-            "AS containment "
-            "FROM f a JOIN f b ON a.id <> b.id "
-            "WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / a.sz >= 0.8"
+            "p AS (SELECT id, len(sh) AS sz, unnest(sh) AS g FROM t WHERE len(sh) >= 5), "
+            "c AS (SELECT a.id AS id_a, b.id AS id_b, a.sz AS sz, count(*) AS k "
+            "FROM p a JOIN p b ON a.g = b.g AND a.id <> b.id GROUP BY ALL) "
+            "SELECT id_a, id_b, round(CAST(k AS DOUBLE) / sz, 6) AS containment "
+            "FROM c WHERE CAST(k AS DOUBLE) / sz >= 0.8"
         ),
         "vocab_build": (
             f"WITH tok AS (SELECT unnest({_TOKS}) AS token FROM documents), "

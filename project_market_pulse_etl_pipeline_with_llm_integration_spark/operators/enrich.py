@@ -5,9 +5,9 @@ article with a 0.2 s sleep (≤5 rows/s ceiling, BASELINE.md).  Here the
 whole stage is ONE ``mapInPandas`` operator: each executor task pulls
 Arrow batches (sized to the reference's BATCH_SIZE=100 via
 ``spark.sql.execution.arrow.maxRecordsPerBatch``), runs the enrichment
-function per row with a lazily-created per-worker client (mirroring the
-lazy global client at ``Main.py:29-32,92-101``) and per-task rate
-limiting, and emits input columns + the three LLM fields together — the
+function with a lazily-created per-worker client (mirroring the lazy
+global client at ``Main.py:29-32,92-101``) and per-task rate limiting,
+and emits input columns + the three LLM fields together — the
 reference's left join (O16, ``Main.py:254``) and concat (O17,
 ``Main.py:255``) disappear from the plan entirely.
 
@@ -15,25 +15,39 @@ Faithful semantics preserved:
   * prompt template (``Main.py:76-83``), gpt-3.5-turbo, temperature=0,
     JSON response mode, single attempt (no retries), ``Main.py:106-111``
   * JSON parse with "N/A" defaults per field (``Main.py:117-119``)
-  * in-band ``ERROR_API`` sentinel on any failure (``Main.py:87,101,124``)
+  * in-band ``ERROR_API`` sentinel on any failure (``Main.py:87,101,124``);
+    ``enrich_to_parquet`` counts those rows and warns when there are any
   * ``DISABLE_LLM`` env -> deterministic offline triple (``Main.py:86-87``)
   * ``summary_llm`` -> ``market_impact_summary`` rename (``Main.py:258``)
   * one driver-side run timestamp stamped on every row — a literal, not
     per-executor ``current_timestamp()`` (``Main.py:259``)
 
+One plan, one call per distinct payload per task: a task answers each
+distinct ``(title, content)`` payload (NULL read as '') once and fans the
+answer out to every row that carries it, in row order.  The memo lives
+for the whole task and is keyed by a 16-byte digest, so no article text
+outlives its batch.  Duplicates in different tasks are called once per
+task; to call once per distinct payload across the whole input, let
+duplicates share a task: ``enrich(df.repartition("title", "content"))``
+(one exchange; NULL and '' hash apart, so coalesce them first if both
+occur).  ``enrich_with_cache`` adds the cross-run memo on top.
+
 Scale notes: the calls block on the network, so each task overlaps
 the calls of one Arrow batch on a thread pool of ``LLM_MAX_IN_FLIGHT``
-threads (output keeps row order); call concurrency comes from in-flight
-requests, not from how many files the input happens to have.  The rate
-budget is unchanged: concurrent task rates ADD, so each of N tasks
-sleeps ``N * rate_delay`` per row after each batch, and the sum stays at
-the reference's single-thread ``1/rate_delay`` rows/s budget.  Transport
-is injectable (``set_transport``) so tests never touch the network.
+threads; call concurrency comes from in-flight requests, not from how
+many files the input happens to have.  The rate budget meters answered
+payloads, not rows (a memo hit costs no call): concurrent task rates
+ADD, so each of N task slots sleeps ``N * rate_delay`` per payload it
+answered after each batch, and the sum stays at the reference's
+single-thread ``1/rate_delay`` calls/s budget.  Transport is injectable
+(``set_transport``) so tests never touch the network.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import logging
 import os
 import threading
 import time
@@ -43,7 +57,7 @@ from datetime import datetime
 from functools import partial
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,6 +81,7 @@ from project_market_pulse_etl_pipeline_with_llm_integration_spark.sources.writer
 Transport = Callable[[str], str]
 _transport: Transport | None = None
 _client_lock = threading.Lock()
+_log = logging.getLogger(__name__)
 
 
 def set_transport(fn: Transport | None) -> None:
@@ -130,7 +145,7 @@ def enrich_one(
 
     Reference ``enriquecer_con_llm_ajustado`` (``Main.py:53-124``):
     single attempt, errors folded into in-band sentinels.  A NULL title
-    or content renders as '' in the prompt, as in the dedup gateway's.
+    or content renders as '' in the prompt, as in the payload keys.
     """
     if disabled if disabled is not None else _llm_disabled():
         return OFFLINE_TRIPLE
@@ -159,31 +174,40 @@ _LLM_FIELDS = [
 ]
 
 
+def _payload_key(title: str | None, content: str | None) -> bytes:
+    """Fixed-size key of a NULL-normalised payload: NULL reads as ''.
+    The title's length prefix keeps ``('ab', 'c')`` and ``('a', 'bc')``
+    apart."""
+    t = "" if title is None else title
+    c = "" if content is None else content
+    return hashlib.blake2b(f"{len(t)}:{t}{c}".encode(), digest_size=16).digest()
+
+
 def enrich(
     df: DataFrame,
     rate_delay: float = 0.2,
     run_timestamp: datetime | None = None,
-    parallelism: int | None = None,
     transport: Transport | None = None,
     disabled: bool | None = None,
 ) -> DataFrame:
     """Append LLM columns + run timestamp to ``df`` (needs title/content).
 
-    ``rate_delay`` is the *global* seconds-per-row budget (reference
-    default 0.2, ``Main.py:188``): the cluster-wide rate must stay at
-    the reference's single-threaded 1/rate_delay rows/s contract.
+    ``rate_delay`` is the *global* seconds-per-call budget (reference
+    default 0.2 s per row, ``Main.py:188``): the cluster-wide rate must
+    stay at the reference's single-threaded 1/rate_delay calls/s contract.
     """
     spark = df.sparkSession
     # the task slots (the cores, see session.py): the budget is split over
     # the tasks that can run at once, not over the partitions
-    tasks = parallelism or spark.sparkContext.defaultParallelism
-    # N concurrent tasks each emitting at 1/(N*rate_delay) rows/s sum to
+    tasks = spark.sparkContext.defaultParallelism
+    # N concurrent tasks each calling at 1/(N*rate_delay) calls/s sum to
     # the global 1/rate_delay contract, so each task sleeps N*rate_delay
-    # per row.  (Dividing instead would compound to N^2/rate_delay.)
-    # When tasks queue rather than run concurrently the aggregate rate
-    # undershoots the budget — the safe direction for an external API;
-    # a shared token bucket would be exact but needs cross-task state.
-    per_task_delay = (rate_delay or 0.0) * max(tasks, 1) if rate_delay else 0.0
+    # per answered payload.  (Dividing instead would compound to
+    # N^2/rate_delay.)  When tasks queue rather than run concurrently the
+    # aggregate rate undershoots the budget — the safe direction for an
+    # external API; a shared token bucket would be exact but needs
+    # cross-task state.
+    per_task_delay = rate_delay * max(tasks, 1) if rate_delay else 0.0
 
     out_schema = T.StructType(list(df.schema.fields) + _LLM_FIELDS)
 
@@ -198,13 +222,20 @@ def enrich(
     one = partial(enrich_one, transport=transport_fn, disabled=disabled)
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # payload key -> answer, for every batch of the task
+        memo: dict[bytes, tuple[str, str, str]] = {}
         # The calls block on the network: overlap up to LLM_MAX_IN_FLIGHT
-        # of them per task.  pool.map keeps row order.
+        # of them per task.  pool.map answers in the payloads' order.
         with ThreadPoolExecutor(max_workers=LLM_MAX_IN_FLIGHT) as pool:
             for pdf in batches:
-                triples = list(pool.map(one, pdf["title"].tolist(), pdf["content"].tolist()))
+                titles, contents = pdf["title"].tolist(), pdf["content"].tolist()
+                keys = [_payload_key(t, c) for t, c in zip(titles, contents)]
+                new = {k: tc for k, tc in zip(keys, zip(titles, contents)) if k not in memo}
+                if new:
+                    memo.update(zip(new, pool.map(one, *zip(*new.values()))))
                 if per_task_delay:
-                    time.sleep(per_task_delay * len(pdf))
+                    time.sleep(per_task_delay * len(new))
+                triples = [memo[k] for k in keys]
                 res = pdf.copy()
                 res["sentiment_llm"] = [x[0] for x in triples]
                 res["category_llm"] = [x[1] for x in triples]
@@ -228,7 +259,11 @@ def enrich_to_parquet(
     rate_delay: float = 0.2,
     single_file: bool = False,
 ) -> str | None:
-    """CLI stage entry (reference ``enrich_data_to_s3``, ``Main.py:188-271``)."""
+    """CLI stage entry (reference ``enrich_data_to_s3``, ``Main.py:188-271``).
+
+    Rows and ``ERROR_API`` rows are counted by an ``Observation`` on the
+    write job itself (no extra action, as ``clean_news_observed``); any
+    error rows are reported in one warning."""
     try:
         df = spark.read.parquet(input_path)
         df = exact_sample(df, sample_size, seed=42)
@@ -237,8 +272,13 @@ def enrich_to_parquet(
         prev = spark.conf.get(_ARROW_BATCH_CONF, None)
         spark.conf.set(_ARROW_BATCH_CONF, str(BATCH_SIZE))
         try:
-            enriched = enrich(df, rate_delay=rate_delay)
-            return write_parquet_timestamped(
+            obs = Observation()
+            enriched = enrich(df, rate_delay=rate_delay).observe(
+                obs,
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count_if(F.col("sentiment_llm") == ERROR_SENTINEL).alias("n_errors"),
+            )
+            path = write_parquet_timestamped(
                 enriched, output_folder, "final_enriched_data", single_file=single_file
             )
         finally:
@@ -246,6 +286,12 @@ def enrich_to_parquet(
                 spark.conf.unset(_ARROW_BATCH_CONF)
             else:
                 spark.conf.set(_ARROW_BATCH_CONF, prev)
+        counts = obs.get
+        if counts["n_errors"]:
+            _log.warning(
+                "enrich: %d of %d rows are ERROR_API", counts["n_errors"], counts["n_rows"]
+            )
+        return path
     except Exception as exc:
         print(f"Error in enrich stage: {exc}")
         return None
@@ -253,8 +299,7 @@ def enrich_to_parquet(
 
 def _payload_digest() -> Column:
     """SHA-256 hex of ``title \\x01 content`` with NULL read as '' — the
-    key of the dedup gateway and of persisted enrichment caches, so its
-    value must never change."""
+    key of persisted enrichment caches, so its value must never change."""
     return F.sha2(
         F.concat_ws(
             "\x01",
@@ -265,143 +310,59 @@ def _payload_digest() -> Column:
     )
 
 
-def dedup_payloads(df: DataFrame) -> DataFrame:
-    """Distinct (title, content) payloads keyed by a SHA-256 digest —
-    the unit of LLM work for the dedup gateway.
-
-    Optimization r13 (guide §5 hash-vs-sort agg): the former
-    digest-keyed ``groupBy(digest).agg(first(title), first(content))``
-    carried STRING agg buffers, demoting the dedup to SortAggregate
-    (sort every payload row twice).  Grouping by the NULL-normalized
-    payload itself keeps strings in the GROUPING KEY (hash-aggregable)
-    and computes the digest once per UNIQUE payload after the dedup
-    instead of once per row.  The coalesce('') normalization is what
-    the digest already applied, so the digest↔payload mapping is
-    unchanged and exactly one row per digest survives — it also makes
-    the representative deterministic (the old first() could pick a
-    NULL or '' title arbitrarily, which feed different prompts)."""
-    return (
-        df.select(
-            F.coalesce(F.col("title"), F.lit("")).alias("title"),
-            F.coalesce(F.col("content"), F.lit("")).alias("content"),
-        )
-        .distinct()
-        .select(
-            _payload_digest().alias("_payload_digest"),
-            "title", "content",
-        )
-    )
-
-
-def enrich_deduped(
-    df: DataFrame,
-    rate_delay: float = 0.2,
-    run_timestamp: datetime | None = None,
-    parallelism: int | None = None,
-    transport: Transport | None = None,
-    disabled: bool | None = None,
-) -> DataFrame:
-    """LLM-cost dedup gateway: enrich each DISTINCT (title, content)
-    payload exactly once and join the triple back to every carrying
-    row — output row-for-row equal to ``enrich(df)`` whenever the
-    transport is a pure function of the prompt (pinned by test), at
-    one LLM call per unique payload instead of one per row.
-
-    NULL title or content reads as '' on both paths (the digest key and
-    ``enrich_one``'s prompt), so NULL payloads are row-for-row equal too.
-
-    The reference pays per ROW (Main.py:177-189 iterates the frame at
-    <=5 rows/s with no memoization); on a corpus with duplicate
-    articles — exactly what the dedup family measures — the gateway is
-    a direct API-cost and wall-clock win, and the rate limiter's
-    global budget now meters UNIQUE work.
-
-    Plan: one digest-keyed distinct (shuffle carries digest + one
-    payload per key), mapInPandas enrichment over the small distinct
-    side, one digest equi-join back (AQE broadcasts the enriched side
-    when distinct count is small — the common case that makes the
-    gateway worth it).  At 100 TB the alternative full-row enrichment
-    is not a join problem at all but a budget one: calls scale with
-    DISTINCT payloads, not rows."""
-    keyed = df.withColumn("_payload_digest", _payload_digest())
-    uniq = dedup_payloads(df)
-    enriched = enrich(
-        uniq,
-        rate_delay=rate_delay,
-        run_timestamp=run_timestamp,
-        parallelism=parallelism,
-        transport=transport,
-        disabled=disabled,
-    ).select(
-        "_payload_digest", "sentiment_llm", "category_llm",
-        "market_impact_summary", "etl_processing_time",
-    )
-    return keyed.join(enriched, "_payload_digest").select(
-        *df.columns, "sentiment_llm", "category_llm",
-        "market_impact_summary", "etl_processing_time",
-    )
-
-
 def enrich_with_cache(
     df: DataFrame,
     cache: DataFrame | None,
     rate_delay: float = 0.2,
     run_timestamp: datetime | None = None,
-    parallelism: int | None = None,
     transport: Transport | None = None,
     disabled: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Cross-RUN enrichment memoization: payloads whose digest already
+    """Cross-RUN enrichment memoization: rows whose payload digest already
     sits in ``cache`` (digest -> triple, from prior runs) are answered
     from the cache with ZERO transport calls; only cache misses reach
     the LLM.  Returns ``(enriched_df, new_cache)`` where new_cache =
     cache ∪ freshly-enriched triples — write it back after the run and
     the next ingest pays only for never-seen content.
 
-    Completes the memoization story the dedup gateway starts: the
-    gateway collapses duplicates WITHIN a run, the cache collapses
-    them ACROSS runs (a daily news ingest re-sees most of yesterday's
-    wire copy; the reference re-pays per row per run, Main.py:177-189).
-    The zero-calls-on-full-hit contract is pinned by test with a
-    poisoned transport that raises on ANY invocation.
+    ``enrich``'s per-task memo collapses duplicates WITHIN a run; the
+    misses are repartitioned on the digest so that duplicates share a
+    task and each new payload costs one call.  The cache collapses them
+    ACROSS runs (a daily news ingest re-sees most of yesterday's wire
+    copy; the reference re-pays per row per run, Main.py:177-189).  The
+    zero-calls-on-full-hit contract is pinned by test with a poisoned
+    transport that raises on ANY invocation.
 
     ``etl_processing_time`` is THIS run's stamp on every output row
     (cache hits included) — the column records when the row was
     processed, not when its triple was first computed.
 
-    Plan: digest-keyed distinct, broadcast-or-keyed anti-join against
-    the cache to isolate misses, mapInPandas over misses only, union
-    of hit + fresh triples, one digest equi-join back.  At 100 TB the
-    cache table is itself partitioned by digest — every join here is
-    digest-keyed, so co-partitioning holds end-to-end."""
+    Plan: digest-keyed rows joined to the cache (hits) and anti-joined
+    to it (misses -> ``enrich``).  The enriched misses are pinned once,
+    lazily, because both the output and ``new_cache`` read them."""
     triple_cols = ["sentiment_llm", "category_llm", "market_impact_summary"]
-    spark = df.sparkSession
     if cache is None:
-        cache = spark.createDataFrame(
+        cache = df.sparkSession.createDataFrame(
             [], "_payload_digest string, sentiment_llm string, "
             "category_llm string, market_impact_summary string"
         )
     cache = cache.select("_payload_digest", *triple_cols)
     keyed = df.withColumn("_payload_digest", _payload_digest())
-    uniq = dedup_payloads(df).localCheckpoint(eager=False)  # hits + misses
-    hits = uniq.select("_payload_digest").join(cache, "_payload_digest")
-    misses = uniq.join(
-        cache.select("_payload_digest"), "_payload_digest", "left_anti"
-    )
+    hits = keyed.join(cache, "_payload_digest")
+    misses = keyed.join(cache.select("_payload_digest"), "_payload_digest", "left_anti")
     fresh = enrich(
-        misses,
+        misses.repartition("_payload_digest"),
         rate_delay=rate_delay,
-        run_timestamp=run_timestamp,
-        parallelism=parallelism,
         transport=transport,
         disabled=disabled,
-    ).select("_payload_digest", *triple_cols)
-    triples = hits.unionByName(fresh).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     run_ts = run_timestamp or datetime.now()
     out = (
-        keyed.join(triples, "_payload_digest")
-        .select(*df.columns, *triple_cols)
+        hits.select(*df.columns, *triple_cols)
+        .unionByName(fresh.select(*df.columns, *triple_cols))
         .withColumn("etl_processing_time", F.lit(run_ts))
     )
-    new_cache = cache.unionByName(triples).dropDuplicates(["_payload_digest"])
+    new_cache = cache.unionByName(
+        fresh.select("_payload_digest", *triple_cols)
+    ).dropDuplicates(["_payload_digest"])
     return out, new_cache

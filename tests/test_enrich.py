@@ -80,10 +80,11 @@ def test_unparseable_json_sentinel(spark, news_jsonl, monkeypatch):
 
 
 def test_rate_limiter_global_budget(spark, news_jsonl, monkeypatch):
-    """Concurrent task rates ADD, so the wall-clock floor for N rows is
-    N*rate_delay regardless of parallelism: each of T tasks must sleep
-    T*rate_delay per row (the inverted division would finish T^2x too
-    fast and hammer the real API at T^2/rate_delay rows/s)."""
+    """Concurrent task rates ADD, so the wall-clock floor for N distinct
+    payloads is N*rate_delay regardless of the task slots: each of T
+    slots must sleep T*rate_delay per payload (the inverted division
+    would finish T^2x too fast and hammer the real API at T^2/rate_delay
+    calls/s)."""
     import time
 
     from pyspark.sql import functions as F
@@ -97,9 +98,9 @@ def test_rate_limiter_global_budget(spark, news_jsonl, monkeypatch):
         )
         .repartition(4)
     )
-    rate = 0.08  # global budget: 40 rows * 0.08 s/row = 3.2 s floor
+    rate = 0.08  # global budget: 40 payloads * 0.08 s = 3.2 s floor
     t0 = time.monotonic()
-    n = E.enrich(df, rate_delay=rate, parallelism=4).count()
+    n = E.enrich(df, rate_delay=rate).count()
     elapsed = time.monotonic() - t0
     assert n == 40
     # 20% scheduling slack; the buggy divide-by-tasks math would sleep
@@ -136,48 +137,113 @@ def _make_pure_transport():
     return transport
 
 
-def test_enrich_deduped_equals_enrich(spark):
-    """The dedup gateway is output-identical to plain row-at-a-time
-    enrichment under any pure-function transport, while enriching only
-    DISTINCT payloads (dedup_payloads count pinned: 4 rows -> 2
-    payloads -> 2 LLM units of work)."""
-    rows = [
-        (1, "t1", "same body"),
-        (2, "t1", "same body"),      # exact duplicate payload
-        (3, "t1", "same body"),      # triplicate
-        (4, "t2", "other body"),
-    ]
-    df = spark.createDataFrame(rows, "id long, title string, content string")
-    assert E.dedup_payloads(df).count() == 2
-    ts = datetime(2024, 1, 1)
-    kw = dict(rate_delay=0.0, run_timestamp=ts,
-              transport=_make_pure_transport(), disabled=False)
-    got = sorted(tuple(sorted(r.asDict().items())) for r in
-                 E.enrich_deduped(df, **kw).collect())
-    want = sorted(tuple(sorted(r.asDict().items())) for r in
-                  E.enrich(df, **kw).collect())
-    assert got == want and len(got) == 4
-    # duplicates carry IDENTICAL triples (one call's answer, fanned out)
-    by_id = {dict(t)["id"]: dict(t) for t in got}
-    assert by_id[1]["market_impact_summary"] == by_id[3]["market_impact_summary"]
+def _make_counting_transport():
+    # each reply's summary carries how often the task has sent its
+    # prompt, as the registry's flaky transport does; the function is
+    # unpickled once per task, so the counts are per task
+    def transport(prompt: str) -> str:
+        import json as _json
+
+        calls: dict = transport.__dict__.setdefault("calls", {})
+        k = calls[prompt] = calls.get(prompt, 0) + 1
+        return _json.dumps(
+            {"sentiment": ["Positive", "Negative", "Neutral"][len(prompt) % 3],
+             "category": "TECH", "summary": f"call {k} len {len(prompt)}"}
+        )
+
+    return transport
 
 
-def test_enrich_deduped_null_payloads(spark):
-    """NULL title/content coalesce into the digest key instead of
-    vanishing: two all-NULL payload rows share one enrichment, and both
-    paths prompt with '' for NULL, so the gateway stays row-for-row equal
-    to ``enrich(df)`` under a pure transport."""
-    rows = [(1, None, None), (2, None, None), (3, "t", "c"), (4, None, "c")]
-    df = spark.createDataFrame(rows, "id long, title string, content string")
-    assert E.dedup_payloads(df).count() == 3
-    kw = dict(rate_delay=0.0, run_timestamp=datetime(2024, 1, 1),
-              transport=_make_pure_transport(), disabled=False)
-    # keyed by id: NULL fields do not order against strings
-    got = sorted((r.asDict() for r in E.enrich_deduped(df, **kw).collect()),
-                 key=lambda r: r["id"])
-    want = sorted((r.asDict() for r in E.enrich(df, **kw).collect()),
-                  key=lambda r: r["id"])
-    assert got == want and len(got) == 4
+_DUP_ROWS = [
+    (1, "t1", "same body"),
+    (2, "t1", "same body"),      # exact duplicate payload
+    (3, "t2", "other body"),
+    (4, "t1", "same body"),      # a third copy, after another payload
+    (5, None, "c"),
+    (6, "", "c"),                # NULL reads as '': the same prompt as row 5
+    (7, None, None),
+    (8, "", ""),
+]
+
+
+def _dup_frame(spark):
+    return spark.createDataFrame(
+        _DUP_ROWS, "id long, title string, content string"
+    ).coalesce(1)
+
+
+def test_enrich_calls_each_payload_once_per_task(spark):
+    """One task holding duplicates and NULL/'' payloads sends each
+    distinct payload once: every row's answer comes from the prompt's
+    first call, and rows keep their input order."""
+    out = E.enrich(
+        _dup_frame(spark), rate_delay=0.0,
+        transport=_make_counting_transport(), disabled=False,
+    ).collect()
+    assert [r.id for r in out] == [r[0] for r in _DUP_ROWS]
+    assert all(r.market_impact_summary.startswith("call 1 ") for r in out)
+
+
+def test_enrich_fans_out_the_pure_transport_answer(spark):
+    """Each row, duplicate or not, carries exactly the answer the pure
+    transport gives for its own prompt."""
+    pure = _make_pure_transport()
+    out = E.enrich(
+        _dup_frame(spark), rate_delay=0.0, transport=pure, disabled=False
+    ).collect()
+    assert len(out) == len(_DUP_ROWS)
+    for r in out:
+        want = json.loads(pure(E.build_prompt(r.title or "", r.content or "")))
+        assert (r.sentiment_llm, r.category_llm, r.market_impact_summary) == (
+            want["sentiment"], want["category"], want["summary"]
+        )
+
+
+def test_rate_limiter_meters_answered_payloads(spark, monkeypatch):
+    """A memo hit costs no call and so no budget: one task holding 40
+    copies of one payload sleeps for one payload, not for every row."""
+    import time
+
+    monkeypatch.setenv("DISABLE_LLM", "1")
+    df = spark.createDataFrame(
+        [(i, "t", "c") for i in range(40)], "id long, title string, content string"
+    ).coalesce(1)
+    per_payload = 0.2  # each task slot's sleep per answered payload
+    rate = per_payload / spark.sparkContext.defaultParallelism
+    t0 = time.monotonic()
+    assert E.enrich(df, rate_delay=rate).count() == 40
+    elapsed = time.monotonic() - t0
+    # per-row metering would sleep 40 * per_payload
+    assert per_payload * 0.8 <= elapsed < 40 * per_payload / 2
+
+
+def _make_failing_transport():
+    def transport(prompt: str) -> str:
+        raise RuntimeError("api down")
+
+    return transport
+
+
+@pytest.mark.parametrize("failing", [True, False])
+def test_enrich_to_parquet_warns_with_error_counts(spark, news_jsonl, tmp_path,
+                                                   monkeypatch, caplog, failing):
+    """Every ERROR_API row is counted on the write job and reported in
+    one warning naming both counts; a run without errors stays silent."""
+    import logging
+
+    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.clean import (
+        extract_and_clean,
+    )
+
+    monkeypatch.delenv("DISABLE_LLM", raising=False)
+    clean_path = extract_and_clean(spark, news_jsonl, str(tmp_path / "clean"))
+    E.set_transport(_make_failing_transport() if failing else _make_pure_transport())
+    with caplog.at_level(logging.WARNING, logger=E.__name__):
+        out = E.enrich_to_parquet(spark, clean_path, str(tmp_path / "enr"), rate_delay=0.0)
+    assert out is not None
+    n = spark.read.parquet(out).count()
+    warned = [r.getMessage() for r in caplog.records if r.name == E.__name__]
+    assert warned == ([f"enrich: {n} of {n} rows are ERROR_API"] if failing else [])
 
 
 def _make_poison_transport():
